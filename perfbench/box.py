@@ -7,6 +7,7 @@ under its own work directory inside the checkout.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -14,9 +15,8 @@ import threading
 import time
 from pathlib import Path
 
-# Fixed driver heap, below the RAM of a 16 GB box.  The heap is committed
-# and touched up front, so process memory does not follow the collector's
-# heap-sizing decisions from run to run.
+# Fixed driver heap limit, below the RAM of a 16 GB box (the session's
+# default of 16g is not).
 DRIVER_MEM = "2g"
 
 
@@ -50,7 +50,7 @@ def pin(root: Path, work: Path) -> dict[str, str]:
         # no JVM, the spark-submit launcher's included, writes /tmp/hsperfdata_*
         "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData",
         "PYSPARK_SUBMIT_ARGS": (
-            f"--driver-java-options '-Djava.io.tmpdir={work / 'jtmp'} -Xms{DRIVER_MEM} -XX:+AlwaysPreTouch' "
+            f"--driver-java-options '-Djava.io.tmpdir={work / 'jtmp'}' "
             "--conf spark.ui.showConsoleProgress=false "
             f"--conf spark.sql.warehouse.dir={work / 'warehouse'} pyspark-shell"
         ),
@@ -98,6 +98,25 @@ def calibration_ms() -> float:
     for i in range(2_000_000):
         acc += i * i % 7
     return (time.perf_counter() - t) * 1000.0
+
+
+def jvm_live_heap_mb(spark) -> float:
+    """JVM heap in use right after a full collection: the heap the program
+    keeps reachable.  Unlike the committed heap, whose size follows the
+    collector's sizing decisions, it repeats from run to run.  Call it
+    only outside the timed phase."""
+    # first release the JVM objects that only Python garbage cycles
+    # still hold (py4j proxies of DataFrames and query results)
+    gc.collect()
+    bean = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    # Spark frees part of its data asynchronously, after a collection has
+    # found the objects that own it unreachable; collect again once it
+    # has.  With one collection stream_events read 130-200 MB, depending
+    # on that timing; with two, 95 MB on every run.
+    bean.gc()
+    time.sleep(1.0)
+    bean.gc()
+    return bean.getHeapMemoryUsage().getUsed() / (1 << 20)
 
 
 def _tree(root_pid: int) -> list[int]:

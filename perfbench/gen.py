@@ -24,7 +24,6 @@ class Graph:
     n: int
     src: np.ndarray
     dst: np.ndarray
-    weight: np.ndarray  # integer edge weights (sssp)
     grp: np.ndarray  # int64 vertex property
     score: np.ndarray  # float64 vertex property
     offsets: np.ndarray  # CSR offsets over out-edges sorted by (src, dst)
@@ -52,12 +51,11 @@ def power_law_graph(seed: int, n_vertices: int, n_edges: int, skew: float) -> Gr
     rng = np.random.default_rng([seed, n_vertices, n_edges])
     src = _power_law_draw(rng, n_vertices, n_edges, skew).astype(np.int64)
     dst = rng.integers(0, n_vertices, n_edges, dtype=np.int64)
-    weight = rng.integers(1, 10, n_edges, dtype=np.int64)
     grp = rng.integers(0, 32, n_vertices, dtype=np.int64)
     score = np.round(rng.random(n_vertices) * 100.0, 3)
     order = np.lexsort((dst, src))
     offsets = np.searchsorted(src[order], np.arange(n_vertices + 1)).astype(np.int64)
-    return Graph(n_vertices, src, dst, weight, grp, score, offsets, dst[order])
+    return Graph(n_vertices, src, dst, grp, score, offsets, dst[order])
 
 
 def skewed_keys(seed: int, n: int, size: int, skew: float) -> np.ndarray:
@@ -96,91 +94,6 @@ def bfs_depths(g: Graph, source: int, max_depth: int) -> np.ndarray:
         in_frontier[:] = False
         in_frontier[nxt] = True
     return depth
-
-
-def bfs_levels_truth(g: Graph, source: int, max_depth: int) -> list[tuple[int, int]]:
-    depth = bfs_depths(g, source, max_depth)
-    counts = np.bincount(depth[depth >= 0], minlength=1)
-    return [(d, int(c)) for d, c in enumerate(counts) if c > 0]
-
-
-def pagerank_truth(g: Graph, n_iters: int, damping: float = 0.85) -> np.ndarray:
-    """The fixed-iteration, no-dangling-redistribution PageRank of
-    ``operators.graph.pagerank`` (each iteration rounds to 12 places)."""
-    od = np.bincount(g.src, minlength=g.n).astype(np.float64)
-    r = np.full(g.n, 1.0 / g.n)
-    for _ in range(n_iters):
-        contrib = np.bincount(g.dst, weights=r[g.src] / od[g.src], minlength=g.n)
-        r = np.round(0.15 / g.n + damping * contrib, 12)
-    return r
-
-
-def sssp_truth(g: Graph, source: int, n_iters: int) -> dict[int, int]:
-    """Synchronous Bellman-Ford over ``n_iters`` rounds → {vertex: dist}."""
-    inf = np.iinfo(np.int64).max // 4
-    dist = np.full(g.n, inf, dtype=np.int64)
-    dist[source] = 0
-    for _ in range(n_iters):
-        cand = dist[g.src] + g.weight
-        new = dist.copy()
-        np.minimum.at(new, g.dst, np.where(dist[g.src] < inf, cand, inf))
-        dist = new
-    reached = np.nonzero(dist < inf)[0]
-    return {int(v): int(dist[v]) for v in reached}
-
-
-def simple_undirected(g: Graph) -> np.ndarray:
-    """Distinct (min, max) pairs of the loop-free edges, shape (m, 2)."""
-    keep = g.src != g.dst
-    a = np.minimum(g.src[keep], g.dst[keep])
-    b = np.maximum(g.src[keep], g.dst[keep])
-    return np.unique(np.stack([a, b], axis=1), axis=0)
-
-
-def _undirected_degrees(pairs: np.ndarray, n: int) -> np.ndarray:
-    return np.bincount(pairs.ravel(), minlength=n)
-
-
-def kcore_truth(g: Graph, k: int, n_iters: int) -> dict[int, int]:
-    """Fixed-round peel of ``operators.graph.kcore`` → {vertex: degree}."""
-    e = simple_undirected(g)
-    for _ in range(n_iters):
-        alive = _undirected_degrees(e, g.n) >= k
-        e = e[alive[e[:, 0]] & alive[e[:, 1]]]
-    deg = _undirected_degrees(e, g.n)
-    return {int(v): int(deg[v]) for v in np.nonzero(deg)[0]}
-
-
-def label_propagation_truth(g: Graph, n_iters: int) -> dict[int, int]:
-    """Synchronous most-frequent-neighbor-label rounds, ties to the
-    smallest label (``operators.graph.label_propagation``)."""
-    e = simple_undirected(g)
-    nbr = pd.DataFrame(
-        {"v": np.concatenate([e[:, 0], e[:, 1]]), "u": np.concatenate([e[:, 1], e[:, 0]])}
-    )
-    labels = pd.Series(np.unique(e), index=np.unique(e))
-    for _ in range(n_iters):
-        c = nbr.assign(lab=labels.reindex(nbr["u"]).to_numpy())
-        c = c.groupby(["v", "lab"], sort=False).size().reset_index(name="c")
-        c = c.sort_values(["v", "c", "lab"], ascending=[True, False, True])
-        best = c.drop_duplicates("v")
-        labels = pd.Series(best["lab"].to_numpy(), index=best["v"].to_numpy())
-    return {int(v): int(lab) for v, lab in labels.items()}
-
-
-def coloring_errors(g: Graph, colors: dict[int, int], n_colors: int) -> int:
-    """How many ways a returned coloring is wrong: a missing or extra
-    vertex, a color outside [-1, n_colors), or a loop-free edge whose two
-    endpoints share a real color."""
-    e = simple_undirected(g)
-    expected = set(np.unique(e).tolist())
-    bad = len(expected.symmetric_difference(colors))
-    bad += sum(1 for c in colors.values() if not -1 <= c < n_colors)
-    if not bad:
-        ca = np.array([colors[int(v)] for v in e[:, 0]])
-        cb = np.array([colors[int(v)] for v in e[:, 1]])
-        bad += int(((ca == cb) & (ca >= 0)).sum())
-    return bad
 
 
 # --------------------------------------------------------------------- events

@@ -11,7 +11,7 @@ from perfbench import stats
 
 END_TO_END = {
     "setup_s": "s",
-    "peak_pss_mb": "MB",
+    "heap_live_mb": "MB",
     "ops_per_s": "1/s",
     "latency_p50_ms": "ms",
     "latency_p90_ms": "ms",
@@ -19,14 +19,6 @@ END_TO_END = {
 }
 
 POINT_OPS = ("vertex", "neighbors", "sql_neighbors", "two_hop", "path_exist")
-ITERATIVE_OPS = (
-    "pagerank",
-    "sssp",
-    "kcore",
-    "label_propagation",
-    "bfs_levels",
-    "greedy_coloring",
-)
 PIPELINES = ("tumbling_window_agg", "stateful_dedup", "stateful_user_totals")
 STREAM_FIELDS = {
     "batch_p50_ms": "ms",
@@ -60,9 +52,6 @@ def _per_layer_units() -> dict[str, str]:
     }
     units.update({f"op.{op}.p50_ms": "ms" for op in POINT_OPS})
     units["op.sql_neighbors.errors"] = "count"
-    for op in ITERATIVE_OPS:
-        units[f"it.{op}.ms"] = "ms"
-        units[f"it.{op}.jobs"] = "count"
     units.update(
         {
             "spark.jobs_per_op": "count",
@@ -75,6 +64,7 @@ def _per_layer_units() -> dict[str, str]:
     for p in PIPELINES:
         units.update({f"stream.{p}.{k}": unit for k, unit in STREAM_FIELDS.items()})
     units["stream.events_per_s"] = "1/s"
+    units["process.peak_pss_mb"] = "MB"
     units["process.jvm_pss_mb"] = "MB"
     units["process.py_pss_mb"] = "MB"
     units["error_rate"] = "ratio"
@@ -85,14 +75,14 @@ def _per_layer_units() -> dict[str, str]:
 PER_LAYER = _per_layer_units()
 
 
-def end_to_end(records: list[dict], setup_s: float, peak_pss_mb: float) -> dict[str, float]:
+def end_to_end(records: list[dict], setup_s: float, heap_live_mb: float) -> dict[str, float]:
     ok = [r["latency_s"] for r in records if r["ok"]] or [r["latency_s"] for r in records]
     per_round: dict[int, float] = {}
     for r in records:
         per_round[r["round"]] = per_round.get(r["round"], 0.0) + r["latency_s"]
     return {
         "setup_s": setup_s,
-        "peak_pss_mb": peak_pss_mb,
+        "heap_live_mb": heap_live_mb,
         # ops issued per second spent inside program calls
         "ops_per_s": len(records) / sum(r["latency_s"] for r in records),
         # percentiles over the ops that returned a correct answer
@@ -109,7 +99,8 @@ def _p50(xs) -> float:
 
 def per_layer(
     records: list[dict],
-    setups: list[dict],
+    setup: dict[str, float],
+    probes: dict[str, int],
     session_s: float,
     pss_mb: dict[str, float],
     stream_batches: dict[str, list[dict]],
@@ -125,18 +116,18 @@ def per_layer(
         ("graphar.load_ms", "load_ms"),
         ("graphar.attach_ms", "attach_ms"),
     ):
-        m[key] = _p50(s.get(field) for s in setups)
+        m[key] = setup.get(field, 0.0)
     m["reader.build_p50_ms"] = _p50(r["build_s"] for r in records) * 1000.0
     by_op: dict[str, list[dict]] = {}
     for r in records:
         by_op.setdefault(r["op"], []).append(r)
     for op in POINT_OPS:
         m[f"op.{op}.p50_ms"] = _p50(r["latency_s"] for r in by_op.get(op, []) if r["ok"]) * 1000.0
-    m["op.sql_neighbors.errors"] = sum(1 for r in by_op.get("sql_neighbors", []) if not r["ok"])
-    for op in ITERATIVE_OPS:
-        rs = by_op.get(op, [])
-        m[f"it.{op}.ms"] = _p50(r["latency_s"] for r in rs) * 1000.0
-        m[f"it.{op}.jobs"] = _p50(r.get("jobs") for r in rs)
+    # timed sql_neighbors ops that failed, plus the untimed probes of
+    # zero-out-degree vertices that raised or answered wrongly
+    m["op.sql_neighbors.errors"] = sum(
+        1 for r in by_op.get("sql_neighbors", []) if not r["ok"]
+    ) + probes.get("sql_neighbors.errors", 0)
 
     rounds: dict[int, list[dict]] = {}
     for r in records:
@@ -164,6 +155,7 @@ def per_layer(
         m[f"stream.{p}.commit_p50_ms"] = _p50(b["commit_ms"] for b in batches)
         m[f"stream.{p}.state_rows"] = _p50(b["state_rows"] for b in batches if b["last"])
         m[f"stream.{p}.shuffle_partitions"] = max((b["shuffle_partitions"] for b in batches), default=0)
+    m["process.peak_pss_mb"] = pss_mb["total"]
     m["process.jvm_pss_mb"] = pss_mb["jvm"]
     m["process.py_pss_mb"] = pss_mb["py"]
     m["error_rate"] = sum(1 for r in records if not r["ok"]) / len(records)

@@ -1,7 +1,7 @@
 """Run one benchmark workload, or repeat runs to measure their spread.
 
-    python3 perfbench/run.py --workload graph_point --seed 1 --seconds 20 --trace 0
-    python3 perfbench/run.py --repeat 10 --workloads graph_point,stream_events --seconds 20
+    python3 perfbench/run.py --workload graph_point --seed 1 --seconds 30 --trace 0
+    python3 perfbench/run.py --repeat 10 --workloads graph_point,stream_events --seconds 30
 
 Run from the root of a checkout: the program is imported from there.
 The last line of a run's standard output is its result, the line before
@@ -19,14 +19,12 @@ import shutil  # noqa: E402
 import sys  # noqa: E402
 from pathlib import Path  # noqa: E402
 
-N_SETUPS = 3  # set-ups per run; set-up time reports their median
-
 
 def parse_args(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload")
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20.0)
+    ap.add_argument("--seconds", type=float, default=30.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--repeat", type=int, default=0, help="runs per workload, seeds 1..N")
     ap.add_argument("--workloads", default="", help="comma list for --repeat")
@@ -36,7 +34,7 @@ def parse_args(argv=None):
 
 
 def measure(args, work: Path, pinned: dict) -> tuple[dict, dict]:
-    from perfbench import box, metrics, stats
+    from perfbench import box, metrics
     from perfbench.workloads import WARMUP_BASE, WORKLOADS, StreamEvents
 
     with box.MemorySampler() as mem:
@@ -54,16 +52,16 @@ def measure(args, work: Path, pinned: dict) -> tuple[dict, dict]:
             if isinstance(wl, StreamEvents):
                 listener_events = spark_counters.stream_listener(spark)
 
-        setups = []
-        for i in range(N_SETUPS):
-            t0 = time.perf_counter()
-            layer = wl.setup(i)
-            layer["total_s"] = time.perf_counter() - t0
-            setups.append(layer)
+        t0 = time.perf_counter()
+        setup = wl.setup()
+        setup["total_s"] = time.perf_counter() - t0
         t0 = time.perf_counter()
         _rounds(wl, WARMUP_BASE, None, wl.warmup_rounds)
         warmup_s = time.perf_counter() - t0
-        setup_s = (session_ready - _T_PROCESS) + stats.median(s["total_s"] for s in setups) + warmup_s
+        # process start to the first timed op (the calibration loop below
+        # is the benchmark's own and is left out)
+        setup_s = time.perf_counter() - _T_PROCESS
+        setup_pss = {k: mem.peak_mb(k) for k in mem.peak}
 
         calib_before = box.calibration_ms()
         cpu_before = box.cpu_times()
@@ -72,18 +70,22 @@ def measure(args, work: Path, pinned: dict) -> tuple[dict, dict]:
         timed_s = time.perf_counter() - t_start
         cpu_after = box.cpu_times()
         calib_after = box.calibration_ms()
-
-        stream_batches = {}
-        if listener_events is not None:
-            stream_batches = _stream_batches(wl, records, listener_events, counters)
-        spark.stop()
-    e2e = metrics.end_to_end(records, setup_s, mem.peak_mb("total"))
+    # the memory sampler covered set-up and the timed phase; what follows
+    # is the benchmark's own
+    live_heap_mb = box.jvm_live_heap_mb(spark)
+    probes = wl.probe()  # untimed; counts known defects
+    stream_batches = {}
+    if listener_events is not None:
+        stream_batches = _stream_batches(wl, records, listener_events, counters)
+    spark.stop()
+    e2e = metrics.end_to_end(records, setup_s, live_heap_mb)
     if args.trace:
         values = metrics.per_layer(
             records,
-            setups,
+            setup,
+            probes,
             session_ready - t_session,
-            {"jvm": mem.peak_mb("jvm"), "py": mem.peak_mb("py")},
+            {k: mem.peak_mb(k) for k in mem.peak},
             stream_batches,
             int(pinned["SPARK_GRAFT_CPUS"]),
             e2e,
@@ -127,7 +129,9 @@ def measure(args, work: Path, pinned: dict) -> tuple[dict, dict]:
         "timed_s": timed_s,
         "rounds": records[-1]["round"] + 1,
         "warmup_s": warmup_s,
-        "setups": setups,
+        "peak_pss_mb": {"setup": setup_pss, "run": {k: mem.peak_mb(k) for k in mem.peak}},
+        "setup": setup,
+        "probes": probes,
         "ops": by_op,
         "end_to_end": e2e,
     }

@@ -48,7 +48,7 @@ def test_end_to_end_aggregates():
         _rec("a", 2, 0.1),
         _rec("b", 2, 0.5),
     ]
-    e2e = metrics.end_to_end(records, setup_s=12.0, peak_pss_mb=900.0)
+    e2e = metrics.end_to_end(records, setup_s=12.0, heap_live_mb=900.0)
     assert set(e2e) == set(metrics.END_TO_END)
     assert e2e["ops_per_s"] == pytest.approx(6 / 1.6)
     # the failed op's latency is excluded from the percentiles
@@ -56,22 +56,24 @@ def test_end_to_end_aggregates():
     assert e2e["latency_p90_ms"] == pytest.approx(np.percentile([0.1, 0.3, 0.2, 0.1, 0.5], 90) * 1000)
     # rounds: 0.4, 0.6, 0.6 -> median 0.6
     assert e2e["pass_s"] == pytest.approx(0.6)
-    assert e2e["setup_s"] == 12.0 and e2e["peak_pss_mb"] == 900.0
+    assert e2e["setup_s"] == 12.0 and e2e["heap_live_mb"] == 900.0
 
 
 def test_per_layer_counts_and_defaults():
     records = [
-        _rec("pagerank", 0, 2.0, jobs=5, tasks=40, run_ms=4000.0, cpu_s=3.0),
-        _rec("sssp", 0, 1.0, jobs=17, tasks=60, run_ms=2000.0, cpu_s=1.5),
+        _rec("two_hop", 0, 2.0, jobs=5, tasks=40, run_ms=4000.0, cpu_s=3.0),
+        _rec("path_exist", 0, 1.0, jobs=17, tasks=60, run_ms=2000.0, cpu_s=1.5),
         _rec("sql_neighbors", 0, 0.5, ok=False),
     ]
     e2e = metrics.end_to_end(records, 1.0, 1.0)
-    m = metrics.per_layer(records, [{"write_s": 2.0}], 5.0, {"jvm": 1.0, "py": 2.0}, {}, 4, e2e)
+    probes = {"sql_neighbors.errors": 3, "sql_neighbors.probes": 3}
+    m = metrics.per_layer(records, {"write_s": 2.0}, probes, 5.0, {"total": 3.0, "jvm": 1.0, "py": 2.0}, {}, 4, e2e)
     assert set(m) == set(metrics.PER_LAYER)
-    assert m["it.pagerank.jobs"] == 5 and m["it.sssp.jobs"] == 17
     assert m["spark.jobs_per_pass"] == 22 and m["spark.tasks_per_pass"] == 100
+    assert m["spark.jobs_per_op"] == pytest.approx(22 / 3)
     assert m["spark.busy_share"] == pytest.approx(6000.0 / (3500.0 * 4))
-    assert m["op.sql_neighbors.errors"] == 1
+    # the failed timed op and the three failed probes
+    assert m["op.sql_neighbors.errors"] == 4
     assert m["error_rate"] == pytest.approx(1 / 3)
     assert m["graphar.write_s"] == 2.0
     # a layer this run did not exercise reads 0
