@@ -10,6 +10,7 @@ from __future__ import annotations
 import gc
 import json
 import os
+import signal
 import sys
 import threading
 import time
@@ -190,6 +191,65 @@ class MemorySampler:
 
     def peak_mb(self, key: str) -> float:
         return self.peak[key] / (1 << 20)
+
+
+def become_subreaper() -> None:
+    """Have orphaned descendants re-parented to this process, not to init:
+    a Python worker whose JVM parent exits first stays in this process's
+    tree, so ``stop_descendants`` still finds it and waits for it."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def _reap() -> None:
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_descendants(grace_s: float = 30.0) -> None:
+    """End the JVM and every other process this run started, and wait until
+    each has ended.  The JVM exits by itself once its standard input
+    closes; whatever is still running after ``grace_s`` gets SIGTERM, and
+    SIGKILL 5 s later."""
+    if "pyspark" in sys.modules:
+        from pyspark import SparkContext
+
+        gateway = SparkContext._gateway
+        if gateway is not None:
+            try:
+                gateway.shutdown()
+            except Exception:
+                pass
+            proc = getattr(gateway, "proc", None)
+            if proc is not None and proc.stdin is not None:
+                try:
+                    proc.stdin.close()
+                except OSError:
+                    pass
+    me = os.getpid()
+    deadline = time.monotonic() + grace_s
+    sig = None
+    while True:
+        _reap()
+        pids = [p for p in _tree(me) if p != me]
+        if not pids:
+            return
+        if time.monotonic() > deadline:
+            sig = signal.SIGKILL if sig is not None else signal.SIGTERM
+            for pid in pids:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+            deadline = time.monotonic() + 5.0
+        time.sleep(0.05)
 
 
 def context_line(**fields) -> str:

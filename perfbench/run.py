@@ -208,6 +208,9 @@ def run_once(args, root: Path) -> int:
     try:
         result, context = measure(args, work, pinned)
     finally:
+        # on every path out: no process of this run outlives it, and none
+        # still writes to the work directory when it is removed
+        box.stop_descendants()
         shutil.rmtree(work, ignore_errors=True)
         try:
             work.parent.rmdir()  # only when no other run is using it
@@ -224,6 +227,9 @@ def main(argv=None) -> int:
     # import the benchmark as a package of the checkout, never its modules bare
     sys.path[:] = [str(root)] + [p for p in sys.path if Path(p or ".").resolve() != here]
     args = parse_args(argv)
+    from perfbench import box
+
+    box.become_subreaper()
     if args.repeat:
         from perfbench import repeat
 

@@ -230,14 +230,10 @@ class StreamEvents(Workload):
         t0 = time.perf_counter()
         jvm = gen.event_files(self.seed, self.n_files, self.events_per_file, self.jitter_s)
         py = gen.event_files(self.seed + 1, self.n_files, self.python_events_per_file, self.jitter_s)
-        # warm-up drives replay one small file: enough to start each
-        # pipeline's query machinery and workers once
-        warm = gen.event_files(self.seed + 2, 1, self.python_events_per_file, self.jitter_s)
         root = self.work / "events"
         self._stage(root / "jvm", jvm)
         self._stage(root / "py", py)
-        self._stage(root / "warm", warm)
-        self.dirs = {"jvm": root / "jvm", "py": root / "py", "warm": root / "warm"}
+        self.dirs = {"jvm": root / "jvm", "py": root / "py"}
         jvm_all, py_all = pd.concat(jvm, ignore_index=True), pd.concat(py, ignore_index=True)
         self.n_events = {"jvm": len(jvm_all), "py": len(py_all)}
         self.truth = {
@@ -268,13 +264,12 @@ class StreamEvents(Workload):
     def query_name(self, op: str, i: int) -> str:
         return f"{op}_{i}"
 
-    def _source(self, op: str, i: int) -> str:
-        if i >= WARMUP_BASE:
-            return "warm"
-        return "py" if op == "stateful_user_totals" else "jvm"
-
     def call(self, op: str, i: int):
-        return self._drive(op, self._source(op, i), self.query_name(op, i)), None
+        # the warm-up drives replay the timed files: a warm-up on smaller
+        # files left each pipeline's first timed drive about 30% slower
+        # than the rest
+        source = "py" if op == "stateful_user_totals" else "jvm"
+        return self._drive(op, source, self.query_name(op, i)), None
 
     def events(self, op: str) -> int:
         return self.n_events["py" if op == "stateful_user_totals" else "jvm"]
@@ -282,8 +277,6 @@ class StreamEvents(Workload):
     def check(self, op: str, i: int, result) -> bool:
         got = result.toPandas()
         self.spark.catalog.dropTempView(self.query_name(op, i))
-        if i >= WARMUP_BASE:
-            return True
         want = self.truth[op]
         if op == "stateful_dedup":
             ids = got["event_id"].to_numpy()
