@@ -87,10 +87,16 @@ def _read_group(path: str, file_type: str, fields: list[Property]):
     return _arrow_read_table(path, file_type, fields)
 
 
-def _read_partition(p: _ChunkPartition, index_cols: list[str]) -> Iterator:
-    """Zip the aligned group chunks into Arrow batches with index columns."""
+def _read_partition(p: _ChunkPartition | None, index_cols: list[str]) -> Iterator:
+    """Zip the aligned group chunks into Arrow batches with index columns.
+
+    `p` is None when `partitions()` planned none (a point lookup on a
+    vertex with no edges): PySpark then reads one `None` partition, which
+    holds no rows."""
     import pyarrow as pa
 
+    if p is None:
+        return
     tables = [_read_group(path, ft, fields) for path, ft, fields in p.groups]
     n = tables[0].num_rows
     lo = p.lo if p.lo is not None else 0

@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 import re
 import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import yaml
@@ -149,14 +150,52 @@ OFFSET_COL = "_graphArOffset"
 
 _CHUNK_RE = re.compile(r"chunk(\d+)$")
 
-# GraphInfo.load cache: abs path -> ([(yml path, stat token), ...],
-# parsed GraphInfo) — the token list covers the TOP yaml AND every
-# vertex/edge sub-yaml it pulled in, so an in-place edit of a sub-yaml
-# alone (a foreign writer, a manual tweak) still invalidates the entry.
-# Bounded (32) FIFO; every hit re-stats all files; mutations are
-# lock-guarded (Spark drivers legitimately run concurrent threads).
-_GRAPHINFO_CACHE: dict[str, tuple[list, "GraphInfo"]] = {}
-_METADATA_CACHE_LOCK = threading.Lock()
+
+class StatCache:
+    """Bounded LRU map whose entries stay valid while every file they were
+    built from keeps its `stat_token`.
+
+    ``get(key, build)`` returns the cached value when each ``(path,
+    token)`` stored with it still matches a fresh stat; otherwise it
+    calls ``build() -> (value, [(path, token), ...])`` and caches the
+    result unless some token is None (the filesystem could not answer).
+    Every hit re-stats every file.
+
+    ``build`` must stat each file BEFORE reading it.  Stat-after-read
+    would let a rewrite land between the read and the stat, caching the
+    pre-rewrite value under the post-rewrite token, which every later
+    hit would then match: stale forever.  With stat-before-read a
+    concurrent rewrite leaves a token that no longer matches, costing
+    one extra rebuild.  Mutations are lock-guarded (Spark drivers
+    legitimately plan from several threads); builds run unlocked."""
+
+    def __init__(self, capacity: int):
+        self.capacity = capacity
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key, build):
+        with self._lock:
+            hit = self._entries.get(key)
+        if hit is not None and all(stat_token(p) == t for p, t in hit[0]):
+            with self._lock:
+                if key in self._entries:
+                    self._entries.move_to_end(key)
+            return hit[1]
+        value, tokens = build()
+        if all(t is not None for _, t in tokens):
+            with self._lock:
+                self._entries[key] = (tokens, value)
+                self._entries.move_to_end(key)
+                while len(self._entries) > self.capacity:
+                    self._entries.popitem(last=False)
+        return value
+
+
+# GraphInfo.load cache: abs path -> parsed GraphInfo, validated by the
+# tokens of the TOP yaml AND every vertex/edge sub-yaml it pulled in, so
+# an in-place edit of a sub-yaml alone still invalidates the entry.
+_GRAPHINFO_CACHE = StatCache(32)
 
 
 def spark_type_for(graphar_type: str) -> T.DataType:
@@ -351,39 +390,18 @@ class GraphInfo:
         filesystems; object stores with coarse mtimes get correctness
         from the writer's always-rewrite contract.  A point lookup
         re-planned this yaml tree (3 file reads + parses) on every
-        call; now it's one stat per yaml.
-
-        Token capture ORDER matters: each yaml is stat'ed BEFORE it is
-        read (same discipline as reader._offset_range).  Stat-after-read
-        would let a rewrite land between the read and the stat, caching
-        the pre-rewrite parse under the post-rewrite token — every later
-        load would re-stat, match the fresh token, and serve the stale
-        GraphInfo forever.  With stat-before-read a concurrent rewrite
-        leaves a token that no longer matches on the next load, costing
-        one extra refresh instead of permanent staleness."""
+        call; now it's one stat per yaml.  Each yaml is stat'ed BEFORE
+        it is read (see `StatCache` for why the order is load-bearing)."""
         if "://" not in path:
             path = os.path.abspath(path)
-        with _METADATA_CACHE_LOCK:
-            hit = _GRAPHINFO_CACHE.get(path)
-        if hit is not None and all(
-            stat_token(p) == t for p, t in hit[0]
-        ):
-            return hit[1]
-        gi, tokens = cls._load_uncached(path)
-        if all(t is not None for _, t in tokens):
-            with _METADATA_CACHE_LOCK:
-                if len(_GRAPHINFO_CACHE) >= 32:
-                    _GRAPHINFO_CACHE.pop(next(iter(_GRAPHINFO_CACHE)), None)
-                _GRAPHINFO_CACHE[path] = (tokens, gi)
-        return gi
+        return _GRAPHINFO_CACHE.get(path, lambda: cls._load_uncached(path))
 
     @classmethod
     def _load_uncached(
         cls, path: str
     ) -> tuple["GraphInfo", list[tuple[str, tuple | None]]]:
         """Parse the yaml tree, stat'ing each file BEFORE reading it and
-        returning the pre-read (path, token) list alongside the parse —
-        see GraphInfo.load for why the ordering is load-bearing."""
+        returning the pre-read (path, token) list alongside the parse."""
         tokens: list[tuple[str, tuple | None]] = [(path, stat_token(path))]
         d = yaml.safe_load(_read_text(path))
         base = d.get("prefix") or os.path.dirname(path)

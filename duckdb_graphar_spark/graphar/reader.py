@@ -26,6 +26,27 @@ Design notes (Spark-first, 100 TB-aware):
   O(range/chunk_size) file reads.
 - **Layout selection.** Filtering on dst prefers the `ordered_by_dest`
   (CSC) layout, mirroring `read_edges.cpp:85-91`.
+- **Relation reuse.** Handing a file list to `spark.read.parquet` builds
+  a file index: above `spark.sql.sources.parallelPartitionDiscovery.
+  threshold` (32) paths that is a file-listing Spark job, and below it a
+  round of driver-side status calls.  The reference opens the chunk
+  files it needs in-process on every call; here that would put a
+  listing job in front of every full-edge traversal.  So each chunk-file
+  scan (the relation plus its `__chunk`/`__row` address columns) is built
+  once and kept in `_SCANS` (LRU, 16 entries), and reused while the
+  session, the ordered file list, the schema and every file's
+  `(mtime_ns, size)` stat token all match.
+  Freshness rule: the tokens are taken BEFORE the relation is built and
+  re-checked on every reuse, so a rewritten chunk file (new size or
+  mtime), an added or removed chunk (a different file list) or a file
+  the filesystem cannot stat (token None: never cached) builds a new
+  relation.  A rewrite that keeps a file's size and lands within the
+  filesystem's mtime granularity of the previous write is not seen, the
+  same residual window as `GraphInfo.load`'s cache.  Reuse means two
+  reader calls share the relation's attribute ids, so `read_vertices` /
+  `read_edges` end with an aliasing projection (`_fresh_ids`): each call
+  returns fresh ids, and frames from separate calls can be joined by
+  column reference (`a[dst] == b[src]`) without ambiguity.
 """
 
 from __future__ import annotations
@@ -44,17 +65,20 @@ from duckdb_graphar_spark.graphar.metadata import (
     VERTEX_INDEX_COL,
     EdgeInfo,
     Property,
+    StatCache,
     VertexInfo,
     arrow_type_for,
     chunk_index_of,
     list_chunks,
     list_parts,
+    spark_url,
+    stat_token,
 )
 
 from pyspark.sql import types as T
 
-_CHUNK_NO = r"chunk(\d+)$"
-_PART_NO = r"part(\d+)/[^/]*$"
+_CHUNK_NO = "chunk([0-9]+)$"
+_PART_NO = "part([0-9]+)/[^/]*$"
 
 _ADJ_FIELDS = [Property(SRC_INDEX_COL, "int64"), Property(DST_INDEX_COL, "int64")]
 _OFFSET_FIELDS = [Property(OFFSET_COL, "int64")]
@@ -64,14 +88,28 @@ def _as_graph(graph: GraphInfo | str) -> GraphInfo:
     return graph if isinstance(graph, GraphInfo) else GraphInfo.load(graph)
 
 
-def _with_chunk_cols(df: DataFrame) -> DataFrame:
-    """Attach chunk number and in-chunk row position from file metadata."""
-    return df.withColumns(
-        {
-            "__chunk": F.regexp_extract(F.col("_metadata.file_path"), _CHUNK_NO, 1).cast("long"),
-            "__row": F.col("_metadata.row_index"),
-        }
-    )
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _row_index(chunk_size: int) -> str:
+    """SQL for a row's index across its chunk sequence: the vertex index,
+    or an edge's row within its part.  Reader calls build their frames
+    from SQL strings: each Column object, and each list element handed
+    to the JVM, is a py4j round trip; a reused full-edge build made ~210
+    of them with Column expressions and 8 with strings."""
+    return f"__chunk * {int(chunk_size)} + __row"
+
+
+def _path_no(regex: str) -> str:
+    """SQL for the number `regex` captures from a row's chunk file path."""
+    return f"CAST(regexp_extract(_metadata.file_path, '{regex}', 1) AS BIGINT)"
+
+
+def _fresh_ids(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Project `cols` under new attribute ids: frames from separate reader
+    calls may share one reused relation (module notes: relation reuse)."""
+    return df.selectExpr(*[f"{_q(c)} AS {_q(c)}" for c in cols])
 
 
 def _arrow_read_table(path: str, file_type: str, fields: list[Property]):
@@ -103,6 +141,41 @@ def _arrow_read_table(path: str, file_type: str, fields: list[Property]):
     return tbl.select([p.name for p in fields]).cast(target)
 
 
+# (session, file urls, fields, with_part) -> the chunk-file scan built
+# over those files.  Each entry pins ~0.15 MB of live JVM heap (60
+# one-file scans measured +9.6 MB), so the bound is small: full scans,
+# reused by every traversal, stay resident under LRU, while point
+# lookups spread over many chunks churn through
+_SCANS = StatCache(16)
+
+
+def _parquet_scan(
+    spark, files: list[str], fields: list[Property], with_part: bool
+) -> DataFrame:
+    """`_chunked_df` for Parquet chunk files, reused while the files' stat
+    tokens hold (module notes: relation reuse)."""
+    urls = tuple(spark_url(f) for f in files)
+
+    def build():
+        tokens = [(f, stat_token(f)) for f in files]
+        # schema comes from the GraphAr metadata, not footer inference:
+        # .schema(...) skips the planning-time footer read; parquet
+        # columns resolve by name, and the hidden _metadata struct is
+        # still available under an explicit schema
+        sch = T.StructType([T.StructField(p.name, p.spark_type, True) for p in fields])
+        cols = [
+            *[_q(p.name) for p in fields],
+            f"{_path_no(_CHUNK_NO)} AS __chunk",
+            "_metadata.row_index AS __row",
+        ]
+        if with_part:
+            cols.append(f"{_path_no(_PART_NO)} AS __part")
+        return spark.read.schema(sch).parquet(*urls).selectExpr(*cols), tokens
+
+    key = (spark, urls, tuple((p.name, p.data_type) for p in fields), with_part)
+    return _SCANS.get(key, build)
+
+
 def _chunked_df(
     spark, files: list[str], file_type: str, fields: list[Property], *, with_part: bool = False
 ) -> DataFrame:
@@ -115,30 +188,12 @@ def _chunked_df(
     Arrow inside `mapInPandas` — the row position is the enumeration
     order within one file, deterministic under any task scheduling, and
     memory is bounded by chunk_size rows per file."""
-    extra = ["__chunk", "__row"] + (["__part"] if with_part else [])
     if file_type == "parquet":
-        from duckdb_graphar_spark.graphar.metadata import spark_url
-
-        # schema comes from the GraphAr metadata, not footer inference:
-        # .schema(...) skips the planning-time footer read (~80 ms per
-        # reader on a point lookup — most of the old sub-100 ms-query
-        # floor); parquet columns resolve by name, and the hidden
-        # _metadata struct is still available under an explicit schema
-        sch = T.StructType(
-            [T.StructField(p.name, p.spark_type, True) for p in fields]
-        )
-        df = _with_chunk_cols(
-            spark.read.schema(sch).parquet(*[spark_url(f) for f in files])
-        )
-        if with_part:
-            df = df.withColumn(
-                "__part",
-                F.regexp_extract(F.col("_metadata.file_path"), _PART_NO, 1).cast("long"),
-            )
-        return df.select(*[p.name for p in fields], *extra)
+        return _parquet_scan(spark, files, fields, with_part)
 
     import re as _re
 
+    extra = ["__chunk", "__row"] + (["__part"] if with_part else [])
     out_schema = T.StructType(
         [T.StructField(p.name, p.spark_type, True) for p in fields]
         + [T.StructField(c, T.LongType(), False) for c in extra]
@@ -201,70 +256,53 @@ def read_vertices(
             target = vid // vi.chunk_size
             files = [f for f in files if f.endswith(f"chunk{target}")]
         pdf = _chunked_df(spark, files, pg.file_type, pg.properties)
-        pdf = pdf.select(
-            (F.col("__chunk") * F.lit(vi.chunk_size) + F.col("__row")).alias(VERTEX_INDEX_COL),
-            *[p.name for p in pg.properties],
+        pdf = pdf.selectExpr(
+            f"{_row_index(vi.chunk_size)} AS {VERTEX_INDEX_COL}",
+            *[_q(p.name) for p in pg.properties],
         )
         if vid is not None:
-            pdf = pdf.filter(F.col(VERTEX_INDEX_COL) == vid)
+            pdf = pdf.filter(f"{VERTEX_INDEX_COL} = {int(vid)}")
         result = pdf if result is None else result.join(pdf, VERTEX_INDEX_COL)
 
     if result is None:
         # no property groups requested → index-only frame from metadata
         result = spark.range(n).select(F.col("id").alias(VERTEX_INDEX_COL))
         if vid is not None:
-            result = result.filter(F.col(VERTEX_INDEX_COL) == vid)
+            result = result.filter(f"{VERTEX_INDEX_COL} = {int(vid)}")
 
     order = [VERTEX_INDEX_COL] + [
         p.name for pg in groups for p in pg.properties
         if columns is None or p.name in columns
     ]
-    return result.select(*order)
+    return _fresh_ids(result, order)
 
 
-# offset-chunk cache: path -> (stat token, numpy offsets array); the
-# array is one vertex-chunk of int64s (bounded), FIFO-capped at 16;
-# mutations lock-guarded (concurrent driver threads both planning
-# point lookups must not race the eviction)
-import threading as _threading
+# offset chunk path -> its decoded int64 offsets (one vertex chunk each)
+_OFFSET_CACHE = StatCache(16)
 
-_OFFSET_CACHE: dict[str, tuple[tuple, "object"]] = {}
-_OFFSET_CACHE_LOCK = _threading.Lock()
+
+def _read_offsets(path: str, file_type: str):
+    tokens = [(path, stat_token(path))]
+    if file_type == "parquet":
+        tbl = pq.read_table(path)
+    else:
+        tbl = _arrow_read_table(path, file_type, _OFFSET_FIELDS)
+    return tbl.column(OFFSET_COL).to_numpy(), tokens
 
 
 def _offset_range(g: GraphInfo, ei: EdgeInfo, aligned_by: str, vid: int) -> tuple[int, int, int]:
     """Read one offset chunk (driver-side, tiny) → (part, lo, hi) row range
     relative to the part start.  Mirrors `read_edges.cpp:121-151`.
 
-    The decoded offsets array is CACHED per chunk file (stat-validated,
+    The decoded offsets array is cached per chunk file (stat-validated,
     like `GraphInfo.load`'s cache): repeated point lookups on the same
     graph re-seek without re-reading the offset file."""
-    from duckdb_graphar_spark.graphar.metadata import stat_token
-
     chunk_size = ei.src_chunk_size if aligned_by == "src" else ei.dst_chunk_size
     part = vid // chunk_size
     pos = vid % chunk_size
     path = g.offset_chunk_path(ei, aligned_by, part)
-    tok = stat_token(path)
-    if tok is not None:
-        with _OFFSET_CACHE_LOCK:
-            hit = _OFFSET_CACHE.get(path)
-    else:
-        hit = None
-    if hit is not None and hit[0] == tok:
-        offs = hit[1]
-    else:
-        ftype = ei.adj_list(aligned_by).file_type
-        if ftype == "parquet":
-            tbl = pq.read_table(path)
-        else:
-            tbl = _arrow_read_table(path, ftype, _OFFSET_FIELDS)
-        offs = tbl.column(OFFSET_COL).to_numpy()
-        if tok is not None:
-            with _OFFSET_CACHE_LOCK:
-                if len(_OFFSET_CACHE) >= 16:
-                    _OFFSET_CACHE.pop(next(iter(_OFFSET_CACHE)), None)
-                _OFFSET_CACHE[path] = (tok, offs)
+    ftype = ei.adj_list(aligned_by).file_type
+    offs = _OFFSET_CACHE.get(path, lambda: _read_offsets(path, ftype))
     return part, int(offs[pos]), int(offs[pos + 1])
 
 
@@ -303,8 +341,14 @@ def read_edges(
         aligned_by = "src" if ei.has_layout("src") else "dst"
         point = None
 
-    adj_root = os.path.join(g.adj_dir(ei, aligned_by), "adj_list")
-    adj_ftype = ei.adj_list(aligned_by).file_type
+    layout_dir = g.adj_dir(ei, aligned_by)
+    groups = ei.property_groups
+    if columns is not None:
+        wanted = set(columns) - {SRC_INDEX_COL, DST_INDEX_COL}
+        groups = [pg for pg in groups if any(p.name in wanted for p in pg.properties)]
+    erow = _row_index(ei.chunk_size)  # an edge's row within its part
+    # a property group joins the adjacency rows on (__part, __erow)
+    join_cols = {"__erow": F.expr(erow)} if groups else {}
 
     if point is not None:
         n = g.edge_aligned_vertex_count(ei, aligned_by)
@@ -314,53 +358,37 @@ def read_edges(
         if lo >= hi:
             return spark.createDataFrame([], ei.schema())
         first, last = lo // ei.chunk_size, (hi - 1) // ei.chunk_size
-        part_dir = os.path.join(adj_root, f"part{part}")
-        files = [
-            f for f in list_chunks(part_dir)
+        if groups:
+            join_cols["__part"] = F.lit(part)
+
+    def chunk_files(root: str) -> list[str]:
+        if point is None:
+            return [f for p in list_parts(root) for f in list_chunks(os.path.join(root, f"part{p}"))]
+        return [
+            f for f in list_chunks(os.path.join(root, f"part{part}"))
             if first <= int(f.rsplit("chunk", 1)[1]) <= last
         ]
-        df = _chunked_df(spark, files, adj_ftype, _ADJ_FIELDS)
-        df = df.withColumn("__erow", F.col("__chunk") * F.lit(ei.chunk_size) + F.col("__row"))
-        df = df.filter((F.col("__erow") >= lo) & (F.col("__erow") < hi))
-        df = df.withColumn("__part", F.lit(part))
-    else:
-        parts = list_parts(adj_root)
-        files = [f for p in parts for f in list_chunks(os.path.join(adj_root, f"part{p}"))]
-        df = _chunked_df(spark, files, adj_ftype, _ADJ_FIELDS, with_part=True)
-        df = df.withColumn(
-            "__erow", F.col("__chunk") * F.lit(ei.chunk_size) + F.col("__row")
+
+    def scan(root: str, file_type: str, fields: list[Property]) -> DataFrame:
+        return _chunked_df(
+            spark, chunk_files(os.path.join(layout_dir, root)), file_type, fields,
+            with_part=point is None,
         )
+
+    df = scan("adj_list", ei.adj_list(aligned_by).file_type, _ADJ_FIELDS)
+    if point is not None:
+        df = df.filter(f"{erow} >= {lo} AND {erow} < {hi}")
+    if groups:
+        df = df.withColumns(join_cols)
 
     # residual point predicates (the side NOT used for chunk pruning)
     if src_vid is not None and not (point is not None and aligned_by == "src"):
-        df = df.filter(F.col(SRC_INDEX_COL) == src_vid)
+        df = df.filter(f"{SRC_INDEX_COL} = {int(src_vid)}")
     if dst_vid is not None and not (point is not None and aligned_by == "dst"):
-        df = df.filter(F.col(DST_INDEX_COL) == dst_vid)
-
-    groups = ei.property_groups
-    if columns is not None:
-        wanted = set(columns) - {SRC_INDEX_COL, DST_INDEX_COL}
-        groups = [pg for pg in groups if any(p.name in wanted for p in pg.properties)]
+        df = df.filter(f"{DST_INDEX_COL} = {int(dst_vid)}")
 
     for pg in groups:
-        pg_root = os.path.join(g.adj_dir(ei, aligned_by), pg.prefix)
-        if point is not None:
-            pfiles = [
-                f for f in list_chunks(os.path.join(pg_root, f"part{part}"))
-                if first <= int(f.rsplit("chunk", 1)[1]) <= last
-            ]
-            pdf = _chunked_df(spark, pfiles, pg.file_type, pg.properties).withColumns(
-                {
-                    "__erow": F.col("__chunk") * F.lit(ei.chunk_size) + F.col("__row"),
-                    "__part": F.lit(part),
-                }
-            )
-        else:
-            pparts = list_parts(pg_root)
-            pfiles = [f for p in pparts for f in list_chunks(os.path.join(pg_root, f"part{p}"))]
-            pdf = _chunked_df(
-                spark, pfiles, pg.file_type, pg.properties, with_part=True
-            ).withColumn("__erow", F.col("__chunk") * F.lit(ei.chunk_size) + F.col("__row"))
+        pdf = scan(pg.prefix, pg.file_type, pg.properties).withColumns(join_cols)
         pdf = pdf.select("__part", "__erow", *[p.name for p in pg.properties])
         df = df.join(pdf, ["__part", "__erow"])
 
@@ -371,4 +399,4 @@ def read_edges(
     out_cols = [SRC_INDEX_COL, DST_INDEX_COL] + prop_cols
     if columns is not None:
         out_cols = [c for c in out_cols if c in columns or c in (SRC_INDEX_COL, DST_INDEX_COL)]
-    return df.select(*out_cols)
+    return _fresh_ids(df, out_cols)

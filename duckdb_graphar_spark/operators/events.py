@@ -520,12 +520,15 @@ def sessionize_capped(
     # so each partition arrives sorted with users contiguous; the last
     # user of every batch is carried into the next batch so a user
     # split across Arrow batches folds exactly once.
+    # user matches are null-safe: like groupBy().applyInPandas, every
+    # null user_id row belongs to one group (NaN != NaN, and None == None
+    # is False in pandas comparisons)
     def fold_partition(batches):
         def emit(pdf: pd.DataFrame):
             uids = pdf["user_id"].to_numpy()
-            bounds = np.flatnonzero(
-                np.r_[True, uids[1:] != uids[:-1]]
-            )
+            nulls = pdf["user_id"].isna().to_numpy()
+            same = (uids[1:] == uids[:-1]) | (nulls[1:] & nulls[:-1])
+            bounds = np.flatnonzero(np.r_[True, ~same])
             bounds = np.append(bounds, len(uids))
             out = [
                 fold_one(pdf.iloc[int(bounds[i]) : int(bounds[i + 1])])
@@ -541,7 +544,10 @@ def sessionize_capped(
             if len(pdf) == 0:
                 continue
             last_uid = pdf["user_id"].iloc[-1]
-            mask = (pdf["user_id"] == last_uid).to_numpy()
+            if pd.isna(last_uid):
+                mask = pdf["user_id"].isna().to_numpy()
+            else:
+                mask = (pdf["user_id"] == last_uid).to_numpy()
             carry = pdf[mask]
             head = pdf[~mask]
             if len(head):

@@ -850,3 +850,41 @@ def test_kll_merged_path_keeps_collapsed_group(spark):
     n, t, m, est_n = merged["g"][:4]
     assert (n, t, m, est_n) == (6, 1, 0, 0)
     assert all(v is None for v in merged["g"][4:])
+
+
+def test_sessionize_capped_null_user_split_across_batches(spark):
+    """Null user_ids form ONE group, as under groupBy().applyInPandas,
+    even when the null run spans several Arrow batches: one session
+    sequence (ids 0, 1, ...) for the null user, not one per batch or
+    per row."""
+    import datetime as dt
+
+    from duckdb_graphar_spark.operators.events import sessionize_capped
+
+    base = dt.datetime(2024, 1, 1, 0, 0, 0)
+    m = lambda x: base + dt.timedelta(minutes=x)  # noqa: E731
+    # null user: 0..50 every 10 min (one session), gap, 120..140
+    null_min = [*range(0, 51, 10), 120, 130, 140]
+    rows = [(None, m(x), i) for i, x in enumerate(null_min)]
+    rows += [(1, m(0), 100), (1, m(5), 101), (2, m(0), 200)]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp_ntz, event_id long"
+    )
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+        got = sorted(
+            (r.user_id is None, r.user_id or 0, r.session_id,
+             r.session_start, r.session_end, r.n_events)
+            for r in sessionize_capped(
+                df, gap_seconds=1800, max_duration_seconds=86400
+            ).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert got == [
+        (False, 1, 0, m(0), m(5), 2),
+        (False, 2, 0, m(0), m(0), 1),
+        (True, 0, 0, m(0), m(50), 6),
+        (True, 0, 1, m(120), m(140), 3),
+    ]

@@ -432,3 +432,110 @@ def test_graphinfo_cache_stats_before_read(tmp_path, monkeypatch):
     assert g2 is not g1, (
         "mid-load rewrite was cached as fresh - token captured after read"
     )
+
+
+def _small_graph(out_dir, src, dst, *, n, names=None, src_chunk_size=1024):
+    from duckdb_graphar_spark.graphar.writer import EdgeSpec, VertexSpec, write_graph
+
+    names = names or [f"v{i}" for i in range(n)]
+    return write_graph(
+        str(out_dir), "Small",
+        {"Person": VertexSpec(table=pa.table({"name": names}), chunk_size=src_chunk_size)},
+        {("Person", "knows", "Person"): EdgeSpec(
+            src=np.asarray(src, np.int64), dst=np.asarray(dst, np.int64),
+            src_chunk_size=src_chunk_size, dst_chunk_size=src_chunk_size,
+        )},
+    )
+
+
+def test_zero_out_degree_point_lookup_is_empty(spark, tmp_path):
+    """A point lookup on a vertex with no out-edges plans no partition;
+    PySpark then reads one `None` partition, which must yield no rows
+    (through `format("graphar")` and through the attached view)."""
+    from duckdb_graphar_spark.graphar.datasource import register
+
+    y = _small_graph(tmp_path, [0, 1, 1], [1, 2, 0], n=4)
+    register(spark)
+    e = (
+        spark.read.format("graphar").option("path", y)
+        .option("src", "Person").option("edge", "knows").option("dst", "Person")
+        .load()
+    )
+    assert e.filter("_graphArSrcIndex = 3").collect() == []
+    assert e.filter("_graphArDstIndex = 3").collect() == []
+    assert sorted(r[1] for r in e.filter("_graphArSrcIndex = 1").collect()) == [0, 2]
+    graphar.attach(spark, y, naming="underscore")
+    q = "SELECT _graphArDstIndex FROM Person_knows_Person_edge WHERE _graphArSrcIndex = {}"
+    assert spark.sql(q.format(3)).collect() == []
+    assert spark.sql(q.format(2)).collect() == []
+
+
+def test_separately_built_edge_frames_join_by_column_reference(spark, tmp_path):
+    """Two `read_edges` calls on one graph may share one reused Parquet
+    relation; each must still return its own attribute ids, or joining
+    them by column reference is ambiguous."""
+    from collections import Counter
+
+    rng = np.random.default_rng(7)
+    src, dst = rng.integers(0, 40, 150), rng.integers(0, 40, 150)
+    y = _small_graph(tmp_path, src, dst, n=40, src_chunk_size=8)
+    S, D = "_graphArSrcIndex", "_graphArDstIndex"
+    a = graphar.read_edges(spark, y, "Person", "knows", "Person")
+    b = graphar.read_edges(spark, y, "Person", "knows", "Person")
+    got = Counter(
+        (r[0], r[1])
+        for r in a.join(b, a[D] == b[S]).select(a[S], b[D]).collect()
+    )
+    want = Counter(
+        (int(s1), int(d2))
+        for s1, d1 in zip(src, dst)
+        for s2, d2 in zip(src, dst)
+        if d1 == s2
+    )
+    assert got == want and len(want) > 0
+
+
+def test_reader_sees_graph_rewritten_in_place(spark, tmp_path):
+    """Relation reuse is stat-checked: rewriting the graph at the same
+    path with different edges and names shows up on the next read."""
+    y = _small_graph(tmp_path, [0, 1], [1, 2], n=3, names=["a", "b", "c"])
+    e = graphar.read_edges(spark, y, "Person", "knows", "Person")
+    assert sorted(tuple(r) for r in e.collect()) == [(0, 1), (1, 2)]
+    v = graphar.read_vertices(spark, y, "Person")
+    assert [r.name for r in v.orderBy("_graphArVertexIndex").collect()] == ["a", "b", "c"]
+
+    y2 = _small_graph(
+        tmp_path, [0, 2, 2, 1], [2, 0, 1, 0], n=3, names=["xx", "yyy", "zzzz"]
+    )
+    assert y2 == y
+    e = graphar.read_edges(spark, y, "Person", "knows", "Person")
+    assert sorted(tuple(r) for r in e.collect()) == [(0, 2), (1, 0), (2, 0), (2, 1)]
+    v = graphar.read_vertices(spark, y, "Person")
+    assert [r.name for r in v.orderBy("_graphArVertexIndex").collect()] == [
+        "xx", "yyy", "zzzz"
+    ]
+
+
+def test_second_edge_build_runs_no_spark_job(spark, tmp_path):
+    """40 adjacency chunk files exceed Spark's 32-path parallel listing
+    threshold, so the first `read_edges` build runs a file-listing job;
+    a second build of the unchanged graph reuses the relation and runs
+    none; after the chunk files are rewritten the relation is built
+    (and the files listed) again."""
+    n = 80
+    src = np.arange(n)
+    y = _small_graph(tmp_path, src, (src + 1) % n, n=n, src_chunk_size=2)
+    sc = spark.sparkContext
+
+    def jobs_to_build(group):
+        sc.setJobGroup(group, group)
+        try:
+            graphar.read_edges(spark, y, "Person", "knows", "Person")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_to_build("reader-first-build") > 0
+    assert jobs_to_build("reader-second-build") == 0
+    _small_graph(tmp_path, np.repeat(src, 2), np.repeat((src + 2) % n, 2), n=n, src_chunk_size=2)
+    assert jobs_to_build("reader-after-rewrite") > 0
