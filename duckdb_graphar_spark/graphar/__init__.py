@@ -1,12 +1,19 @@
 """GraphAr (Apache GraphAr, `gar/v1`) support for Spark.
 
 Mirrors the capability surface of the reference extension
-(`/root/reference/src/functions/table/read_vertices.cpp`,
+(`src/functions/table/read_vertices.cpp`,
 `read_edges.cpp`, `src/storage/graphar_storage.cpp`) with an
-idiomatic-PySpark design: metadata-driven file listing + Spark's
-vectorized Parquet reader + `_metadata.row_index` based index-column
-reconstruction, and chunk-level file pruning as the equivalent of the
-reference's CSR offset seek.
+idiomatic-PySpark design:
+
+- `metadata`: the YAML model and chunk-file path rules.
+- `reader`: the one read planner (chunk addressing, layout choice, CSR
+  offset seek, id checks), and the DataFrame readers `read_vertices` /
+  `read_edges`, which scan the planned files with Spark's vectorized
+  Parquet reader and join the property groups on the index.
+- `datasource`: `format("graphar")`, which reads the same plan and zips
+  the property groups per chunk through Arrow.
+- `catalog`: `attach`, one view per vertex/edge type over the data source.
+- `writer` / `spark_writer`: local and distributed graph writers.
 """
 
 from duckdb_graphar_spark.graphar.metadata import (

@@ -8,6 +8,13 @@ read-only catalog table per vertex/edge info named `{Type}.vertex` /
 `{Src}_{edge}_{Dst}.edge` (`src/utils/func.cpp:55-63`,
 `src/storage/graphar_table_set.cpp:48-97`).
 
+Each view is a `format("graphar")` scan (`datasource.py`): the reference's
+catalog tables bind the same scan machinery as its table functions
+(`graphar_table_entry.cpp:34-58`), and here the views read the plan of the
+same planner as `read_vertices` / `read_edges` (`reader.py`), so a SQL
+`WHERE _graphArSrcIndex = k` prunes chunk partitions at planning time and
+property groups are zipped without a shuffle.
+
 Naming: the reference's names contain a literal dot.  Spark accepts a
 single-part temp-view name containing a dot only via backquoting, so
 `attach` registers BOTH spellings by default: the reference-exact
@@ -29,63 +36,18 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from duckdb_graphar_spark.graphar.datasource import register
 from duckdb_graphar_spark.graphar.metadata import GraphInfo
-from duckdb_graphar_spark.graphar.reader import read_edges, read_vertices
 
 
-def attach(
-    spark: SparkSession,
-    graph: GraphInfo | str,
-    *,
-    use_datasource: bool = True,
-    naming: str = "both",
-) -> dict[str, str]:
-    """Register temp views for every vertex/edge type; returns
-    {view_name: kind} for introspection (`SHOW TABLES` parity,
-    `config/test/sql/graphar/attach.test:4-16`).
+def attach(spark: SparkSession, yaml_path: str, *, naming: str = "both") -> dict[str, str]:
+    """Register temp views for every vertex/edge type of the graph YAML at
+    `yaml_path`; returns {view_name: kind} for introspection (`SHOW
+    TABLES` parity, `config/test/sql/graphar/attach.test:4-16`).
 
     ``naming``: "dotted" registers the reference-exact names
     (`Person.vertex`, backquote to query), "underscore" the
-    Spark-friendly aliases (`Person_vertex`), "both" (default) both.
-
-    By default the views sit on the `format("graphar")` Python Data
-    Source, so a SQL `WHERE _graphArSrcIndex = k` prunes chunk
-    partitions at planning time (datasource.py) and property groups are
-    zipped without a shuffle.  `use_datasource=False` falls back to the
-    DataFrame-helper readers."""
-    g = graph if isinstance(graph, GraphInfo) else GraphInfo.load(graph)
-    yaml_path = graph if isinstance(graph, str) else None
-    if use_datasource and yaml_path is not None:
-        from duckdb_graphar_spark.graphar.datasource import register
-
-        register(spark)
-
-        def vertex_df(vtype):
-            return (
-                spark.read.format("graphar")
-                .option("path", yaml_path)
-                .option("type", vtype)
-                .load()
-            )
-
-        def edge_df(src, etype, dst):
-            return (
-                spark.read.format("graphar")
-                .option("path", yaml_path)
-                .option("src", src)
-                .option("edge", etype)
-                .option("dst", dst)
-                .load()
-            )
-
-    else:
-
-        def vertex_df(vtype):
-            return read_vertices(spark, g, vtype)
-
-        def edge_df(src, etype, dst):
-            return read_edges(spark, g, src, etype, dst)
-
+    Spark-friendly aliases (`Person_vertex`), "both" (default) both."""
     if naming not in ("dotted", "underscore", "both"):
         raise ValueError(f"naming must be dotted|underscore|both, got {naming!r}")
 
@@ -104,9 +66,16 @@ def attach(
             )
             registered[dotted] = kind
 
+    register(spark)
+    g = GraphInfo.load(yaml_path)
+
+    def load(**options):
+        return spark.read.format("graphar").options(path=yaml_path, **options).load()
+
     registered: dict[str, str] = {}
     for vtype in g.vertices:
-        register_views(vertex_df(vtype), vtype, "vertex", registered)
+        register_views(load(type=vtype), vtype, "vertex", registered)
     for (src, etype, dst) in g.edges:
-        register_views(edge_df(src, etype, dst), f"{src}_{etype}_{dst}", "edge", registered)
+        view = f"{src}_{etype}_{dst}"
+        register_views(load(src=src, edge=etype, dst=dst), view, "edge", registered)
     return registered

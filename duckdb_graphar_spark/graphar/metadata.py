@@ -433,15 +433,6 @@ class GraphInfo:
     def adj_dir(self, ei: EdgeInfo, aligned_by: str) -> str:
         return os.path.join(self.prefix, ei.prefix, ei.adj_list(aligned_by).prefix)
 
-    def adj_list_part_dir(self, ei: EdgeInfo, aligned_by: str, part: int) -> str:
-        return os.path.join(self.adj_dir(ei, aligned_by), "adj_list", f"part{part}")
-
-    def offset_chunk_path(self, ei: EdgeInfo, aligned_by: str, chunk: int) -> str:
-        return os.path.join(self.adj_dir(ei, aligned_by), "offset", f"chunk{chunk}")
-
-    def edge_prop_part_dir(self, ei: EdgeInfo, aligned_by: str, pg: PropertyGroup, part: int) -> str:
-        return os.path.join(self.adj_dir(ei, aligned_by), pg.prefix, f"part{part}")
-
     def edge_vertex_count_path(self, ei: EdgeInfo, aligned_by: str) -> str:
         return os.path.join(self.adj_dir(ei, aligned_by), "vertex_count")
 

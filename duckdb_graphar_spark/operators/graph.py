@@ -34,11 +34,7 @@ from duckdb_graphar_spark.graphar.metadata import (
     GraphInfo,
     OFFSET_COL,
     SRC_INDEX_COL,
-    chunk_index_of as _chunk_no,
-    list_chunks,
 )
-
-import os
 
 
 def degrees(
@@ -89,20 +85,13 @@ def degrees_from_offsets(
     (`edges_vertex.cpp:91-119`): only the ONE offset chunk covering the
     vertex is read, regardless of graph size.
     """
-    from duckdb_graphar_spark.graphar.reader import _OFFSET_FIELDS, _chunked_df
+    from duckdb_graphar_spark.graphar.reader import _OFFSET_FIELDS, _chunked_df, _plan_offsets
 
     g = graph if isinstance(graph, GraphInfo) else GraphInfo.load(graph)
     ei = g.edges[(src, edge_type, dst)]
     chunk_size = ei.src_chunk_size if aligned_by == "src" else ei.dst_chunk_size
-    files = list_chunks(os.path.join(g.adj_dir(ei, aligned_by), "offset"))
-    if vid is not None:
-        n_aligned = g.edge_aligned_vertex_count(ei, aligned_by)
-        if not (0 <= vid < n_aligned):
-            raise ValueError(
-                f"vertex id {vid} out of range [0, {n_aligned}) "
-                "(reference: BinderException on out-of-range vid)"
-            )
-        files = [f for f in files if _chunk_no(f) == vid // chunk_size]
+    parts = _plan_offsets(g, ei, aligned_by, vid)
+    files = [p.groups[0][0] for p in parts]
     df = _chunked_df(spark, files, ei.adj_list(aligned_by).file_type, _OFFSET_FIELDS)
     w = Window.partitionBy("__chunk").orderBy("__row")
     out = (

@@ -195,6 +195,21 @@ def test_multiformat_roundtrip(spark, graph_fixture, tmp_path, file_type):
     expect = sorted(int(d) for s, d in zip(src, dst) if s == vid)
     assert sorted(r._graphArDstIndex for r in lookup.collect()) == expect
 
+    # the data source reads the same chunks through its Arrow zip
+    from duckdb_graphar_spark.graphar.datasource import register
+
+    register(spark)
+
+    def ds(**options):
+        return spark.read.format("graphar").options(path=gys[file_type], **options).load()
+
+    assert sorted(map(tuple, ds(type="Person").collect())) == ref_v
+    e = ds(src="Person", edge="knows", dst="Person")
+    assert sorted(map(tuple, e.collect())) == ref_e
+    ref_lookup = read_edges(spark, gys["parquet"], "Person", "knows", "Person", src_vid=vid)
+    got_lookup = e.filter(f"_graphArSrcIndex = {vid}")
+    assert sorted(map(tuple, got_lookup.collect())) == sorted(map(tuple, ref_lookup.collect()))
+
 
 def make_graph_arrays_small(n):
     deg = 1 + (np.arange(n) % 5)
@@ -434,7 +449,7 @@ def test_graphinfo_cache_stats_before_read(tmp_path, monkeypatch):
     )
 
 
-def _small_graph(out_dir, src, dst, *, n, names=None, src_chunk_size=1024):
+def _small_graph(out_dir, src, dst, *, n, names=None, src_chunk_size=1024, edge_props=None):
     from duckdb_graphar_spark.graphar.writer import EdgeSpec, VertexSpec, write_graph
 
     names = names or [f"v{i}" for i in range(n)]
@@ -444,6 +459,7 @@ def _small_graph(out_dir, src, dst, *, n, names=None, src_chunk_size=1024):
         {("Person", "knows", "Person"): EdgeSpec(
             src=np.asarray(src, np.int64), dst=np.asarray(dst, np.int64),
             src_chunk_size=src_chunk_size, dst_chunk_size=src_chunk_size,
+            properties=edge_props,
         )},
     )
 
@@ -454,7 +470,9 @@ def test_zero_out_degree_point_lookup_is_empty(spark, tmp_path):
     (through `format("graphar")` and through the attached view)."""
     from duckdb_graphar_spark.graphar.datasource import register
 
-    y = _small_graph(tmp_path, [0, 1, 1], [1, 2, 0], n=4)
+    y = _small_graph(
+        tmp_path, [0, 1, 1], [1, 2, 0], n=4, edge_props=pa.table({"w": [0.5, 1.5, 2.5]})
+    )
     register(spark)
     e = (
         spark.read.format("graphar").option("path", y)
@@ -468,6 +486,44 @@ def test_zero_out_degree_point_lookup_is_empty(spark, tmp_path):
     q = "SELECT _graphArDstIndex FROM Person_knows_Person_edge WHERE _graphArSrcIndex = {}"
     assert spark.sql(q.format(3)).collect() == []
     assert spark.sql(q.format(2)).collect() == []
+
+    # the helper reader's projection does not depend on the vertex's degree
+    S, D = "_graphArSrcIndex", "_graphArDstIndex"
+    for columns, want in ((None, [S, D, "w"]), ([], [S, D]), (["w"], [S, D, "w"])):
+        empty, hit = (
+            graphar.read_edges(spark, y, "Person", "knows", "Person", src_vid=v, columns=columns)
+            for v in (3, 1)
+        )
+        assert empty.collect() == [] and len(hit.collect()) == 2
+        assert empty.columns == hit.columns == want, columns
+
+
+def test_property_less_vertex_type_reads_alike_on_every_surface(spark, tmp_path):
+    """A vertex type with no property groups has only its index column:
+    the helper reader, `format("graphar")` and the attached view all
+    return one row per vertex, for a full scan and for a point lookup."""
+    from duckdb_graphar_spark.graphar.datasource import register
+    from duckdb_graphar_spark.graphar.writer import VertexSpec, write_graph
+
+    bare = pa.table({"x": list(range(10))}).drop_columns(["x"])
+    y = write_graph(str(tmp_path), "Bare", {"Tag": VertexSpec(table=bare, chunk_size=4)})
+    register(spark)
+    graphar.attach(spark, y, naming="underscore")
+    surfaces = {
+        "read_vertices": lambda vid: graphar.read_vertices(spark, y, "Tag", vid=vid),
+        "format": lambda vid: (
+            spark.read.format("graphar").options(path=y, type="Tag").load()
+            .filter("true" if vid is None else f"_graphArVertexIndex = {vid}")
+        ),
+        "view": lambda vid: spark.sql(
+            "SELECT * FROM Tag_vertex"
+            + ("" if vid is None else f" WHERE _graphArVertexIndex = {vid}")
+        ),
+    }
+    for name, read in surfaces.items():
+        assert sorted(r[0] for r in read(None).collect()) == list(range(10)), name
+        assert [tuple(r) for r in read(3).collect()] == [(3,)], name
+        assert read(9).columns == ["_graphArVertexIndex"], name
 
 
 def test_separately_built_edge_frames_join_by_column_reference(spark, tmp_path):

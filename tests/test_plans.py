@@ -104,6 +104,30 @@ def test_graphar_point_lookup_prunes_partitions(spark, tmp_path, graph_fixture):
     assert n_full > 2, "fixture too small to demonstrate pruning"
     assert n_pruned <= 2, f"point lookup scanned {n_pruned}/{n_full} partitions"
 
+    # the helper reader reads the same plan: the lookup opens at most the
+    # two adjacency chunks its row range can span
+    from duckdb_graphar_spark.graphar import read_edges
+
+    def adj_files(**point):
+        df = read_edges(spark, yaml_path, "Person", "knows", "Person", **point)
+        return [f for f in df.inputFiles() if "/adj_list/" in f]
+
+    assert len(adj_files()) > 2
+    assert 1 <= len(adj_files(src_vid=42)) <= 2
+
+
+def test_sessionize_capped_folds_the_window_output_unshuffled(spark, qs):
+    """q93's per-user fold needs each partition sorted with users
+    contiguous, which it gets only from the window's own user exchange
+    and sort: no Exchange may sit between the Window and the
+    MapInPandas that folds its output."""
+    lines = _plan(qs["q93_capped_sessionization"](spark, SF_DIR)).splitlines()
+    fold = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    window = next(i for i, line in enumerate(lines) if i > fold and " Window " in line)
+    assert not any("Exchange" in line for line in lines[fold:window]), "\n".join(lines)
+    below = next(line for line in lines[window:] if "Exchange" in line)
+    assert "hashpartitioning(user_id" in below, below
+
 
 def test_hot_paths_have_no_row_at_a_time_python(spark, qs):
     """Dedup / text / similarity pipelines stay JVM-side (or Arrow-batched
