@@ -11,13 +11,17 @@ Scale design notes (100 TB):
   keys, so cost is O(candidates), not O(n²).
 - Candidate verification (exact Jaccard) happens only on LSH candidate
   pairs.
-- Connected components over the duplicate-pair graph uses iterative
-  min-label propagation (bounded iterations, localCheckpoint per round).
+- Connected components over the duplicate-pair graph uses a driver
+  union-find when the pair graph is small, else the graph operators'
+  exact-or-raise min-label fixpoint (``graph._min_label_fixpoint`` on
+  ``graph._fixpoint``, whose docstring gives the lineage-cut cadence).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from duckdb_graphar_spark.operators.graph import _min_label_fixpoint
 
 # 64-bit hashing via xxhash64 with per-permutation seeds: JVM-side,
 # deterministic across runs/engines given the same seed.
@@ -369,10 +373,11 @@ def connected_components(
     """Connected components by iterative min-label propagation.
 
     edges: (id_a, id_b) undirected; vertices: (v).  Returns (v, label)
-    where label = min vertex id in the component.  Converges in
-    O(diameter) rounds; each round is one join + groupBy, with
-    localCheckpoint to cut lineage.  (GraphFrames-style; bounded driver
-    state.)
+    where label = min vertex id in the component.  The distributed
+    path is ``graph._min_label_fixpoint`` over both orientations of
+    every edge: O(log diameter) passes of one Spark job each, raising
+    ValueError if ``max_iters`` passes do not converge.  (GraphFrames-
+    style; bounded driver state.)
 
     Adaptive fast path (same spirit as AQE's runtime broadcast
     decision): a near-dup pair graph is tiny relative to the corpus —
@@ -398,54 +403,22 @@ def connected_components(
     isolated = vertices.select("v").join(incident, "v", "left_anti").select(
         "v", F.col("v").alias("label")
     )
-    labels = incident.select("v", F.col("v").alias("label")).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iters):
-        neighbor_min = (
-            sym.join(labels, sym["w"] == labels["v"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # neighbor-min moves a label ONE hop per round — O(diameter)
-        # alone, which a chain of near-dups or a spanning TREE (g31's
-        # forest) exceeds at scale.  The pointer-doubling shortcut
-        # label(v) ← label(label(v)) halves remaining path lengths per
-        # round (every label value is itself an incident vertex, so the
-        # self-join always hits), giving the classic O(log diameter)
-        # convergence.
-        shortcut = labels.select(
-            F.col("v").alias("__lv"), F.col("label").alias("__ll")
-        )
-        stepped = (
-            labels.join(neighbor_min, labels["v"] == neighbor_min["u"], "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("__mid"),
-                F.col("label").alias("__old"),
-            )
-            .join(shortcut, F.col("__mid") == F.col("__lv"))
-            .select(
-                "v",
-                F.least(F.col("__mid"), F.col("__ll")).alias("__new"),
-                "__old",
-            )
-            .localCheckpoint(eager=True)
-        )
-        labels = stepped.select("v", F.col("__new").alias("label"))
-        if not stepped.filter(F.col("__new") != F.col("__old")).take(1):
-            converged = True
-            break
-    if not converged:
-        # silent partial labels would corrupt every downstream consumer
-        # (a Borůvka round would pick an intra-component edge and build
-        # a CYCLE) — exact-or-raise, the g24 SCC discipline
-        raise ValueError(
+    # min-label propagation over the symmetric edge set, with the
+    # pointer-doubling shortcut label(v) ← label(label(v)): O(log
+    # diameter) passes, so a chain of near-dups or a spanning TREE (g31's
+    # forest) converges.  Silent partial labels would corrupt every
+    # downstream consumer (a Borůvka round would pick an intra-component
+    # edge and build a CYCLE) — exact-or-raise, the g24 SCC discipline
+    labels = _min_label_fixpoint(
+        sym,
+        incident.select("v", F.col("v").alias("lab")),
+        max_iters=max_iters,
+        error=ValueError(
             f"connected_components did not converge in {max_iters} "
             "iterations; raise max_iters"
-        )
-    return labels.unionAll(isolated)
+        ),
+    )
+    return labels.select("v", F.col("lab").alias("label")).unionAll(isolated)
 
 
 def _connected_components_driver(pairs, spark, vertices: DataFrame) -> DataFrame:

@@ -18,14 +18,24 @@ Parity targets (SURVEY §2.C):
 Scale design: the reference's BFS is a single-threaded dense-array scan
 (O(|V|) driver memory — `bfs.cpp:94-134`); here every expansion is a
 distributed join.  Frontiers are assumed small relative to the graph and
-broadcast; `visited` stays distributed and is anti-joined.  Lineage is
-cut every iteration with ``localCheckpoint`` so 100-level BFS doesn't
-build a 100-stage plan.
+broadcast; `visited` stays distributed and is anti-joined.
+
+The loop mechanics the iterative operators share live in a few private
+helpers: :func:`_bfs_sweep` (every BFS), :func:`_rank_propagation`
+(pagerank and its personalized form), :func:`_fixpoint` (every
+run-to-convergence loop, which also tabulates each operator's
+lineage-cut cadence and why), :func:`_pinned` (persisted
+intermediates) and the edge builders :func:`_undirected`,
+:func:`_symmetric`, :func:`_endpoints` and
+:func:`_distinct_edges_and_vertices`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from duckdb_graphar_spark.graphar.metadata import (
@@ -35,6 +45,147 @@ from duckdb_graphar_spark.graphar.metadata import (
     OFFSET_COL,
     SRC_INDEX_COL,
 )
+
+
+@contextmanager
+def _pinned() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Persist intermediates for the length of a ``with`` block:
+    ``pin(df)`` persists ``df`` and returns it; every pinned frame is
+    unpersisted (non-blocking) when the block exits, on error too.  A
+    frame that leaves the block must not read the pins: checkpoint it
+    eagerly inside the block."""
+    frames: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        frames.append(df.persist())
+        return frames[-1]
+
+    try:
+        yield pin
+    finally:
+        for df in frames:
+            df.unpersist(blocking=False)
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str, *extra: Column) -> DataFrame:
+    """The undirected simple graph under a directed multigraph edge
+    list: self-loops dropped, each edge canonicalized to (a, b) with
+    a < b, parallel edges collapsed by a distinct.  ``extra`` columns
+    ride along instead of the distinct; the caller then collapses the
+    parallel edges itself."""
+    s, d = F.col(src_col), F.col(dst_col)
+    e = edges.filter(s != d).select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"), *extra)
+    return e if extra else e.distinct()
+
+
+def _symmetric(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Both orientations (a, b) and (b, a) of every non-loop edge: the
+    symmetric adjacency of the underlying undirected graph.  Parallel
+    edges stay; callers that need a set add ``.distinct()``."""
+    e = edges.filter(F.col(src_col) != F.col(dst_col)).select(
+        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
+    )
+    return e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _endpoints(e: DataFrame, x: str = "a", y: str = "b") -> DataFrame:
+    """Both endpoints of every edge of ``e`` as one column ``v``, one
+    row per edge end: group it for degrees, distinct it for the vertex
+    set."""
+    return e.select(F.col(x).alias("v")).unionAll(e.select(F.col(y).alias("v")))
+
+
+def _distinct_edges_and_vertices(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The distinct directed edge set (__s, __d) and its endpoint set
+    (__v), each eagerly checkpointed: the fixed-iteration score
+    operators (hits, katz) join the edges every half-step and rebuild
+    scores from the vertices, so without the cuts the source is read
+    once per consumer (4x at the default horizon, per the
+    cross-execution meter)."""
+    e = (
+        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    verts = (
+        _endpoints(e, "__s", "__d")
+        .distinct()
+        .select(F.col("v").alias("__v"))
+        .localCheckpoint(eager=True)
+    )
+    return e, verts
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *,
+    max_iters: int,
+    error: Exception,
+    value: str | None = None,
+) -> DataFrame:
+    """Exact-or-raise convergence loop: ``state = step(state)`` until a
+    pass changes nothing, else raise ``error`` after ``max_iters``
+    passes.  The caller gets the fixpoint or an exception, never a
+    silently partial result.
+
+    Convergence test:
+
+    - ``value`` set (label and level relaxations): ``step`` returns the
+      state's key columns, the relaxed value as ``__new`` and the old
+      ``value``.  A pass converged when no row moved; the next state
+      takes ``__new`` as ``value``.
+    - ``value=None`` (kcore's peel): the state only shrinks.  A pass
+      converged when its row count equals the previous pass's; the
+      first pass compares with one count of the initial state.
+
+    Each pass costs the step's own shuffle stages plus ONE job: the
+    stepped frame is cut with a lazy ``localCheckpoint`` that the pass's
+    row count materializes in full, so no later consumer races an
+    unmaterialized mark, and the next state is a free projection over
+    the checkpointed blocks.  The count is an RDD count over the
+    physical plan (one job); ``DataFrame.count()`` plans a global
+    aggregate whose exchange costs a second job, and an eager cut plus
+    a separate probe costs two as well.
+
+    Lineage-cut cadence of the iterative family, each measured and a
+    constant at its call site:
+
+    ============================  =================  ====================================
+    operator                      cut                why
+    ============================  =================  ====================================
+    this loop (scc, CC,           every pass, lazy   the count that tests convergence is
+    condensation, kcore stable)                      the cut's own materialization
+    BFS (:func:`_bfs_sweep`)      every 4th level    lineage grows by one cached union per
+                                                     level; no extra job per level
+    sssp                          every 2nd round    lineage doubles per round; every round
+                                                     measured ~1.45x slower at sf1/sf10,
+                                                     every 4th re-ran early rounds 8x
+    label_propagation             every 3rd round    labels feed one join per round
+    kcore (fixed rounds)          every round, lazy  the next round reads the edges 3x
+    ktruss                        every round, eager support reads the edges from several
+                                                     subtrees
+    ============================  =================  ====================================
+    """
+    def count(df: DataFrame) -> int:
+        return df._jdf.queryExecution().toRdd().count()
+
+    rows = None if value else count(state)
+    for _ in range(max_iters):
+        stepped = step(state)
+        cut = stepped.localCheckpoint(eager=False)
+        if value:
+            keys = [c for c in stepped.columns if c not in ("__new", value)]
+            state = cut.select(*keys, F.col("__new").alias(value))
+            if count(cut.filter(F.col("__new") != F.col(value))) == 0:
+                return state
+        else:
+            state, before, rows = cut, rows, count(cut)
+            if rows == before:
+                return state
+    raise error
 
 
 def degrees(
@@ -174,10 +325,10 @@ def bfs_length(
 ) -> int:
     """Unweighted shortest-path length src→dst; -1 unreachable, 0 if equal.
 
-    Level-synchronous BFS (`bfs.cpp:94-134` re-expressed): the frontier
-    is expanded by an edge join per level, deduped, and anti-joined
-    against the visited set.  Driver state is O(1) (loop counter only);
-    per-level results are localCheckpoint'ed to cut lineage.
+    Level-synchronous BFS (`bfs.cpp:94-134` re-expressed) through
+    :func:`_bfs_sweep`: the frontier is expanded by an edge join per
+    level, deduped, and anti-joined against the visited set, with ONE
+    fused count-plus-hit aggregate per level.  Driver state is O(1).
 
     Adaptive fast path: when the edge list fits the driver
     (≤ ``driver_threshold`` edges, probed with one limit-collect job —
@@ -187,12 +338,9 @@ def bfs_length(
     (``driver_threshold=0`` forces it).
 
     The frontier-edge join is broadcast ONLY while the previous level's
-    frontier count (already measured by the per-level stats aggregate)
-    stays ≤ ``broadcast_threshold``: a mid-BFS frontier on a 100×-scale
-    graph can hold tens of millions of vertices, where a forced broadcast
-    is a hard job failure.  Above the threshold the hint is dropped and
-    the join shuffles; AQE still picks broadcast for small frontiers on
-    its own."""
+    frontier count stays ≤ ``broadcast_threshold``; above it the hint is
+    dropped and the join shuffles (AQE still picks broadcast for small
+    frontiers on its own)."""
     if src_vid == dst_vid:
         return 0
     if driver_threshold > 0:
@@ -214,50 +362,45 @@ def bfs_length(
                 dst_vid,
                 max_depth,
             )
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")).persist()
-    pinned: list[DataFrame] = [e]
-    try:
-        # single-partition local relation — no shuffle, broadcast feeds the join
-        frontier = spark.range(1).select(F.lit(src_vid).cast("long").alias("__v"))
-        visited = frontier
-        frontier_n = 1  # size of the current frontier, from the level stats
-        for depth in range(1, max_depth + 1):
-            nxt = _expand_frontier(
-                e, frontier, visited, broadcast=frontier_n <= broadcast_threshold
-            ).persist()
-            pinned.append(nxt)
-            # ONE action per level: the stats aggregate materializes the
-            # persisted frontier (size + dst membership read together)
-            stat = nxt.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max((F.col("__v") == dst_vid).cast("int")).alias("hit"),
-            ).first()
-            if stat["hit"]:
-                return depth
-            if stat["n"] == 0:
-                return -1
-            visited = visited.unionAll(nxt)
-            frontier = nxt
-            frontier_n = stat["n"]
-            # lineage grows by one cached-scan union per level; cut it with
-            # a real checkpoint every 4th level so 100-level BFS never
-            # builds a deep plan, without paying an extra job per level
-            if depth % 4 == 0:
-                frontier = frontier.localCheckpoint(eager=False)
-                visited = visited.localCheckpoint(eager=False)
-        return -1
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
+    hit: list[int] = []
+
+    def level(depth: int, nxt: DataFrame) -> int:
+        # ONE action per level: the stats aggregate materializes the
+        # persisted frontier (size + dst membership read together)
+        stat = nxt.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max((F.col("__v") == dst_vid).cast("int")).alias("hit"),
+        ).first()
+        if stat["hit"]:
+            hit.append(depth)
+            return 0
+        return stat["n"]
+
+    _bfs_sweep(
+        edges,
+        [src_vid],
+        src_col=src_col,
+        dst_col=dst_col,
+        max_depth=max_depth,
+        broadcast_threshold=broadcast_threshold,
+        level=level,
+    )
+    return hit[0] if hit else -1
 
 
 def _expand_frontier(
-    e: DataFrame, frontier: DataFrame, visited: DataFrame, *, broadcast: bool
+    e: DataFrame,
+    frontier: DataFrame,
+    visited: DataFrame,
+    *,
+    broadcast: bool,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """One BFS level: distinct unvisited successors of the frontier.
     ``broadcast=False`` drops the hint so the frontier join shuffles
-    instead of failing on an over-limit broadcast.
+    instead of failing on an over-limit broadcast.  ``keys`` are extra
+    key columns carried by the frontier and the visited set (the
+    multi-source sweep's ``__src``): each key value expands on its own.
 
     The distinct + visited anti-join are fused into ONE aggregate (tag
     expansion rows 0, visited rows 1, keep never-seen groups): one
@@ -268,13 +411,91 @@ def _expand_frontier(
     fr = F.broadcast(frontier) if broadcast else frontier
     return (
         e.join(fr, e["__s"] == F.col("__v"))
-        .select(F.col("__d").alias("__v"), F.lit(0).alias("__t"))
-        .unionByName(visited.select("__v", F.lit(1).alias("__t")))
-        .groupBy("__v")
+        .select(*keys, F.col("__d").alias("__v"), F.lit(0).alias("__t"))
+        .unionByName(visited.select(*keys, "__v", F.lit(1).alias("__t")))
+        .groupBy(*keys, "__v")
         .agg(F.max("__t").alias("__mt"))
         .filter(F.col("__mt") == 0)
-        .select("__v")
+        .select(*keys, "__v")
     )
+
+
+def _bfs_sweep(
+    edges: DataFrame,
+    sources: list[int],
+    *,
+    src_col: str,
+    dst_col: str,
+    max_depth: int,
+    broadcast_threshold: int,
+    level: Callable[[int, DataFrame], int] | None = None,
+    keyed: bool = False,
+    distances: bool = False,
+) -> tuple[list[int], DataFrame | None]:
+    """The distributed level-synchronous BFS loop behind
+    :func:`bfs_length`, :func:`bfs_levels`, :func:`bfs_distances` and
+    :func:`multi_source_bfs`.  It owns the frontier, the visited set,
+    the persisted edge and level frames, the per-level action and the
+    lineage cut; driver state is the list of level sizes.
+
+    Each level is :func:`_expand_frontier` over the persisted edges,
+    persisted in turn and measured by ONE action, ``level(depth, nxt)``
+    (default: its count), which returns the level's size; 0 ends the
+    sweep.  The frontier join is broadcast while the previous level's
+    size stays ≤ ``broadcast_threshold``: a mid-BFS frontier on a
+    100×-scale graph can hold tens of millions of vertices, where a
+    forced broadcast is a hard job failure.
+
+    Lineage grows by one cached-scan union per level; a lazy cut every
+    4th level keeps 100-level sweeps shallow without an extra job per
+    level.
+
+    ``keyed``: the frontier carries its source as ``__src``, so one
+    sweep runs every source's BFS at once (a vertex is visited once per
+    source).  ``distances``: also build the reached (``__src``, __v,
+    dist) frame, eagerly checkpointed before the pins are released.
+
+    Returns (sizes, reached): ``sizes[d]`` is the size of level d for
+    every non-empty level (``sizes[0]`` = the number of sources), and
+    ``reached`` is None unless ``distances`` is set."""
+    spark = edges.sparkSession
+    keys = ("__src",) if keyed else ()
+    with _pinned() as pin:
+        e = pin(edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")))
+        if keyed:
+            frontier = spark.createDataFrame(
+                [(int(s),) for s in sources], "__src long"
+            ).select("__src", F.col("__src").alias("__v"))
+        else:
+            # single-partition local relation — no shuffle, broadcast feeds the join
+            frontier = spark.range(1).select(F.lit(sources[0]).cast("long").alias("__v"))
+        visited = frontier
+        reached = frontier.withColumn("dist", F.lit(0)) if distances else None
+        sizes = [len(sources)]
+        for depth in range(1, max_depth + 1):
+            nxt = pin(
+                _expand_frontier(
+                    e,
+                    frontier,
+                    visited,
+                    broadcast=sizes[-1] <= broadcast_threshold,
+                    keys=keys,
+                )
+            )
+            n = level(depth, nxt) if level else nxt.count()
+            if n == 0:
+                break
+            sizes.append(n)
+            visited = visited.unionAll(nxt)
+            frontier = nxt
+            if distances:
+                reached = reached.unionAll(nxt.select(*keys, "__v", F.lit(depth).alias("dist")))
+            if depth % 4 == 0:
+                frontier = frontier.localCheckpoint(eager=False)
+                visited = visited.localCheckpoint(eager=False)
+                if distances:
+                    reached = reached.localCheckpoint(eager=False)
+        return sizes, reached.localCheckpoint(eager=True) if distances else None
 
 
 def _bfs_driver(src, dst, src_vid: int, dst_vid: int, max_depth: int) -> int:
@@ -377,19 +598,47 @@ def pagerank(
     Scale shape per iteration: join ranks⋈edges on src (shuffle on src,
     reused across iterations since edges' partitioning is stable), then
     one map-combinable groupBy(dst) carrying a single decimal per edge;
-    ranks stay an n-row distributed table, never on the driver.
+    ranks stay an n-row distributed table, never on the driver.  The
+    loop is :func:`_rank_propagation`, shared with
+    :func:`personalized_pagerank`.
     """
-    # e feeds the out-degree aggregate AND every iteration's contribution
-    # join; the vertex relation feeds the count job plus the rank rebuild
-    # (consumed twice per round).  ONE union-tagged checkpoint (edges
-    # tagged 0, vertices tagged 1) collapses all downstream consumers
-    # onto a single materialized relation — each source is still read
-    # once (the cross-execution meter measured orders 2x / customer 3x
-    # before the r12 checkpoints; same discipline as g18/g21), and the
-    # r12 pair of eager checkpoint jobs + the vertex count job fuse
-    # into ONE materialization job (the vertex-side count is the
-    # checkpoint's own action, so the lazy mark is safe — the scc
-    # trim-loop rule).
+    return _rank_propagation(
+        edges,
+        vertices,
+        n_iters=n_iters,
+        damping=damping,
+        src_col=src_col,
+        dst_col=dst_col,
+        id_col=id_col,
+        out_col="pagerank",
+    )
+
+
+def _rank_propagation(
+    edges: DataFrame,
+    vertices: DataFrame,
+    *,
+    n_iters: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+    id_col: str,
+    out_col: str,
+    source: int | None = None,
+) -> DataFrame:
+    """The rank-propagation body of :func:`pagerank` (``source=None``:
+    uniform start, teleport 0.15/n to every vertex) and
+    :func:`personalized_pagerank` (point mass at ``source``, teleport
+    1-damping to it alone).
+
+    The edges feed the out-degree aggregate AND every iteration's
+    contribution join; the vertices feed the count plus the rank
+    rebuild.  ONE union-tagged lazy checkpoint (edges tagged 0,
+    vertices tagged 1) puts every downstream consumer on one
+    materialized relation, so each source is read once (the
+    cross-execution meter measured orders 2x / customer 3x before), and
+    the vertex count is that checkpoint's own full materialization job,
+    which makes the lazy mark safe."""
     both = (
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
         .withColumn("__t", F.lit(0))
@@ -404,8 +653,13 @@ def pagerank(
     e = both.filter(F.col("__t") == 0).select("__s", "__d")
     v = both.filter(F.col("__t") == 1).select(F.col("__s").alias("__v"))
     outdeg = e.groupBy("__s").agg(F.count(F.lit(1)).alias("__od"))
-    ranks = v.select("__v", (F.lit(1.0) / F.lit(n_b)).alias("__r"))
-    base = F.lit(0.15) / F.lit(n_b)
+    if source is None:
+        ranks = v.select("__v", (F.lit(1.0) / F.lit(n_b)).alias("__r"))
+        base = F.lit(0.15) / F.lit(n_b)
+    else:
+        at_source = F.col("__v") == F.lit(source)
+        ranks = v.select("__v", F.when(at_source, F.lit(1.0)).otherwise(F.lit(0.0)).alias("__r"))
+        base = F.when(at_source, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
     for _ in range(n_iters):
         contrib = (
             e.join(outdeg, "__s")
@@ -432,7 +686,7 @@ def pagerank(
                 ).alias("__r"),
             )
         )
-    return ranks.select(F.col("__v").alias(id_col), F.col("__r").alias("pagerank"))
+    return ranks.select(F.col("__v").alias(id_col), F.col("__r").alias(out_col))
 
 
 def _oriented_triangles(e_df: DataFrame, *, materialize: bool = False) -> DataFrame:
@@ -446,12 +700,7 @@ def _oriented_triangles(e_df: DataFrame, *, materialize: bool = False) -> DataFr
     mostly lower-degree, so its out-degree stays small), and immune to
     WHERE the hub's id happens to fall, unlike id-ordered a<b<c plans
     (a hub at a mid-range id has ~deg²/4 id-ordered wedges)."""
-    dg = (
-        e_df.select(F.col("a").alias("v"))
-        .unionAll(e_df.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("__dg"))
-    )
+    dg = _endpoints(e_df).groupBy("v").agg(F.count(F.lit(1)).alias("__dg"))
     da = dg.select(F.col("v").alias("__va"), F.col("__dg").alias("__da"))
     db = dg.select(F.col("v").alias("__vb"), F.col("__dg").alias("__db"))
     stamped = e_df.join(da, e_df["a"] == da["__va"]).join(db, e_df["b"] == db["__vb"])
@@ -510,17 +759,11 @@ def triangle_count(
     shuffled equi-joins; no broadcast assumptions — AQE may still
     broadcast a small canonical edge set on its own.
     """
-    s, d = F.col(src_col), F.col(dst_col)
-    # same materialization contract as clustering_coefficient: canon
-    # feeds the triangle enumeration's degree aggregate and edge-stamp
-    # joins — an eager O(E) checkpoint (plus materializing `oriented`
-    # for its three consumers) keeps the source at one read (was 3x).
-    canon = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # canon feeds the triangle enumeration's degree aggregate and
+    # edge-stamp joins — an eager O(E) checkpoint (plus materializing
+    # `oriented` for its three consumers) keeps the source at one read
+    # (was 3x), as in clustering_coefficient.
+    canon = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     return _oriented_triangles(canon, materialize=True).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
@@ -541,37 +784,20 @@ def bfs_levels(
     reachability/diameter diagnostic (and the cost model input for
     deciding broadcast vs shuffle traversal).
 
-    Same level-synchronous machinery as :func:`bfs_length`
-    (`_expand_frontier`, frontier-size-aware broadcast); driver state is
-    the O(max_depth) histogram only.
+    The level loop is :func:`_bfs_sweep` (frontier-size-aware
+    broadcast); driver state is the O(max_depth) histogram only.
     """
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")).persist()
-    pinned: list[DataFrame] = [e]
-    counts: list[tuple[int, int]] = [(0, 1)]
-    try:
-        frontier = spark.range(1).select(F.lit(src_vid).cast("long").alias("__v"))
-        visited = frontier
-        frontier_n = 1
-        for depth in range(1, max_depth + 1):
-            nxt = _expand_frontier(
-                e, frontier, visited, broadcast=frontier_n <= broadcast_threshold
-            ).persist()
-            pinned.append(nxt)
-            n = nxt.count()
-            if n == 0:
-                break
-            counts.append((depth, n))
-            visited = visited.unionAll(nxt)
-            frontier = nxt
-            frontier_n = n
-            if depth % 4 == 0:
-                frontier = frontier.localCheckpoint(eager=False)
-                visited = visited.localCheckpoint(eager=False)
-        return spark.createDataFrame(counts, "depth int, n_vertices long")
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
+    sizes, _ = _bfs_sweep(
+        edges,
+        [src_vid],
+        src_col=src_col,
+        dst_col=dst_col,
+        max_depth=max_depth,
+        broadcast_threshold=broadcast_threshold,
+    )
+    return edges.sparkSession.createDataFrame(
+        list(enumerate(sizes)), "depth int, n_vertices long"
+    )
 
 
 def sssp(
@@ -656,8 +882,8 @@ def kcore(
     result exactly SQL-replayable as an unrolled CTE chain.
 
     ``until_stable=True`` runs to the TRUE k-core instead: peel until a
-    round removes no edge (one bounded ``count()`` per round — the BFS
-    frontier-exhaustion pattern, constant driver state), with
+    round removes no edge (:func:`_fixpoint`: one ``count()`` job per
+    round, constant driver state), with
     ``n_iters`` reinterpreted as a safety cap (pass a generous cap; the
     peel provably needs ≤ |V| rounds and in practice a handful).  The
     fixed-round form stays the default because the declared driver
@@ -672,55 +898,41 @@ def kcore(
     monotonically and no driver state exists beyond the loop counter
     (plus one edge-count long per round under ``until_stable``).
     """
-    s, d = F.col(src_col), F.col(dst_col)
     # the peel re-derives the shrinking edge set from this initial canon
     # every round (degree aggregate + two semi-joins per round re-execute
     # the lineage above them); one eager O(E) checkpoint pins the source
     # at one read (was once per round, 3x at the default horizon).
-    e = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
 
     def degs(edges_df: DataFrame) -> DataFrame:
-        both = edges_df.select(F.col("a").alias("v")).unionAll(
-            edges_df.select(F.col("b").alias("v"))
-        )
-        return both.groupBy("v").agg(F.count(F.lit(1)).alias("degree"))
+        return _endpoints(edges_df).groupBy("v").agg(F.count(F.lit(1)).alias("degree"))
 
-    n_edges = e.count() if until_stable else None
-    converged = False
-    for it in range(n_iters):
+    def peel(e: DataFrame) -> DataFrame:
         alive = degs(e).filter(F.col("degree") >= k).select("v")
         e = e.join(alive, e["a"] == alive["v"], "left_semi")
-        e = e.join(alive, e["b"] == alive["v"], "left_semi")
-        if not until_stable:
+        return e.join(alive, e["b"] == alive["v"], "left_semi")
+
+    if until_stable:
+        # the cap is a SAFETY bound, not a semantic one: exiting through
+        # it silently would hand back a non-fixpoint subgraph labeled
+        # "true k-core" — raise so the caller widens n_iters instead
+        e = _fixpoint(
+            e,
+            peel,
+            max_iters=n_iters,
+            error=RuntimeError(
+                f"kcore(until_stable=True) hit the n_iters={n_iters} safety "
+                "cap before the peel reached fixpoint; pass a larger n_iters"
+            ),
+        )
+    else:
+        for _ in range(n_iters):
             # cut EVERY round, not every 3rd: the next round consumes e
             # three times (both degs branches + the semi-join chain), so
             # uncut lineage re-executes each round's aggregate and
             # semi-joins ~3x per extra round.  Lazy: materializes inside
-            # the final action, no extra job (the until_stable branch
-            # below already checkpoints eagerly for its count probe).
-            e = e.localCheckpoint(eager=False)
-        if until_stable:
-            # materialize once per round: the count IS the convergence
-            # probe and the checkpoint that cuts the semi-join lineage
-            e = e.localCheckpoint(eager=True)
-            now = e.count()
-            if now == n_edges:
-                converged = True
-                break
-            n_edges = now
-    if until_stable and not converged:
-        # the cap is a SAFETY bound, not a semantic one: exiting through
-        # it silently would hand back a non-fixpoint subgraph labeled
-        # "true k-core" — raise so the caller widens n_iters instead
-        raise RuntimeError(
-            f"kcore(until_stable=True) hit the n_iters={n_iters} safety "
-            "cap before the peel reached fixpoint; pass a larger n_iters"
-        )
+            # the final action, no extra job.
+            e = peel(e).localCheckpoint(eager=False)
     return degs(e).select(F.col("v").alias("id"), "degree")
 
 
@@ -747,24 +959,15 @@ def label_propagation(
     groupBy(vertex) argmax, all map-combinable; labels stay an n-row
     distributed relation; lineage cut every 3rd round.
     """
-    s, d = F.col(src_col), F.col(dst_col)
     # canon feeds the neighbor relation (two union branches, consumed
     # once per round) and the initial label set (two more); one eager
     # O(E) checkpoint pins the source at one read (was 3x).
-    canon = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    canon = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     nbr = canon.select(F.col("a").alias("__v"), F.col("b").alias("__u")).unionAll(
         canon.select(F.col("b").alias("__v"), F.col("a").alias("__u"))
     )
-    labels = (
-        canon.select(F.col("a").alias("__v"))
-        .unionAll(canon.select(F.col("b").alias("__v")))
-        .distinct()
-        .select("__v", F.col("__v").alias("__lab"))
+    labels = _endpoints(canon).distinct().select(
+        F.col("v").alias("__v"), F.col("v").alias("__lab")
     )
     for it in range(n_iters):
         counts = (
@@ -799,64 +1002,20 @@ def personalized_pagerank(
     the source; dangling mass leaves the system (same variant as
     `pagerank`, mirrored by the SQL oracle).
 
-    Identical float discipline and per-iteration plan as `pagerank`:
-    one ranks⋈edges shuffle join + one map-combinable DECIMAL(38,18)
-    groupBy(dst) per round; ranks published at 12 decimals."""
-    # same materialization contract as pagerank: e and the vertex
-    # projection are constant across iterations and fuse into ONE
-    # union-tagged checkpoint job (was two eager checkpoints; each
-    # source still read once — was customer 3x / orders 2x pre-r12).
-    both = (
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-        .withColumn("__t", F.lit(0))
-        .unionByName(
-            vertices.select(F.col(id_col).alias("__s"))
-            .withColumn("__d", F.lit(None).cast(edges.schema[dst_col].dataType))
-            .withColumn("__t", F.lit(1))
-        )
-        .localCheckpoint(eager=False)
+    Runs :func:`_rank_propagation`, as `pagerank` does: one ranks⋈edges
+    shuffle join + one map-combinable DECIMAL(38,18) groupBy(dst) per
+    round; ranks published at 12 decimals."""
+    return _rank_propagation(
+        edges,
+        vertices,
+        n_iters=n_iters,
+        damping=damping,
+        src_col=src_col,
+        dst_col=dst_col,
+        id_col=id_col,
+        out_col="ppr",
+        source=source,
     )
-    # the count is the checkpoint's own (full) materialization job
-    both.count()
-    e = both.filter(F.col("__t") == 0).select("__s", "__d")
-    v = both.filter(F.col("__t") == 1).select(F.col("__s").alias("__v"))
-    outdeg = e.groupBy("__s").agg(F.count(F.lit(1)).alias("__od"))
-    ranks = v.select(
-        "__v",
-        F.when(F.col("__v") == F.lit(source), F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("__r"),
-    )
-    base = F.when(F.col("__v") == F.lit(source), F.lit(1.0 - damping)).otherwise(
-        F.lit(0.0)
-    )
-    for _ in range(n_iters):
-        contrib = (
-            e.join(outdeg, "__s")
-            .join(ranks, e["__s"] == F.col("__v"))
-            .select(
-                F.col("__d"),
-                (F.col("__r") / F.col("__od")).cast("decimal(38,18)").alias("__c"),
-            )
-            .groupBy("__d")
-            .agg(F.sum("__c").alias("__sum"))
-        )
-        ranks = (
-            ranks.select("__v")
-            .join(contrib, ranks["__v"] == contrib["__d"], "left")
-            .select(
-                "__v",
-                F.round(
-                    base
-                    + F.lit(damping)
-                    * F.coalesce(
-                        F.col("__sum"), F.lit(0).cast("decimal(38,18)")
-                    ).cast("double"),
-                    12,
-                ).alias("__r"),
-            )
-        )
-    return ranks.select(F.col("__v").alias(id_col), F.col("__r").alias("ppr"))
 
 
 def hits(
@@ -889,21 +1048,7 @@ def hits(
     """
     if n_iters < 1:
         raise ValueError("n_iters must be >= 1")
-    # e feeds both half-step joins every iteration and verts is consumed
-    # by the initial hubs plus the final re-attach joins; one eager
-    # checkpoint each pins the source at one read (was 4x at the
-    # default horizon per the cross-execution meter).
-    e = (
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("__s").alias("__v"))
-        .unionAll(e.select(F.col("__d").alias("__v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _distinct_edges_and_vertices(edges, src_col, dst_col)
     hubs = verts.select("__v", F.lit(1).cast("long").alias("__h"))
     auths = None
     for _ in range(n_iters):
@@ -954,25 +1099,14 @@ def clustering_coefficient(
     explode+groupBy for corner counts, one join; everything keyed on
     vertex ids.
     """
-    s, d = F.col(src_col), F.col(dst_col)
     # canon feeds the degree aggregate (two union branches) AND the
     # triangle enumeration's three internal consumers — five upstream
     # re-reads of the source without materialization
     # (scripts/audit_corpus_passes.py measured four full orders reads).
     # One eager O(E) checkpoint of the canonical edge set collapses
     # them to one source read.
-    canon = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        canon.select(F.col("a").alias("v"))
-        .unionAll(canon.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    canon = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
+    deg = _endpoints(canon).groupBy("v").agg(F.count(F.lit(1)).alias("degree"))
     tri_per_v = (
         _oriented_triangles(canon, materialize=True)
         .select(F.explode(F.array("u", "y", "z")).alias("v"))
@@ -1019,22 +1153,11 @@ def degree_assortativity(
     endpoint degrees + exact_corr's single map-combinable aggregate."""
     from duckdb_graphar_spark.operators.stats import exact_corr
 
-    s, d = F.col(src_col), F.col(dst_col)
     # canon feeds the degree aggregate (two union branches) and the
     # symmetrized pair relation (two more); one eager O(E) checkpoint
     # pins the source at one read (was 3x).
-    canon = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        canon.select(F.col("a").alias("v"))
-        .unionAll(canon.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    canon = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
+    deg = _endpoints(canon).groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     pairs = canon.select(F.col("a").alias("u"), F.col("b").alias("w")).unionAll(
         canon.select(F.col("b").alias("u"), F.col("a").alias("w"))
     )
@@ -1069,7 +1192,6 @@ def common_neighbor_candidates(
     one (u, w) groupBy, an anti-join against the edge set, and two
     degree stamps; union size = deg(u)+deg(w)−cn, so no neighbor-set
     materialization anywhere."""
-    s, d = F.col(src_col), F.col(dst_col)
     # EAGER checkpoint of the canonical edge relation: deg below is a
     # lazily-checkpointed frame, i.e. its OWN RDD lineage — its
     # materialization re-ran the whole canon subtree outside the final
@@ -1080,12 +1202,7 @@ def common_neighbor_candidates(
     # (adamic_adar_candidates keeps the 2-pass shape — there the same
     # checkpoint flipped the weight-stamp join's build side and timed
     # 1.4x slower; see its comment.)
-    canon = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    canon = _undirected(edges, src_col, dst_col).localCheckpoint(eager=True)
     nb = canon.select(F.col("a").alias("c"), F.col("b").alias("n")).unionAll(
         canon.select(F.col("b").alias("c"), F.col("a").alias("n"))
     )
@@ -1172,7 +1289,6 @@ def adamic_adar_candidates(
     published score is one double cast rounded to 6 — the decimal, not
     the double, is the sort key, so the top-k cut is engine-stable.
     """
-    s, d = F.col(src_col), F.col(dst_col)
     # deg's lazy checkpoint compiles as its own RDD lineage, so its
     # materialization re-reads the source outside the final query's
     # exchange reuse — the meter reads 2.0 passes.  Both 1-pass
@@ -1183,11 +1299,7 @@ def adamic_adar_candidates(
     # second pass is a 2-column pruned scan — at scale comparable to
     # the |E|-row checkpoint write+read the 1-pass shape pays instead,
     # so the r12 shape stands.
-    canon = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
+    canon = _undirected(edges, src_col, dst_col)
     nb = canon.select(F.col("a").alias("c"), F.col("b").alias("n")).unionAll(
         canon.select(F.col("b").alias("c"), F.col("a").alias("n"))
     )
@@ -1277,20 +1389,7 @@ def katz_centrality(
     if not 1 <= n_iters <= 16:
         raise ValueError("n_iters must be in [1, 16]")
     unit = 1 << n_iters
-    # e feeds one score join per iteration and verts rebuilds x every
-    # round (plus the init); one eager checkpoint each pins the source
-    # at one read (was 4x at the default horizon).
-    e = (
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("__s").alias("__v"))
-        .unionAll(e.select(F.col("__d").alias("__v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _distinct_edges_and_vertices(edges, src_col, dst_col)
     x = verts.select("__v", F.lit(unit).cast("long").alias("__u"))
     for _ in range(n_iters):
         s = (
@@ -1364,12 +1463,7 @@ def bipartiteness(
     # storage class as the CC operator's own internal sym checkpoint)
     # collapses all of them to one.
     e = edges.select(s.alias("u"), d.alias("w")).localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("u").alias("v"))
-        .unionAll(e.select(F.col("w").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = _endpoints(e, "u", "w").distinct().localCheckpoint(eager=True)
     base = connected_components(
         e.select(F.col("u").alias("id_a"), F.col("w").alias("id_b")), verts
     )
@@ -1438,12 +1532,7 @@ def ktruss(
     """
     if k < 3:
         raise ValueError("k-truss needs k >= 3 (k-2 >= 1)")
-    s, d = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
+    e = _undirected(edges, src_col, dst_col)
 
     def support(e_df: DataFrame) -> DataFrame:
         # each triangle (degree-ordered enumeration, exactly once)
@@ -1501,25 +1590,24 @@ def _min_label_fixpoint(
     *,
     max_iters: int,
     tag_col: str | None = None,
+    error: Exception | None = None,
 ) -> DataFrame:
     """Directed min-label propagation to FIXPOINT: lab(v) ← min(lab(v),
     min lab(w) over edges v→w), iterated until a full pass changes no
     label — so lab(v) converges to min(id(u) : u reachable FROM v,
     including v).  ``edges`` is (u, w); ``labels`` is (v, lab) seeding
-    lab(v)=v.  Raises RuntimeError if ``max_iters`` passes don't
-    converge — the caller gets exact results or an error, never a
-    silently-partial closure (the kcore(until_stable) discipline).
+    lab(v)=v.  Over a SYMMETRIC edge set this is connected components
+    (``dedup.connected_components``' distributed path).  Raises
+    ``error`` (default: a RuntimeError) if ``max_iters`` passes don't
+    converge — the loop is :func:`_fixpoint`, exact or raise, one Spark
+    job per pass.
 
     Each pass combines the one-hop neighbor-min with the POINTER-
     DOUBLING shortcut lab(v) ← min(lab(v), lab(lab(v))) — valid for
     reachability min-labels because lab(v) is (inductively) a vertex
     reachable from v, so everything reachable from lab(v) is reachable
     from v; the fixpoint is the same unique min-reachable-id labeling,
-    reached in O(log diameter) passes instead of O(diameter) (the
-    connected_components discipline applied to the directed case).
-    One Spark JOB per pass: the per-pass frame is lazily checkpointed
-    and materialized by the convergence-count action itself; the label
-    projection over the checkpointed frame is free lineage.
+    reached in O(log diameter) passes instead of O(diameter).
 
     ``tag_col``: optional extra key column present on BOTH ``edges``
     and ``labels`` — propagation runs independently within each tag
@@ -1528,8 +1616,8 @@ def _min_label_fixpoint(
     forward and backward sweeps as two tags of one fixpoint, so the
     pass count per peel round is max(fw, bw) instead of fw + bw)."""
     tags = [] if tag_col is None else [tag_col]
-    lab = labels.localCheckpoint(eager=True)
-    for _ in range(max_iters):
+
+    def step(lab: DataFrame) -> DataFrame:
         nbr = lab.select(
             F.col("v").alias("__w"),
             *[F.col(t).alias(f"__wt_{t}") for t in tags],
@@ -1552,7 +1640,7 @@ def _min_label_fixpoint(
             *[F.col(t).alias(f"__t_{t}") for t in tags],
             F.col("lab").alias("__ll"),
         )
-        stepped = (
+        return (
             lab.join(
                 succ.groupBy("v", *tags).agg(F.min("__cand").alias("__m")),
                 ["v", *tags],
@@ -1578,14 +1666,18 @@ def _min_label_fixpoint(
                 ).alias("__new"),
                 F.col("lab"),
             )
-        ).localCheckpoint(eager=False)
-        changed = stepped.filter(F.col("__new") < F.col("lab")).count()
-        lab = stepped.select("v", *tags, F.col("__new").alias("lab"))
-        if changed == 0:
-            return lab
-    raise RuntimeError(
-        f"_min_label_fixpoint: no fixpoint within {max_iters} rounds "
-        "(raise max_iters; propagation needs O(log(longest shortest path)) passes)"
+        )
+
+    return _fixpoint(
+        labels.localCheckpoint(eager=True),
+        step,
+        max_iters=max_iters,
+        value="lab",
+        error=error
+        or RuntimeError(
+            f"_min_label_fixpoint: no fixpoint within {max_iters} rounds "
+            "(raise max_iters; propagation needs O(log(longest shortest path)) passes)"
+        ),
     )
 
 
@@ -1629,11 +1721,7 @@ def scc(
     O(|E|) shuffle like one connected-components round."""
     s, d = F.col(src_col), F.col(dst_col)
     e = edges.select(s.alias("u"), d.alias("w")).filter(F.col("u") != F.col("w")).distinct()
-    verts = (
-        e.select(F.col("u").alias("v"))
-        .unionAll(e.select(F.col("w").alias("v")))
-        .distinct()
-    )
+    verts = _endpoints(e, "u", "w").distinct()
     # self-loop-only vertices are their own SCCs; they're in verts via
     # the pre-filter union below
     loops = (
@@ -1837,9 +1925,9 @@ def condensation_levels(
     condensation — the dependency-depth / build-stage primitive
     (level k can only start after every level < k it depends on).
 
-    EXACT or raises: the longest-path fixpoint relaxes
-    lev(c) ← max(lev(c), max over preds lev(p)+1) one O(|E'|) join per
-    pass and must converge within ``max_iters`` (the condensation's
+    EXACT or raises: the longest-path fixpoint (:func:`_fixpoint`)
+    relaxes lev(c) ← max(lev(c), max over preds lev(p)+1) one O(|E'|)
+    join per pass and must converge within ``max_iters`` (the condensation's
     depth is ≤ its node count; non-convergence means max_iters is too
     small — a cycle is impossible, scc contracted them all).
 
@@ -1877,6 +1965,7 @@ def condensation_levels(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    lev = None
     if driver_threshold > 0:
         probe = cond.limit(driver_threshold + 1).collect()
         if len(probe) <= driver_threshold:
@@ -1909,9 +1998,6 @@ def condensation_levels(
                     "condensation_levels: cycle in the condensation "
                     "(scc labeling is broken)"
                 )
-            sizes = labels.groupBy(F.col("label").alias("c")).agg(
-                F.count(F.lit(1)).alias("n_vertices")
-            )
             pos_rows = [(int(c), int(l)) for c, l in levmap.items() if l > 0]
             comps = labels.select(F.col("label").alias("c")).distinct()
             if pos_rows:
@@ -1921,47 +2007,41 @@ def condensation_levels(
                 )
             else:
                 lev = comps.select("c", F.lit(0).cast("long").alias("lev"))
-            return lev.join(sizes, "c").select(
-                F.col("c").alias("component"),
-                F.col("lev").cast("long").alias("level"),
-                F.col("n_vertices").cast("long").alias("n_vertices"),
-            )
-    lev = labels.select(F.col("label").alias("c")).distinct().select(
-        "c", F.lit(0).cast("long").alias("lev")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        pred = cond.join(
-            lev.select(F.col("c").alias("__p"), F.col("lev").alias("__pl")),
-            cond["cs"] == F.col("__p"),
-        ).select(F.col("cd").alias("c"), (F.col("__pl") + 1).alias("__cand"))
-        relaxed = (
-            lev.join(pred.groupBy("c").agg(F.max("__cand").alias("__m")), "c", "left")
-            .select(
+    if lev is None:
+
+        def relax(lev: DataFrame) -> DataFrame:
+            pred = cond.join(
+                lev.select(F.col("c").alias("__p"), F.col("lev").alias("__pl")),
+                cond["cs"] == F.col("__p"),
+            ).select(F.col("cd").alias("c"), (F.col("__pl") + 1).alias("__cand"))
+            return lev.join(
+                pred.groupBy("c").agg(F.max("__cand").alias("__m")), "c", "left"
+            ).select(
                 "c",
-                F.greatest(F.col("lev"), F.coalesce("__m", F.col("lev"))).alias(
-                    "__new"
-                ),
+                F.greatest(F.col("lev"), F.coalesce("__m", F.col("lev"))).alias("__new"),
                 "lev",
             )
-            # lazy checkpoint, materialized by the changed-count action:
-            # 1 job per relaxation pass instead of 3 (the lev projection
-            # over the checkpointed frame is free lineage)
-            .localCheckpoint(eager=False)
+
+        lev = _fixpoint(
+            labels.select(F.col("label").alias("c"))
+            .distinct()
+            .select("c", F.lit(0).cast("long").alias("lev"))
+            .localCheckpoint(eager=True),
+            relax,
+            max_iters=max_iters,
+            value="lev",
+            error=RuntimeError(
+                f"condensation_levels: no fixpoint within {max_iters} relaxation "
+                "passes (condensation deeper than max_iters)"
+            ),
         )
-        changed = relaxed.filter(F.col("__new") > F.col("lev")).count()
-        lev = relaxed.select("c", F.col("__new").alias("lev"))
-        if changed == 0:
-            sizes = labels.groupBy(F.col("label").alias("c")).agg(
-                F.count(F.lit(1)).alias("n_vertices")
-            )
-            return lev.join(sizes, "c").select(
-                F.col("c").alias("component"),
-                F.col("lev").cast("long").alias("level"),
-                F.col("n_vertices").cast("long").alias("n_vertices"),
-            )
-    raise RuntimeError(
-        f"condensation_levels: no fixpoint within {max_iters} relaxation "
-        "passes (condensation deeper than max_iters)"
+    sizes = labels.groupBy(F.col("label").alias("c")).agg(
+        F.count(F.lit(1)).alias("n_vertices")
+    )
+    return lev.join(sizes, "c").select(
+        F.col("c").alias("component"),
+        F.col("lev").cast("long").alias("level"),
+        F.col("n_vertices").cast("long").alias("n_vertices"),
     )
 
 
@@ -1976,43 +2056,20 @@ def bfs_distances(
 ) -> DataFrame:
     """Per-vertex BFS depth from ``src_vid`` → (v, dist), dist 0 = the
     source, capped at ``max_depth`` (unreached vertices are absent).
-    The per-vertex sibling of :func:`bfs_levels`' histogram — same
-    level-synchronous frontier machinery, same frontier-size-aware
-    broadcast; driver state is the loop counter."""
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")).persist()
-    pinned: list[DataFrame] = [e]
-    try:
-        frontier = spark.range(1).select(F.lit(src_vid).cast("long").alias("__v"))
-        visited = frontier
-        result = frontier.select(F.col("__v"), F.lit(0).alias("dist"))
-        frontier_n = 1
-        for depth in range(1, max_depth + 1):
-            nxt = _expand_frontier(
-                e, frontier, visited, broadcast=frontier_n <= broadcast_threshold
-            ).persist()
-            pinned.append(nxt)
-            n = nxt.count()
-            if n == 0:
-                break
-            result = result.unionAll(nxt.select("__v", F.lit(depth).alias("dist")))
-            visited = visited.unionAll(nxt)
-            frontier = nxt
-            frontier_n = n
-            if depth % 4 == 0:
-                frontier = frontier.localCheckpoint(eager=False)
-                visited = visited.localCheckpoint(eager=False)
-                result = result.localCheckpoint(eager=False)
-        # EAGER checkpoint before the finally unpersists the edge/frontier
-        # caches: the returned DataFrame must not recompute every BFS
-        # level from raw lineage at the caller's first action (the result
-        # is O(reached vertices) rows — checkpoint-sized by construction)
-        return result.select(F.col("__v").alias("v"), "dist").localCheckpoint(
-            eager=True
-        )
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
+    The per-vertex sibling of :func:`bfs_levels`' histogram, from the
+    same :func:`_bfs_sweep`; driver state is the level sizes.  The
+    result is eagerly checkpointed (O(reached vertices) rows), so it
+    never recomputes the BFS from raw lineage."""
+    _, reached = _bfs_sweep(
+        edges,
+        [src_vid],
+        src_col=src_col,
+        dst_col=dst_col,
+        max_depth=max_depth,
+        broadcast_threshold=broadcast_threshold,
+        distances=True,
+    )
+    return reached.select(F.col("__v").alias("v"), "dist")
 
 
 def pseudo_diameter(
@@ -2035,10 +2092,7 @@ def pseudo_diameter(
     level) + ONE bounded 1-row collect between them (the peripheral
     pick) — the double-sweep pattern used by graph tools to seed
     diameter computations."""
-    und = edges.filter(F.col(src_col) != F.col(dst_col)).select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    )
-    both = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    both = _symmetric(edges, src_col, dst_col)
     d1 = bfs_distances(
         both, start, src_col="a", dst_col="b", max_depth=max_depth
     )
@@ -2071,70 +2125,26 @@ def multi_source_bfs(
     :func:`bfs_distances` |S| times would pay |S| full edge scans per
     level instead of one.
 
-    Same machinery discipline as :func:`bfs_distances`: each level is
+    The level loop is :func:`_bfs_sweep` keyed by source: each level is
     ONE join of the edge relation against the (broadcast-when-small)
     composite frontier, distinct + anti-join against the per-source
-    visited set, lineage cut every 4 levels, edge cache unpersisted
-    after an eager checkpoint of the O(Σ reached) result."""
+    visited set fused into one aggregate, and an eager checkpoint of the
+    O(Σ reached) result."""
     if not sources:
         raise ValueError("sources must be non-empty")
     if len(set(sources)) != len(sources):
         raise ValueError("sources must be distinct")
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).persist()
-    pinned: list[DataFrame] = [e]
-    try:
-        frontier = spark.createDataFrame(
-            [(int(s),) for s in sources], "__src long"
-        ).select("__src", F.col("__src").alias("__v"))
-        visited = frontier
-        result = frontier.withColumn("dist", F.lit(0))
-        frontier_n = len(sources)
-        for depth in range(1, max_depth + 1):
-            fr = (
-                F.broadcast(frontier)
-                if frontier_n <= broadcast_threshold
-                else frontier
-            )
-            # distinct + anti-join fused into ONE aggregate (the scc
-            # union-tag trick): tag expansion rows 0 and visited rows 1,
-            # group by (source, vertex), keep groups never seen — one
-            # exchange per level instead of the r12 distinct shuffle
-            # FOLLOWED BY an anti-join of both sides
-            nxt = (
-                e.join(fr, e["__s"] == F.col("__v"))
-                .select("__src", F.col("__d").alias("__v"), F.lit(0).alias("__t"))
-                .unionByName(
-                    visited.select("__src", "__v", F.lit(1).alias("__t"))
-                )
-                .groupBy("__src", "__v")
-                .agg(F.max("__t").alias("__mt"))
-                .filter(F.col("__mt") == 0)
-                .select("__src", "__v")
-                .persist()
-            )
-            pinned.append(nxt)
-            n = nxt.count()
-            if n == 0:
-                break
-            result = result.unionAll(
-                nxt.select("__src", "__v", F.lit(depth).alias("dist"))
-            )
-            visited = visited.unionAll(nxt)
-            frontier = nxt
-            frontier_n = n
-            if depth % 4 == 0:
-                frontier = frontier.localCheckpoint(eager=False)
-                visited = visited.localCheckpoint(eager=False)
-                result = result.localCheckpoint(eager=False)
-        return result.select(
-            F.col("__src").alias("source"), F.col("__v").alias("v"), "dist"
-        ).localCheckpoint(eager=True)
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
+    _, reached = _bfs_sweep(
+        edges,
+        sources,
+        src_col=src_col,
+        dst_col=dst_col,
+        max_depth=max_depth,
+        broadcast_threshold=broadcast_threshold,
+        keyed=True,
+        distances=True,
+    )
+    return reached.select(F.col("__src").alias("source"), F.col("__v").alias("v"), "dist")
 
 
 def seed_set_closeness(
@@ -2217,29 +2227,15 @@ def luby_mis(
         F.md5(F.concat_ws("\x1f", F.lit(seed), F.col("v").cast("string"))),
         F.lpad(F.col("v").cast("string"), 20, "0"),
     )
-    if adjacency is not None:
-        # caller-owned: do NOT persist/unpersist here — unpersisting a
+    with _pinned() as pin:
+        # a caller-owned adjacency is NOT pinned here — unpersisting a
         # plan-identical frame would evict the caller's own cache entry
-        adj = adjacency.select("a", "b")
-        pinned: list[DataFrame] = []
-    else:
-        e = edges.filter(F.col(src_col) != F.col(dst_col)).select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-        )
         adj = (
-            e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .persist()
+            adjacency.select("a", "b")
+            if adjacency is not None
+            else pin(_symmetric(edges, src_col, dst_col).distinct())
         )
-        pinned = [adj]
-    try:
-        und = (
-            adj.select(F.col("a").alias("v"))
-            .distinct()
-            .withColumn("p", prio)
-            .persist()
-        )
-        pinned.append(und)
+        und = pin(adj.select(F.col("a").alias("v")).distinct().withColumn("p", prio))
         statuses: list[DataFrame] = []
         for _ in range(rounds):
             nb_min = (
@@ -2251,26 +2247,20 @@ def luby_mis(
                 .groupBy(F.col("a").alias("v"))
                 .agg(F.min("__pb").alias("__mn"))
             )
-            new_m = (
+            new_m = pin(
                 und.join(nb_min, "v", "left")
                 .filter(F.col("__mn").isNull() | (F.col("p") < F.col("__mn")))
                 .select("v")
-                .persist()
             )
-            pinned.append(new_m)
             # neighbors of the joiners (possibly with duplicates — the
             # semi-join against the unique `und` re-establishes
             # uniqueness for free, so no distinct shuffle is needed)
             nbr = adj.join(new_m.select(F.col("v").alias("a")), "a").select(
                 F.col("b").alias("v")
             )
-            removed = (
-                und.select("v")
-                .join(nbr, "v", "left_semi")
-                .join(new_m, "v", "left_anti")
-                .persist()
+            removed = pin(
+                und.select("v").join(nbr, "v", "left_semi").join(new_m, "v", "left_anti")
             )
-            pinned.append(removed)
             statuses.append(new_m.withColumn("status", F.lit("in")))
             statuses.append(removed.withColumn("status", F.lit("out")))
             # lazy checkpoint + count: ONE job materializes the round's
@@ -2305,11 +2295,8 @@ def luby_mis(
         for s in statuses[1:]:
             result = result.unionByName(s)
         # one eager job materializes the result and detaches it from
-        # the pinned caches before the finally-unpersist
+        # the pinned caches before they are released
         return result.localCheckpoint(eager=True)
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
 
 
 def greedy_coloring(
@@ -2342,26 +2329,13 @@ def greedy_coloring(
     beyond the loop counters."""
     if colors < 1:
         raise ValueError("colors must be >= 1")
-    # build the SYMMETRIC self-loop-free adjacency once — every color
-    # class restricts it with two semi-joins (symmetry is preserved by
-    # restricting both endpoints to the same vertex set), instead of
-    # paying a fresh union+distinct symmetrization per class
-    base = edges.filter(F.col(src_col) != F.col(dst_col)).select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    )
-    adj = (
-        base.unionAll(base.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    pinned = [adj]
-    try:
-        remaining = (
-            adj.select(F.col("a").alias("v"))
-            .distinct()
-            .persist()
-        )
-        pinned.append(remaining)
+    with _pinned() as pin:
+        # build the SYMMETRIC self-loop-free adjacency once — every color
+        # class restricts it with two semi-joins (symmetry is preserved by
+        # restricting both endpoints to the same vertex set), instead of
+        # paying a fresh union+distinct symmetrization per class
+        adj = pin(_symmetric(edges, src_col, dst_col).distinct())
+        remaining = pin(adj.select(F.col("a").alias("v")).distinct())
         out: DataFrame | None = None
         for c in range(colors):
             radj = (
@@ -2409,9 +2383,6 @@ def greedy_coloring(
             else remaining.withColumn("color", F.lit(-1))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
 
 
 def random_walks(
@@ -2440,14 +2411,17 @@ def random_walks(
     With |S| walk seeds the state is O(|S|) rows per step."""
     if not sources:
         raise ValueError("sources must be non-empty")
+    if len(set(sources)) != len(sources):
+        raise ValueError("sources must be distinct")
     if steps < 1:
         raise ValueError("steps must be >= 1")
     spark = edges.sparkSession
-    e = edges.filter(F.col(src_col) != F.col(dst_col)).select(
-        F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).distinct().persist()
-    pinned = [e]
-    try:
+    with _pinned() as pin:
+        e = pin(
+            edges.filter(F.col(src_col) != F.col(dst_col))
+            .select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
+            .distinct()
+        )
         cur = spark.createDataFrame(
             [(int(s), int(s)) for s in sources], "walk_id long, v long"
         )
@@ -2479,9 +2453,6 @@ def random_walks(
             cur = nxt.localCheckpoint(eager=False)
             out = out.unionByName(cur.withColumn("step", F.lit(s)))
         return out.select("walk_id", "step", "v").localCheckpoint(eager=True)
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
 
 
 def neighborhood_function(
@@ -2516,16 +2487,13 @@ def neighborhood_function(
     standard error so the flag is stable across engines)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = edges.filter(F.col(src_col) != F.col(dst_col)).select(
-        F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-    ).distinct().persist()
-    pinned = [e]
-    try:
-        verts = (
-            e.select(F.col("__s").alias("v"))
-            .unionAll(e.select(F.col("__d").alias("v")))
+    with _pinned() as pin:
+        e = pin(
+            edges.filter(F.col(src_col) != F.col(dst_col))
+            .select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
             .distinct()
         )
+        verts = _endpoints(e, "__s", "__d").distinct()
         sk = verts.groupBy("v").agg(
             F.hll_sketch_agg("v", F.lit(lg_config_k)).alias("__sk")
         )
@@ -2572,9 +2540,6 @@ def neighborhood_function(
                 <= F.col("ball_exact") * F.lit(0.08)
             ).alias("within_tolerance"),
         )
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)
 
 
 def minimum_spanning_forest(
@@ -2625,12 +2590,8 @@ def minimum_spanning_forest(
 
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    base = edges.filter(F.col(src_col) != F.col(dst_col))
     if weight_col is None:
-        e = base.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        ).distinct()
+        e = _undirected(edges, src_col, dst_col)
     else:
         # the zero-padded-decimal sort key is only an order embedding
         # for NON-NEGATIVE INTEGERS (-9 would sort after -5; floats
@@ -2638,7 +2599,7 @@ def minimum_spanning_forest(
         # of documenting it: integral type checked driver-side (free),
         # negativity checked in-plan via raise_error (no extra job;
         # fails the first task that sees a bad row)
-        wfield = {f.name: f.dataType for f in base.schema.fields}.get(weight_col)
+        wfield = {f.name: f.dataType for f in edges.schema.fields}.get(weight_col)
         if wfield is None:
             raise ValueError(f"weight_col {weight_col!r} not in edges schema")
         if not isinstance(wfield, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
@@ -2666,11 +2627,7 @@ def minimum_spanning_forest(
         # multigraph: parallel pairs keep their cheapest edge
         # (map-combinable MIN — never an array of parallel edges)
         e = (
-            base.select(
-                F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-                F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-                guarded.alias("__wv"),
-            )
+            _undirected(edges, src_col, dst_col, guarded.alias("__wv"))
             .groupBy("a", "b")
             .agg(F.min("__wv").alias("__wv"))
         )
@@ -2691,16 +2648,9 @@ def minimum_spanning_forest(
         if weight_col is None
         else F.concat(F.lpad(F.col("__wv").cast("string"), 20, "0"), tie)
     )
-    e = e.withColumn("__w", w).persist()
-    pinned = [e]
-    try:
-        verts = (
-            e.select(F.col("a").alias("v"))
-            .unionAll(e.select(F.col("b").alias("v")))
-            .distinct()
-            .persist()
-        )
-        pinned.append(verts)
+    with _pinned() as pin:
+        e = pin(e.withColumn("__w", w))
+        verts = pin(_endpoints(e).distinct())
         lbl = verts.select("v", F.col("v").alias("label"))
         forest: DataFrame | None = None
         for r in range(rounds):
@@ -2793,6 +2743,3 @@ def minimum_spanning_forest(
             fields.append(T.StructField("round_added", T.IntegerType(), False))
             return spark.createDataFrame([], T.StructType(fields))
         return forest.localCheckpoint(eager=True)
-    finally:
-        for df in pinned:
-            df.unpersist(blocking=False)

@@ -548,11 +548,19 @@ def test_condensation_levels_layered_dag_of_cycles(spark):
         (2, 5),                  # B -> C  => D = A->B->C->D, level 3
     ]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        r.component: (r.level, r.n_vertices)
-        for r in condensation_levels(df, src_col="src", dst_col="dst").collect()
+    # the default threshold takes the driver-side topological DP; 0
+    # forces the distributed relaxation loop — both must agree
+    by_path = {
+        threshold: {
+            r.component: (r.level, r.n_vertices)
+            for r in condensation_levels(
+                df, src_col="src", dst_col="dst", driver_threshold=threshold
+            ).collect()
+        }
+        for threshold in (100_000, 0)
     }
-    assert got == {0: (0, 2), 2: (1, 2), 5: (2, 1), 4: (3, 1)}
+    assert by_path[100_000] == {0: (0, 2), 2: (1, 2), 5: (2, 1), 4: (3, 1)}
+    assert by_path[0] == by_path[100_000]
 
 
 def test_multi_source_bfs_matches_single_source_and_dedups(spark):
@@ -685,6 +693,21 @@ def test_random_walks_follow_edges_and_terminate(spark):
         seq = [path[s] for s in sorted(path)]
         for a, b in zip(seq, seq[1:]):
             assert (a, b) in eset  # different seed, still valid walks
+
+
+def test_random_walks_rejects_duplicate_sources(spark):
+    """walk_id is the source id, so a repeated source would merge two
+    walks under one id (two step-0 rows, then one row per step):
+    duplicates raise, as in multi_source_bfs."""
+    import pytest as _pt
+
+    from duckdb_graphar_spark.operators.graph import random_walks
+
+    edges = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 0), (2, 9)], "src long, dst long"
+    )
+    with _pt.raises(ValueError, match="sources must be distinct"):
+        random_walks(edges, [0, 0], steps=3, src_col="src", dst_col="dst")
 
 
 def test_hyperball_exact_on_toy_graph(spark):
@@ -1108,13 +1131,19 @@ def test_iterative_family_reads_source_once(spark, tmp_path):
     parquet was re-scanned 2-4x per run (cross-execution meter,
     scripts/measure_source_reads.py)."""
     from duckdb_graphar_spark.operators.graph import (
+        bfs_distances,
         degree_assortativity,
+        greedy_coloring,
         hits,
         katz_centrality,
         kcore,
         label_propagation,
+        luby_mis,
+        minimum_spanning_forest,
+        multi_source_bfs,
         pagerank,
         personalized_pagerank,
+        random_walks,
         sssp,
         triangle_count,
     )
@@ -1141,6 +1170,14 @@ def test_iterative_family_reads_source_once(spark, tmp_path):
         "label_propagation": label_propagation(e, src_col="src", dst_col="dst"),
         "triangle_count": triangle_count(e, src_col="src", dst_col="dst"),
         "assortativity": degree_assortativity(e, src_col="src", dst_col="dst"),
+        "bfs_distances": bfs_distances(e, 0, src_col="src", dst_col="dst"),
+        "multi_source_bfs": multi_source_bfs(e, [0, 2], src_col="src", dst_col="dst"),
+        "random_walks": random_walks(e, [0, 2], src_col="src", dst_col="dst"),
+        "luby_mis": luby_mis(e, src_col="src", dst_col="dst"),
+        "greedy_coloring": greedy_coloring(e, src_col="src", dst_col="dst"),
+        "minimum_spanning_forest": minimum_spanning_forest(
+            e, src_col="src", dst_col="dst"
+        ),
     }
     # sanity: values stay correct on the toy graph
     assert frames["triangle_count"].collect()[0].n_triangles == 2
@@ -1148,6 +1185,95 @@ def test_iterative_family_reads_source_once(spark, tmp_path):
         0: 0, 1: 1, 2: 3, 3: 8
     }
     assert {r.id for r in frames["kcore"].collect()} == {0, 1, 2, 3}
+    assert {r.v: r.dist for r in frames["bfs_distances"].collect()} == {
+        0: 0, 1: 1, 2: 2, 3: 3
+    }
     for name, df in frames.items():
         df.collect()
         assert _final_plan_file_scans(df) == 0, name
+
+
+def _cached_frames(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+def test_pinned_holds_frames_until_the_block_exits(spark):
+    """``_pinned`` keeps a pinned frame cached for the whole block and
+    releases it on exit, on error too."""
+    from duckdb_graphar_spark.operators.graph import _pinned
+
+    before = _cached_frames(spark)
+    with _pinned() as pin:
+        df = pin(spark.range(7).selectExpr("id * 5 as x"))
+        assert df.count() == 7
+        assert df.is_cached and _cached_frames(spark) == before + 1
+    assert _cached_frames(spark) == before
+    with pytest.raises(RuntimeError, match="boom"):
+        with _pinned() as pin:
+            pin(spark.range(3).selectExpr("id + 1 as y"))
+            raise RuntimeError("boom")
+    assert _cached_frames(spark) == before
+
+
+def test_persisting_operators_release_their_caches(spark, tmp_path):
+    """Every operator that persists intermediates (through ``_pinned``)
+    leaves no cached DataFrame behind once it returns, and a returned
+    frame does not read the released pins: it was checkpointed while
+    they were held, so collecting it later re-scans no source file."""
+    from duckdb_graphar_spark.operators import graph as G
+
+    p = str(tmp_path / "edges_pinned.parquet")
+    spark.createDataFrame(
+        [(0, 1, 3), (1, 2, 1), (2, 0, 2), (2, 3, 5), (3, 4, 1), (4, 2, 4)],
+        "src long, dst long, w long",
+    ).write.parquet(p)
+    edges = spark.read.parquet(p)
+    kw = {"src_col": "src", "dst_col": "dst"}
+    runs = {
+        "bfs_length": lambda: G.bfs_length(edges, 0, 4, driver_threshold=0, **kw),
+        "bfs_levels": lambda: G.bfs_levels(edges, 0, **kw),
+        "bfs_distances": lambda: G.bfs_distances(edges, 0, **kw),
+        "multi_source_bfs": lambda: G.multi_source_bfs(edges, [0, 3], **kw),
+        "pseudo_diameter": lambda: G.pseudo_diameter(edges, 0, **kw),
+        "luby_mis": lambda: G.luby_mis(edges, **kw),
+        "greedy_coloring": lambda: G.greedy_coloring(edges, **kw),
+        "random_walks": lambda: G.random_walks(edges, [0, 3], **kw),
+        "neighborhood_function": lambda: G.neighborhood_function(edges, **kw),
+        "minimum_spanning_forest": lambda: G.minimum_spanning_forest(edges, **kw),
+        "weighted_spanning_forest": lambda: G.minimum_spanning_forest(
+            edges, weight_col="w", **kw
+        ),
+    }
+    # neighborhood_function returns a lazy frame over its checkpoints
+    # and bfs_levels/pseudo_diameter driver-built rows: only the frames
+    # checkpointed under the pins are held to zero file scans
+    checkpointed = {
+        "bfs_distances", "multi_source_bfs", "luby_mis", "greedy_coloring",
+        "random_walks", "minimum_spanning_forest", "weighted_spanning_forest",
+    }
+    before = _cached_frames(spark)
+    got = {}
+    for name, run in runs.items():
+        out = run()
+        assert _cached_frames(spark) == before, name
+        if name == "bfs_length":
+            got[name] = out
+            continue
+        got[name] = sorted(map(tuple, out.collect()))
+        if name in checkpointed:
+            assert _final_plan_file_scans(out) == 0, name
+    assert got["bfs_length"] == 4
+    assert got["bfs_levels"] == [(0, 1), (1, 1), (2, 1), (3, 1), (4, 1)]
+    assert got["bfs_distances"] == [(0, 0), (1, 1), (2, 2), (3, 3), (4, 4)]
+    assert got["multi_source_bfs"] == [
+        (0, 0, 0), (0, 1, 1), (0, 2, 2), (0, 3, 3), (0, 4, 4),
+        (3, 0, 3), (3, 1, 4), (3, 2, 2), (3, 3, 0), (3, 4, 1),
+    ]
+    assert got["pseudo_diameter"] == [(0, 3, 2, 2)]
+    # the underlying undirected graph is connected on 5 vertices, so
+    # either weight mode spans it with 4 edges
+    assert len(got["minimum_spanning_forest"]) == 4
+    assert len(got["weighted_spanning_forest"]) == 4
+    assert {r[0] for r in got["greedy_coloring"]} == {0, 1, 2, 3, 4}
+    assert {r[0] for r in got["luby_mis"]} == {0, 1, 2, 3, 4}
+    assert {r[0] for r in got["random_walks"]} == {0, 3}
