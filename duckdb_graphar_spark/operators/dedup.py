@@ -375,8 +375,9 @@ def connected_components(
     edges: (id_a, id_b) undirected; vertices: (v).  Returns (v, label)
     where label = min vertex id in the component.  The distributed
     path is ``graph._min_label_fixpoint`` over both orientations of
-    every edge: O(log diameter) passes of one Spark job each, raising
-    ValueError if ``max_iters`` passes do not converge.  (GraphFrames-
+    every edge: O(log diameter) passes, each its join stages plus one
+    count job, raising ValueError if ``max_iters`` passes do not
+    converge.  (GraphFrames-
     style; bounded driver state.)
 
     Adaptive fast path (same spirit as AQE's runtime broadcast

@@ -882,8 +882,8 @@ def kcore(
     result exactly SQL-replayable as an unrolled CTE chain.
 
     ``until_stable=True`` runs to the TRUE k-core instead: peel until a
-    round removes no edge (:func:`_fixpoint`: one ``count()`` job per
-    round, constant driver state), with
+    round removes no edge (:func:`_fixpoint`: one count job per round,
+    constant driver state), with
     ``n_iters`` reinterpreted as a safety cap (pass a generous cap; the
     peel provably needs ≤ |V| rounds and in practice a handful).  The
     fixed-round form stays the default because the declared driver
@@ -1599,8 +1599,8 @@ def _min_label_fixpoint(
     lab(v)=v.  Over a SYMMETRIC edge set this is connected components
     (``dedup.connected_components``' distributed path).  Raises
     ``error`` (default: a RuntimeError) if ``max_iters`` passes don't
-    converge — the loop is :func:`_fixpoint`, exact or raise, one Spark
-    job per pass.
+    converge — the loop is :func:`_fixpoint`, exact or raise, one count
+    job per pass on top of the step's join stages.
 
     Each pass combines the one-hop neighbor-min with the POINTER-
     DOUBLING shortcut lab(v) ← min(lab(v), lab(lab(v))) — valid for
