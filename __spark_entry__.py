@@ -166,27 +166,50 @@ _CMS_ORACLE = """
 _NCUST_CACHE: dict[str, int] = {}
 
 
-def _stage_event_batches(spark: SparkSession, sf_dir: str, stage: str, n: int = 3) -> None:
-    """Split the events table into ``n`` mtime-ordered single-file
-    micro-batches (event_id mod n) under ``stage`` — the shared fixture
-    for entries that must prove per-group state SPANS batches (st16,
-    st17, u07): a single-file source yields one batch and never
-    exercises the merge path."""
-    import shutil
-    import time
+def _event_batches(spark: SparkSession, sf_dir: str, split: str = "id") -> list[DataFrame]:
+    """The events table as micro-batch frames for
+    ``streaming.ops.stage_event_batches``, the fixture for entries whose
+    stream state must span batches:
 
+    - ``"id"``: three batches by event_id mod 3
+    - ``"time"``: three tiles of the global (ts, event_id) order, so
+      batch order is event-time order and a streaming fold equals the
+      batch fold
+    - ``"purchase"``: non-purchases, then purchases, so every match
+      reads the first batch's state
+    - ``"nudge"``: the whole table, then two batches 3650 and 3660 days
+      later that push the final watermark past every real row's match
+      horizon.  Each is one view and one purchase of an impossible user
+      (-1; event ids from 1e9, which the entries filter out): the rows
+      must SURVIVE a join's event_type filters, or the filter sits below
+      the watermark node and the nudge never advances it."""
     ev = _t(spark, sf_dir, "events")
-    base = time.time() - 120
-    for i in range(n):
-        tmp = os.path.join(stage, f"__part{i}")
-        ev.filter(F.col("event_id") % n == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (base + 30 * i, base + 30 * i))
+    if split == "id":
+        return [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    if split == "time":
+        tiled = ev.withColumn("__tile", F.ntile(3).over(Window.orderBy("ts", "event_id")))
+        return [tiled.filter(F.col("__tile") == i + 1).drop("__tile") for i in range(3)]
+    if split == "purchase":
+        purchase = F.col("event_type") == "purchase"
+        return [ev.filter(~purchase), ev.filter(purchase)]
+    one = ev.limit(1)
+
+    def nudge(event_id: int, days: int, event_type: str) -> DataFrame:
+        return one.select(
+            F.lit(event_id).alias("event_id"),
+            (F.col("ts") + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit(event_type).alias("event_type"),
+            F.col("value"),
+            F.col("props"),
+        )
+
+    return [ev] + [
+        nudge(1_000_000_000 + 2 * i, days, "view").unionByName(
+            nudge(1_000_000_001 + 2 * i, days, "purchase")
+        )
+        for i, days in enumerate((3650, 3660), start=1)
+    ]
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1846,7 +1869,10 @@ def u07(spark, sf):
         ParquetStreamSinkDataSource,
         read_stream_sink_output,
     )
-    from duckdb_graphar_spark.streaming.ops import read_events_stream
+    from duckdb_graphar_spark.streaming.ops import (
+        read_events_stream,
+        stage_event_batches,
+    )
 
     try:
         spark.dataSource.register(ParquetStreamSinkDataSource)
@@ -1856,7 +1882,7 @@ def u07(spark, sf):
     outdir = tempfile.mkdtemp(prefix="u07_sink_")
     ck = tempfile.mkdtemp(prefix="u07_ck_")
     try:
-        _stage_event_batches(spark, sf, stage)
+        stage_event_batches(_event_batches(spark, sf), stage)
         stream = read_events_stream(spark, stage, max_files=1).select(
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -4359,33 +4385,18 @@ def st18(spark, sf):
     staging — but the fixture is still split into two micro-batches
     (non-purchases, then purchases) so the match genuinely reads
     batch-0 state (`streaming/ops.py:stream_stream_semi_join`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         stream_stream_semi_join,
     )
 
     stage = tempfile.mkdtemp(prefix="st18_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        base = time.time() - 120
-        for i, frame in enumerate(
-            (
-                ev.filter(F.col("event_type") != "purchase"),
-                ev.filter(F.col("event_type") == "purchase"),
-            )
-        ):
-            tmp = os.path.join(stage, f"__b{i}")
-            frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "purchase"), stage)
         left = read_events_stream(spark, stage, max_files=1)
         right = read_events_stream(spark, stage, max_files=1)
         joined = stream_stream_semi_join(left, right, within="10 minutes")
@@ -4438,32 +4449,18 @@ def st19(spark, sf):
     discipline).  Three TIME-SPLIT micro-batches, so sessions genuinely
     span batch boundaries and the batch oracle holds verbatim
     (`streaming/ops.py:streaming_capped_sessions`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_capped_sessions,
     )
 
     stage = tempfile.mkdtemp(prefix="st19_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_capped_sessions(
@@ -4518,33 +4515,18 @@ def st20(spark, sf):
     max-n_seen emission (the st16/st17/st19 reconstruction).  Final
     matched=false rows equal the batch ANTI oracle
     (`streaming/ops.py:stream_stream_anti_join`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         stream_stream_anti_join,
     )
 
     stage = tempfile.mkdtemp(prefix="st20_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        base = time.time() - 120
-        for i, frame in enumerate(
-            (
-                ev.filter(F.col("event_type") != "purchase"),
-                ev.filter(F.col("event_type") == "purchase"),
-            )
-        ):
-            tmp = os.path.join(stage, f"__b{i}")
-            frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "purchase"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         out = run_to_memory(
             stream_stream_anti_join(stream), "st20_out", mode="update"
@@ -4592,33 +4574,18 @@ def st21(spark, sf):
     (`streaming/ops.py:stream_stream_anti_join(horizon_seconds=...)`).
     Same emit-and-correct protocol and max-n_seen reconstruction as
     st20."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         stream_stream_anti_join,
     )
 
     stage = tempfile.mkdtemp(prefix="st21_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        base = time.time() - 120
-        for i, frame in enumerate(
-            (
-                ev.filter(F.col("event_type") != "purchase"),
-                ev.filter(F.col("event_type") == "purchase"),
-            )
-        ):
-            tmp = os.path.join(stage, f"__b{i}")
-            frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "purchase"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         out = run_to_memory(
             stream_stream_anti_join(stream, horizon_seconds=86_400),
@@ -4667,32 +4634,18 @@ def st22(spark, sf):
     are reconstructed by max-n_seen
     (`streaming/ops.py:streaming_funnel`).  Three TIME-SPLIT batches so
     funnels genuinely progress across batch boundaries."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_funnel,
     )
 
     stage = tempfile.mkdtemp(prefix="st22_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_funnel(stream, ["view", "click", "purchase"]),
@@ -4744,32 +4697,18 @@ def st23(spark, sf):
     st22's anchor-carrying fold plus the one extra boolean that makes
     window verdicts incremental-final
     (`streaming/ops.py:streaming_funnel(max_gap_us=...)`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_funnel,
     )
 
     stage = tempfile.mkdtemp(prefix="st23_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_funnel(
@@ -4893,32 +4832,18 @@ def st25(spark, sf):
     semantics, no emit-and-correct)
     (`streaming/ops.py:streaming_last_touch`).  Three time-split
     batches make the cross-batch state carry load-bearing."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_last_touch,
     )
 
     stage = tempfile.mkdtemp(prefix="st25_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_last_touch(stream), "st25_out", mode="append"
@@ -4968,32 +4893,18 @@ def st26(spark, sf):
     loop), emissions FINAL per event (append — balances depend only on
     the past) (`streaming/ops.py:streaming_clamped_balance`).  Three
     time-split batches make the balance carry load-bearing."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_clamped_balance,
     )
 
     stage = tempfile.mkdtemp(prefix="st26_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1).withColumn(
             "delta",
             F.when(
@@ -5040,32 +4951,18 @@ def st27(spark, sf):
     vectorized factorize + first-occurrence masks, emissions FINAL per
     event (append)
     (`streaming/ops.py:streaming_running_distinct`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_running_distinct,
     )
 
     stage = tempfile.mkdtemp(prefix="st27_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_running_distinct(stream), "st27_out", mode="append"
@@ -5122,32 +5019,18 @@ def st28(spark, sf):
     family's batch/streaming matrix: last-touch (q89/st25), linear
     (q90), time-decay (q96/st28)
     (`streaming/ops.py:streaming_time_decay_attribution`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_time_decay_attribution,
     )
 
     stage = tempfile.mkdtemp(prefix="st28_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_time_decay_attribution(stream), "st28_out", mode="append"
@@ -5276,32 +5159,18 @@ def st30(spark, sf):
     outgrows int64 where q85's one-shot DECIMAL(38,0) aggregate
     wouldn't).  Three time-split batches make the interval spanning
     each batch boundary load-bearing."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_twap,
     )
 
     stage = tempfile.mkdtemp(prefix="st30_stream_")
     try:
-        ev = _t(spark, sf, "events")
-        wt = Window.orderBy("ts", "event_id")
-        tiled = ev.withColumn("__tile", F.ntile(3).over(wt))
-        base = time.time() - 120
-        for i in range(3):
-            tmp = os.path.join(stage, f"__b{i}")
-            tiled.filter(F.col("__tile") == i + 1).drop("__tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "time"), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(streaming_twap(stream), "st30_out", mode="append")
         return sink.select(
@@ -5380,12 +5249,13 @@ def st31(spark, sf):
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_kll_quantile,
     )
 
     stage = tempfile.mkdtemp(prefix="st31_stream_")
     try:
-        _stage_event_batches(spark, sf, stage)
+        stage_event_batches(_event_batches(spark, sf), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         raw = run_to_memory(
             streaming_kll_quantile(stream, k=256), "st31_out", mode="update"
@@ -5441,49 +5311,18 @@ def st13(spark, sf):
     provably passes every left row's match horizon and the append-mode
     output equals the batch left join EXACTLY — null-padded rows
     included, fully oracle-checked."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         stream_stream_left_join,
     )
 
     stage = tempfile.mkdtemp(prefix="st13_stream_")
     try:
-        dst = os.path.join(stage, "events_000.parquet")
-        shutil.copyfile(f"{sf}/events.parquet", dst)
-        base = time.time() - 120
-        os.utime(dst, (base, base))
-        ev = _t(spark, sf, "events")
-        for i, days in enumerate((3650, 3660), start=1):
-            # the nudge rows must SURVIVE the join's event_type filters
-            # (one view + one purchase, impossible user) or the filter
-            # sits below the watermark node and the nudge never
-            # advances it — the max-ts real view would then never evict
-            one = ev.limit(1)
-            nudge = None
-            for j, ntype in enumerate(("view", "purchase")):
-                row = one.select(
-                    (F.lit(1_000_000_000) + F.lit(2 * i + j)).alias("event_id"),
-                    (
-                        F.col("ts") + F.expr(f"INTERVAL {days} DAYS")
-                    ).alias("ts"),
-                    F.lit(-1).cast("long").alias("user_id"),
-                    F.lit(ntype).alias("event_type"),
-                    F.col("value"),
-                    F.col("props"),
-                )
-                nudge = row if nudge is None else nudge.unionByName(row)
-            tmp = os.path.join(stage, f"__nudge{i}")
-            nudge.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "nudge"), stage)
         left = read_events_stream(spark, stage, max_files=1)
         right = read_events_stream(spark, stage, max_files=1)
         joined = stream_stream_left_join(left, right, within="10 minutes")
@@ -5523,46 +5362,18 @@ def st15(spark, sf):
     watermark provably passes both sides' horizons); append-mode
     output equals the batch full join EXACTLY
     (`streaming/ops.py:stream_stream_full_join`)."""
-    import os
     import shutil
-    import time
 
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         stream_stream_full_join,
     )
 
     stage = tempfile.mkdtemp(prefix="st15_stream_")
     try:
-        dst = os.path.join(stage, "events_000.parquet")
-        shutil.copyfile(f"{sf}/events.parquet", dst)
-        base = time.time() - 120
-        os.utime(dst, (base, base))
-        ev = _t(spark, sf, "events")
-        for i, days in enumerate((3650, 3660), start=1):
-            # one view + one purchase per nudge batch (impossible user),
-            # surviving both sides' event_type filters so the watermark
-            # node above each filter actually advances
-            one = ev.limit(1)
-            nudge = None
-            for j, ntype in enumerate(("view", "purchase")):
-                row = one.select(
-                    (F.lit(1_000_000_000) + F.lit(2 * i + j)).alias("event_id"),
-                    (F.col("ts") + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-                    F.lit(-1).cast("long").alias("user_id"),
-                    F.lit(ntype).alias("event_type"),
-                    F.col("value"),
-                    F.col("props"),
-                )
-                nudge = row if nudge is None else nudge.unionByName(row)
-            tmp = os.path.join(stage, f"__nudge{i}")
-            nudge.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (base + 30 * i, base + 30 * i))
+        stage_event_batches(_event_batches(spark, sf, "nudge"), stage)
         left = read_events_stream(spark, stage, max_files=1)
         right = read_events_stream(spark, stage, max_files=1)
         joined = stream_stream_full_join(left, right, within="10 minutes")
@@ -5626,12 +5437,13 @@ def st16(spark, sf):
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_kmv_distinct,
     )
 
     stage = tempfile.mkdtemp(prefix="st16_stream_")
     try:
-        _stage_event_batches(spark, sf, stage)
+        stage_event_batches(_event_batches(spark, sf), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         raw = run_to_memory(
             streaming_kmv_distinct(stream, k=64), "st16_out", mode="update"
@@ -5688,12 +5500,13 @@ def st17(spark, sf):
     from duckdb_graphar_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        stage_event_batches,
         streaming_cms,
     )
 
     stage = tempfile.mkdtemp(prefix="st17_stream_")
     try:
-        _stage_event_batches(spark, sf, stage)
+        stage_event_batches(_event_batches(spark, sf), stage)
         stream = read_events_stream(spark, stage, max_files=1)
         sink = run_to_memory(
             streaming_cms(stream, depth=3, width=512), "st17_out", mode="update"
@@ -13356,6 +13169,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # the entries left unchecked longest; anything unlisted follows in
 # definition order.
 _PRIORITY = [
+    # --- streaming entries restaged through streaming.ops.
+    # --- stage_event_batches that sat outside the window
+    "st13", "st15", "st16", "st17", "st18", "st19", "st20", "st21",
+    "st22", "st23", "st25", "st26", "st27", "st28", "st30", "u07",
+    # --- graph operators whose fixpoint state or per-round probes changed
+    "g24", "g25", "g27", "g30", "g31", "g32", "d10", "g21",
     # --- graph operators moved onto the shared loop helpers (BFS sweep,
     # --- fixpoint loop, pins, edge builders) that sat outside the window
     "g07", "g08", "g11", "g12", "g26", "g28", "g29", "g33",
@@ -13365,10 +13184,9 @@ _PRIORITY = [
     "q86", "t28", "q81", "q89", "q90", "q96", "t13", "t27", "t19",
     "s11", "t20", "t15", "g18",
     "g09", "g10", "g13", "g14", "g15", "g16", "g17", "g19", "g34",
-    "g24", "g25", "g27", "g30", "g31", "g32",
-    "s05", "s06", "s12", "s21", "d09", "d10",
+    "s05", "s06", "s12", "s21", "d09",
     # --- the stale band, then the oldest probation re-checks ---
-    "g20", "g21", "g22", "g23",
+    "g20", "g22", "g23",
     "s07", "s08", "s14", "s15", "st12", "st14", "u05",
     "u06",
     "s09", "s10",

@@ -143,12 +143,12 @@ def _fixpoint(
 
     Each pass costs the step's own shuffle stages plus ONE job: the
     stepped frame is cut with a lazy ``localCheckpoint`` that the pass's
-    row count materializes in full, so no later consumer races an
-    unmaterialized mark, and the next state is a free projection over
-    the checkpointed blocks.  The count is an RDD count over the
-    physical plan (one job); ``DataFrame.count()`` plans a global
-    aggregate whose exchange costs a second job, and an eager cut plus
-    a separate probe costs two as well.
+    row count (:func:`_rows`) materializes in full, so no later consumer
+    races an unmaterialized mark, and the next state is a free
+    projection over the checkpointed blocks; an eager cut plus a
+    separate probe costs two jobs.  The next state is read through
+    :func:`_without_stats`, so the size estimates of the passes do not
+    compound.
 
     Lineage-cut cadence of the iterative family, each measured and a
     constant at its call site:
@@ -169,23 +169,46 @@ def _fixpoint(
                                                      subtrees
     ============================  =================  ====================================
     """
-    def count(df: DataFrame) -> int:
-        return df._jdf.queryExecution().toRdd().count()
-
-    rows = None if value else count(state)
+    rows = None if value else _rows(state)
     for _ in range(max_iters):
         stepped = step(state)
-        cut = stepped.localCheckpoint(eager=False)
+        cut = _without_stats(stepped.localCheckpoint(eager=False))
         if value:
             keys = [c for c in stepped.columns if c not in ("__new", value)]
             state = cut.select(*keys, F.col("__new").alias(value))
-            if count(cut.filter(F.col("__new") != F.col(value))) == 0:
+            if _rows(cut.filter(F.col("__new") != F.col(value))) == 0:
                 return state
         else:
-            state, before, rows = cut, rows, count(cut)
+            state, before, rows = cut, rows, _rows(cut)
             if rows == before:
                 return state
     raise error
+
+
+def _rows(df: DataFrame) -> int:
+    """Row count in ONE job: an RDD count over the physical plan.
+    ``DataFrame.count()`` plans a global aggregate whose exchange costs
+    a second job.  On a lazily checkpointed frame the count is the
+    cut's own full materialization."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _without_stats(cut: DataFrame) -> DataFrame:
+    """The rows of a checkpointed frame under a fresh plan leaf that
+    carries no statistics of its own (Catalyst then assumes the default
+    size).  ``Dataset.localCheckpoint`` copies its origin plan's
+    ``sizeInBytes`` into the checkpoint, and a join's estimate is the
+    product of its sides', so a loop that joins its state feeds each
+    pass's product into the next: the estimate's digit count grows
+    geometrically with the passes (min-label propagation's passed 4,300
+    digits on a 150-edge graph) until estimating it dominates planning.
+    The leaf reads the checkpoint's own RDD, so it neither recomputes
+    nor re-materializes anything."""
+    spark = cut.sparkSession
+    jdf = spark._jsparkSession.internalCreateDataFrame(
+        cut._jdf.queryExecution().toRdd(), cut._jdf.schema(), False
+    )
+    return DataFrame(jdf, spark)
 
 
 def degrees(
@@ -1745,7 +1768,7 @@ def scc(
         )
         .localCheckpoint(eager=False)
     )
-    base.count()  # the checkpoint's own full materialization job
+    _rows(base)  # the checkpoint's own full materialization job
     e = base.filter(F.col("__t") == 0).select("u", "w")
     verts = base.filter(F.col("__t") == 1).select(F.col("u").alias("v"))
     spark = edges.sparkSession
@@ -1871,7 +1894,7 @@ def scc(
         verts = verts.join(done.select("v"), "v", "left_anti").localCheckpoint(
             eager=False
         )
-        if verts.count() == 0:
+        if _rows(verts) == 0:
             return assigned
         cu = pr.select(
             F.col("v").alias("u"), F.col("__f").alias("__fu"), F.col("__b").alias("__bu")
@@ -1900,10 +1923,11 @@ def scc(
             .select("u", "w")
         )
         e = e.join(bad, ["u", "w"], "left_anti").localCheckpoint(eager=True)
-    if verts.limit(1).count() == 0:
+    left = _rows(verts)
+    if left == 0:
         return assigned
     raise RuntimeError(
-        f"scc: {verts.count()} vertices unassigned after {max_rounds} peel "
+        f"scc: {left} vertices unassigned after {max_rounds} peel "
         "rounds (raise max_rounds; adversarial SCC-chain graphs peel one "
         "condensation level per round)"
     )
@@ -2278,7 +2302,7 @@ def luby_mis(
                 .join(removed, "v", "left_anti")
                 .localCheckpoint(eager=False)
             )
-            if und.count() == 0:
+            if _rows(und) == 0:
                 break
         statuses.append(und.select("v").withColumn("status", F.lit("undecided")))
         if vertices is not None:
@@ -2375,7 +2399,7 @@ def greedy_coloring(
             remaining = remaining.join(colored, "v", "left_anti").localCheckpoint(
                 eager=False
             )
-            if remaining.count() == 0:
+            if _rows(remaining) == 0:
                 break
         out = (
             out.unionByName(remaining.withColumn("color", F.lit(-1)))
@@ -2696,7 +2720,7 @@ def minimum_spanning_forest(
                 # eager-checkpoint job + isEmpty job into one
                 .localCheckpoint(eager=False)
             )
-            if picked.count() == 0:
+            if _rows(picked) == 0:
                 break
             out_cols = (
                 ["a", "b", "round_added"]

@@ -9,7 +9,13 @@ verify the windowed aggregations (FIXTURES.md §B2, SURVEY §2.E).
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+from collections.abc import Callable, Iterable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -28,19 +34,7 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-# Source bytes staged by read_events_stream since the last run_to_memory
-# drain — the size signal the harness uses to pick a SCALE-ADAPTIVE
-# shuffle-partition count for the stream it is about to drive (guide
-# §2.2: size partitions by data volume, not by a constant tuned for
-# either local mode or the cluster).  Entries build their stream(s) and
-# immediately drive them, so the accumulate-then-drain protocol is
-# single-threaded per entry call.
-_STAGED_SOURCE_BYTES: list[int] = []
-
-
 def _path_bytes(path: str, glob_base: str | None) -> int:
-    import os
-
     try:
         if glob_base is not None:
             return os.path.getsize(os.path.join(path, glob_base))
@@ -57,17 +51,18 @@ def _path_bytes(path: str, glob_base: str | None) -> int:
 
 def read_events_stream(spark: SparkSession, path: str, *, max_files: int = 4) -> DataFrame:
     """File-based streaming source over the events parquet (one file =
-    one micro-batch slice; real deployments swap in kafka)."""
-    import os
+    one micro-batch slice; real deployments swap in kafka).
 
+    ``path`` is a directory of event files or one ``.parquet`` file.
+    The source's ``path`` and ``pathGlobFilter`` options stay in the
+    stream's plan, which is where :func:`_drive_stream` reads the source
+    size from when it sizes the drive; building a stream records
+    nothing else."""
     reader = spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", max_files)
-    glob_base = None
     if path.endswith(".parquet") and os.path.isfile(path):
         # streaming file sources require a directory; narrow with a glob
-        glob_base = os.path.basename(path)
-        reader = reader.option("pathGlobFilter", glob_base)
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    _STAGED_SOURCE_BYTES.append(_path_bytes(path, glob_base))
     raw = reader.parquet(path)
     # Watermarks demand TIMESTAMP (LTZ), so convert the naive-UTC wall
     # clock to the matching instant via epoch-µs arithmetic — both steps
@@ -79,6 +74,26 @@ def read_events_stream(spark: SparkSession, path: str, *, max_files: int = 4) ->
             " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts))"
         ),
     )
+
+
+def stage_event_batches(frames: Iterable[DataFrame], stage: str) -> None:
+    """Write each of ``frames`` as ONE parquet file
+    ``stage/events_{i:03d}.parquet``, modification times 30 s apart in
+    list order, so a ``read_events_stream(spark, stage, max_files=1)``
+    replays them as one micro-batch each, in order.  The staging for
+    streams whose per-key state must span batches (a single-file source
+    is one batch and never reaches the state-merge path).  Creates
+    ``stage`` if it does not exist."""
+    os.makedirs(stage, exist_ok=True)
+    base = time.time() - 120
+    for i, frame in enumerate(frames):
+        tmp = os.path.join(stage, f"__b{i}")
+        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        npath = os.path.join(stage, f"events_{i:03d}.parquet")
+        os.replace(os.path.join(tmp, part), npath)
+        shutil.rmtree(tmp)
+        os.utime(npath, (base + 30 * i, base + 30 * i))
 
 
 def tumbling_window_agg(
@@ -343,113 +358,113 @@ def chained_window_agg(
 
 
 def run_to_memory(stream_df: DataFrame, name: str, *, mode: str | None = None) -> DataFrame:
-    """Drive a streaming DataFrame to completion against a memory sink
-    (test harness: processAllAvailable → stop → return the batch view).
+    """Drive a finite stream to completion into the memory sink ``name``
+    and return the sink's table.  ``mode`` defaults to complete for a
+    plan with an aggregate and append otherwise.
 
-    Stateful operators create one state-store instance per
-    ``spark.sql.shuffle.partitions`` per micro-batch; a foreign session
-    at the Spark default (200) pays ~5× pure task overhead on a
-    32-core box (measured: st07 25 s → 5.3 s).  Since this entry point
-    exists to DRIVE a finite stream to completion, the conf is scoped to
-    the machine for the duration of the run and restored in the finally
-    — never mutated for the caller's other work (the round-1 lesson on
-    session-conf hygiene)."""
+    The stream's own plan decides the shuffle-partition count
+    (:func:`_drive_stream`): a JVM-state replay of file sources gets one
+    partition per ~64 MB of source, at least 2, since every partition is
+    a state store committed each micro-batch; a stream that runs Python
+    keeps one partition per core, since there the partitions are the
+    Python workers."""
+    _drive_stream(stream_df, lambda w: w.format("memory").queryName(name), mode=mode)
+    return stream_df.sparkSession.table(name)
+
+
+# Plan nodes whose per-row or per-key work runs in Python workers.
+_PYTHON_NODES = (
+    "FlatMapGroupsInPandasWithState",
+    "TransformWithStateInPandas",
+    "FlatMapGroupsInPandas",
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+def _file_source_bytes(plan) -> int | None:
+    """Bytes under the streaming file-source leaves of an analyzed plan
+    (each leaf's ``path`` and ``pathGlobFilter`` options, summed by
+    :func:`_path_bytes`), or None when a streaming leaf is not a file
+    source.  Static leaves (the dimension of a stream-static join) do
+    not count."""
+    total = 0
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        opts = leaf.dataSource().options()
+        path, glob = opts.get("path"), opts.get("pathGlobFilter")
+        if path.isEmpty():
+            return None
+        total += _path_bytes(path.get(), glob.get() if glob.isDefined() else None)
+    return total
+
+
+def _drive_stream(
+    stream_df: DataFrame,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    *,
+    mode: str | None = None,
+) -> StreamingQuery:
+    """Start ``sink(stream_df.writeStream)``, process all available input,
+    stop, and return the stopped query (its ``lastProgress`` stays
+    readable).  The stream's analyzed plan, read once, decides both the
+    output mode (``mode`` or, by default, complete when the plan
+    aggregates, else append) and ``spark.sql.shuffle.partitions``,
+    scoped to the drive and restored in the finally.
+
+    Every stateful operator opens one state-store instance per shuffle
+    partition per micro-batch, and a replay of a small source is bound
+    by those commits (st13: 8.0 s at 4 partitions against 34.0 s at 32
+    on a 2 MB source).  So a stream whose streaming leaves are all file
+    sources gets ~64 MB of source per partition, clamped to
+    [2, defaultParallelism]: a fixture replay opens a handful of
+    stores, a large stream still fills the cluster.  Two cases keep the
+    core count:
+
+    - a stream that crosses into Python.  Its Python workers' parallelism
+      IS the partition count, so sizing it by bytes serializes the
+      Python work onto 2 workers (st19: 11.7 s became 17.7 s).  The
+      check applies Spark's ``ExtractPythonUDFs`` rule to the analyzed
+      plan first, which turns scalar Python and pandas UDFs into the
+      ``BatchEvalPython``/``ArrowEvalPython`` nodes they run as.
+    - a stream with a non-file streaming leaf (rate, memory, a Python
+      data source), whose size the plan does not tell.
+
+    The count never rises above the session's own setting."""
     spark = stream_df.sparkSession
-    src_bytes = sum(_STAGED_SOURCE_BYTES) if _STAGED_SOURCE_BYTES else None
-    _STAGED_SOURCE_BYTES.clear()
-    # Python-stateful pipelines (applyInPandasWithState and friends) do
-    # their per-key work in Python workers whose parallelism IS the
-    # shuffle-partition count — sizing those by source bytes serialized
-    # the compute onto 2 workers (r13 audit: st19 11.7→17.7 s).  They
-    # keep the cores-sized behavior; only JVM lanes, where the state-
-    # store commit floor dominates, get the size-derived count.
-    if src_bytes is not None and _crosses_into_python(stream_df):
-        src_bytes = None
-    return _with_harness_shuffle_parts(
-        spark,
-        lambda: _run_memory_query(stream_df, name, mode),
-        src_bytes=src_bytes,
-    )
-
-
-def _crosses_into_python(df: DataFrame) -> bool:
-    try:
-        txt = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return True
-    return any(
-        m in txt
-        for m in (
-            "FlatMapGroupsInPandasWithState",
-            "TransformWithStateInPandas",
-            "FlatMapGroupsInPandas",
-            "MapInPandas",
-            "MapInArrow",
-            "ArrowEvalPython",
-            "BatchEvalPython",
-        )
-    )
-
-
-def _with_harness_shuffle_parts(spark: SparkSession, fn, *, src_bytes: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` for the duration of one
-    finite stream drive, restored in the finally.
-
-    The partition count is SCALE-ADAPTIVE (guide §2.2): every stateful
-    operator creates one state-store instance per shuffle partition per
-    micro-batch, and the r13 streaming audit measured the lane commit-
-    bound — st13 summed 712 s of state-store commitTimeMs across 32
-    partitions x 4 batches of a 2 MB source (8.0 s wall at 4 partitions
-    vs 34.0 s at 32).  So when the staged source size is known, target
-    ~64 MB of source per partition, clamped to [2, defaultParallelism]:
-    a fixture-sized replay gets a handful of stores, a 100 TB stream
-    still saturates the cluster (the clamp ceiling).  Unknown sizes
-    (rate sources, foreign streams) keep the previous cores-sized
-    behavior.  ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides the
-    derivation for cluster tuning."""
-    import os
+    plan = stream_df._jdf.queryExecution().analyzed()
+    extract = spark._jvm.org.apache.spark.sql.execution.python.ExtractPythonUDFs
+    text = extract.apply(plan).toString()
+    cores = spark.sparkContext.defaultParallelism
+    src_bytes = None if any(m in text for m in _PYTHON_NODES) else _file_source_bytes(plan)
+    target = max(2, min(cores, -(-src_bytes // (64 << 20)))) if src_bytes else cores
+    mode = mode or ("complete" if "Aggregate" in text else "append")
 
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key, None)
-    cores = spark.sparkContext.defaultParallelism
-    override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if override:
-        target = max(1, int(override))
-    elif src_bytes is not None and src_bytes > 0:
-        target = max(2, min(cores, -(-src_bytes // (64 << 20))))
-    else:
-        target = cores
     scoped = prev is None or int(prev) > target
     if scoped:
         spark.conf.set(key, str(target))
     try:
-        return fn()
+        q = sink(stream_df.writeStream.outputMode(mode)).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
         if scoped:
             if prev is not None:
                 spark.conf.set(key, prev)
             else:
                 spark.conf.unset(key)
-
-
-def _run_memory_query(stream_df: DataFrame, name: str, mode: str | None) -> DataFrame:
-    q = (
-        stream_df.writeStream.outputMode(
-            mode or ("complete" if _has_agg(stream_df) else "append")
-        )
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.table(name)
-
-
-def _has_agg(df: DataFrame) -> bool:
-    return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
+    return q
 
 
 def stateful_user_totals_tws(

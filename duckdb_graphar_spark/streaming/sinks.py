@@ -15,6 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
+
+from duckdb_graphar_spark.streaming.ops import _drive_stream
 
 
 def foreach_batch_parquet_sink(
@@ -23,27 +26,20 @@ def foreach_batch_parquet_sink(
     """Drive a (finite) stream into parquet via foreachBatch, one
     `batch_id=N` partition directory per micro-batch, overwrite-per-batch
     for idempotent retries.  Blocks until all available input is
-    processed, then stops the query."""
+    processed, then stops the query (the drive is
+    :func:`~duckdb_graphar_spark.streaming.ops._drive_stream`, so the
+    stream's plan sizes its shuffle partitions)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    from duckdb_graphar_spark.streaming.ops import _with_harness_shuffle_parts
+    def sink(writer: DataStreamWriter) -> DataStreamWriter:
+        writer = writer.foreachBatch(write_batch)
+        return writer.option("checkpointLocation", checkpoint) if checkpoint else writer
 
-    def run() -> None:
-        writer = stream_df.writeStream.foreachBatch(write_batch).outputMode("append")
-        if checkpoint:
-            writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    # same scoped harness conf as run_to_memory (see its docstring)
-    _with_harness_shuffle_parts(stream_df.sparkSession, run)
+    _drive_stream(stream_df, sink, mode="append")
 
 
 def read_parquet_sink(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -26,35 +26,19 @@ from pyspark.sql import functions as F
 
 from duckdb_graphar_spark.session import get_spark
 from duckdb_graphar_spark.streaming.ops import (
-    _with_harness_shuffle_parts,
+    _drive_stream,
     read_events_stream,
+    stage_event_batches,
     stream_stream_anti_join,
 )
 
 
 def _run_collect_state(stream_df, name, mode):
-    spark = stream_df.sparkSession
-
-    def inner():
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_rows = 0
-            prog = q.lastProgress
-            if prog and prog.get("stateOperators"):
-                state_rows = max(
-                    op.get("numRowsTotal", 0) for op in prog["stateOperators"]
-                )
-        finally:
-            q.stop()
-        return state_rows
-
-    return _with_harness_shuffle_parts(spark, inner)
+    q = _drive_stream(stream_df, lambda w: w.format("memory").queryName(name), mode=mode)
+    prog = q.lastProgress
+    if prog and prog.get("stateOperators"):
+        return max(op.get("numRowsTotal", 0) for op in prog["stateOperators"])
+    return 0
 
 
 def main() -> None:
@@ -90,32 +74,17 @@ def main() -> None:
     out = {}
     try:
         per = n_events // n_batches
-        t0 = time.time() - 600
-        k = 0
-        for i in range(n_batches):
-            frame = rows.filter(
-                (F.col("event_id") >= i * per)
-                & (F.col("event_id") < (i + 1 ) * per if i < n_batches - 1 else True)
-            )
-            tmp = os.path.join(stage, f"__b{k}")
-            frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{k:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (t0 + 30 * k, t0 + 30 * k))
-            k += 1
-        for i in range(2):
-            tmp = os.path.join(stage, f"__b{k}")
-            nudges.filter(F.col("event_id") == 10**9 + i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            npath = os.path.join(stage, f"events_{k:03d}.parquet")
-            os.replace(os.path.join(tmp, part), npath)
-            shutil.rmtree(tmp)
-            os.utime(npath, (t0 + 30 * k, t0 + 30 * k))
-            k += 1
+        stage_event_batches(
+            [
+                rows.filter(
+                    (F.col("event_id") >= i * per)
+                    & ((F.col("event_id") < (i + 1) * per) if i < n_batches - 1 else True)
+                )
+                for i in range(n_batches)
+            ]
+            + [nudges.filter(F.col("event_id") == 10**9 + i) for i in range(2)],
+            stage,
+        )
 
         for label, kwargs in (
             ("unbounded_st20", {}),

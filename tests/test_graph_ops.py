@@ -1277,3 +1277,24 @@ def test_persisting_operators_release_their_caches(spark, tmp_path):
     assert {r[0] for r in got["greedy_coloring"]} == {0, 1, 2, 3, 4}
     assert {r[0] for r in got["luby_mis"]} == {0, 1, 2, 3, 4}
     assert {r[0] for r in got["random_walks"]} == {0, 3}
+
+
+def test_fixpoint_state_estimate_does_not_compound(spark):
+    """Each pass's state is read through a leaf without statistics, so a
+    step that joins the state with itself (a join's size estimate is the
+    product of its sides') does not feed the product into the next
+    pass.  Eight passes: labels 7..0 each drop by one per pass, and the
+    eighth moves nothing."""
+    from pyspark.sql import functions as F
+
+    def step(state):
+        other = state.select(F.col("v").alias("__v"))
+        return state.join(other, F.col("v") == F.col("__v")).select(
+            "v", F.greatest(F.col("lab") - 1, F.lit(0)).alias("__new"), "lab"
+        )
+
+    state = spark.range(8).select(F.col("id").alias("v"), F.col("id").alias("lab"))
+    out = G._fixpoint(state, step, max_iters=8, value="lab", error=RuntimeError("no fixpoint"))
+    assert sorted(r.lab for r in out.collect()) == [0] * 8
+    size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) < 40

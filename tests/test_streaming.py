@@ -264,25 +264,8 @@ def test_streaming_ohlc_batch_twin(spark):
 def _stage_three_batches(spark, sf_dir, stage):
     """Split events into three mtime-ordered single-file micro-batches
     (event_id mod 3) so per-group state provably spans batches."""
-    import os
-    import shutil
-    import time
-
-    from duckdb_graphar_spark.tables import load_table
-    import pyspark.sql.functions as F
-
     ev = load_table(spark, sf_dir, "events")
-    base = time.time() - 120
-    for i in range(3):
-        tmp = os.path.join(stage, f"__part{i}")
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (base + 30 * i, base + 30 * i))
+    S.stage_event_batches([ev.filter(F.col("event_id") % 3 == i) for i in range(3)], stage)
 
 
 def test_stateful_user_totals_multi_batch_state_merge(spark, sf_dir, tmp_path):
@@ -299,9 +282,6 @@ def test_stateful_user_totals_multi_batch_state_merge(spark, sf_dir, tmp_path):
     from duckdb_graphar_spark.tables import load_table
 
     stage = str(tmp_path / "stage")
-    import os
-
-    os.makedirs(stage)
     _stage_three_batches(spark, sf_dir, stage)
     stream = read_events_stream(spark, stage, max_files=1)
     out = run_to_memory(
@@ -339,7 +319,6 @@ def test_streaming_kmv_batch_boundary_invariance(spark, sf_dir, tmp_path):
     from pyspark.sql import Window
 
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
     _stage_three_batches(spark, sf_dir, stage)
 
     def final_sketch(path, name):
@@ -387,7 +366,6 @@ def test_streaming_cms_batch_boundary_invariance(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
     _stage_three_batches(spark, sf_dir, stage)
 
     def final_cells(path, name):
@@ -413,8 +391,6 @@ def test_streaming_capped_sessions_matches_batch(spark, tmp_path):
     equals the batch sessionize_capped output exactly — including a
     session that STARTS in batch 0 and extends in batch 1."""
     import datetime as dt
-    import os
-    import time
 
     from pyspark.sql import functions as F
 
@@ -439,18 +415,9 @@ def test_streaming_capped_sessions_matches_batch(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(50), F.col("ts") > m(50))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        import shutil
-
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 30 * i, t0 + 30 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(50)), df.filter(F.col("ts") > m(50))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     sink = run_to_memory(
         streaming_capped_sessions(
@@ -501,9 +468,6 @@ def test_stream_anti_join_corrects_across_batches(spark, tmp_path):
     immediately).  The reconstructed anti set = user 1's views only —
     the batch LEFT ANTI result."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -532,16 +496,9 @@ def test_stream_anti_join_corrects_across_batches(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(30), F.col("ts") > m(30))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 30 * i, t0 + 30 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(30)), df.filter(F.col("ts") > m(30))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     sink = run_to_memory(
         stream_stream_anti_join(stream), "st_anti_test", mode="update"
@@ -593,9 +550,6 @@ def test_stream_anti_join_horizon(spark, tmp_path):
     branch actually fires — final verdicts must be unchanged, proving
     finalized state can be dropped."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -627,22 +581,13 @@ def test_stream_anti_join_horizon(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 120
     conds = (
         F.col("ts") <= m(30),
         (F.col("ts") > m(30)) & (F.col("ts") <= m(200)),
         F.col("event_id") == 90,
         F.col("event_id") == 91,
     )
-    for i, cond in enumerate(conds):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 20 * i, t0 + 20 * i))
+    S.stage_event_batches([df.filter(c) for c in conds], stage)
     stream = read_events_stream(spark, stage, max_files=1)
     sink = run_to_memory(
         stream_stream_anti_join(
@@ -696,9 +641,6 @@ def test_streaming_funnel_anchors_across_batches(spark, tmp_path):
     (strictly-after tie semantics); user 3 clicks without ever viewing
     (stage 0, NULL completed_at)."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -726,16 +668,9 @@ def test_streaming_funnel_anchors_across_batches(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(30), F.col("ts") > m(30))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 30 * i, t0 + 30 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(30)), df.filter(F.col("ts") > m(30))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     sink = run_to_memory(
         streaming_funnel(stream, ["view", "click", "purchase"]),
@@ -786,9 +721,6 @@ def test_streaming_funnel_window_freezes_across_batches(spark, tmp_path):
     1 the moment that click is seen, and its in-window purchase right
     after must NOT resurrect it."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -818,21 +750,12 @@ def test_streaming_funnel_window_freezes_across_batches(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 90
     conds = (
         F.col("ts") <= m(60),
         (F.col("ts") > m(60)) & (F.col("ts") <= m(200)),
         F.col("ts") > m(200),
     )
-    for i, cond in enumerate(conds):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 20 * i, t0 + 20 * i))
+    S.stage_event_batches([df.filter(c) for c in conds], stage)
     stream = read_events_stream(spark, stage, max_files=1)
     sink = run_to_memory(
         streaming_funnel(
@@ -864,9 +787,6 @@ def test_stream_scd2_enrich_point_in_time(spark, tmp_path):
     valid_from) must NOT match — and the whole thing runs stateless
     (append mode, no watermark)."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -898,16 +818,9 @@ def test_stream_scd2_enrich_point_in_time(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(60), F.col("ts") > m(60))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 30 * i, t0 + 30 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(60)), df.filter(F.col("ts") > m(60))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     sink = run_to_memory(
         stream_scd2_enrich(stream, dim), "st_scd2_enrich_test", mode="append"
@@ -929,9 +842,6 @@ def test_streaming_last_touch_cross_batch_carry(spark, tmp_path):
     precedence); a later view then a second purchase re-attributes to
     the newer view."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -960,16 +870,9 @@ def test_streaming_last_touch_cross_batch_carry(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(30), F.col("ts") > m(30))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 10 * i, t0 + 10 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(30)), df.filter(F.col("ts") > m(30))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     out = run_to_memory(streaming_last_touch(stream), "lt_test", mode="append")
     got = {
@@ -1000,9 +903,6 @@ def test_streaming_clamped_balance_cross_batch(spark, tmp_path):
     clamped at 0 and batch 1 must start from 0, not the unclamped
     negative; user 2's balance survives the boundary unchanged."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1028,16 +928,9 @@ def test_streaming_clamped_balance_cross_batch(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, delta long, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(30), F.col("ts") > m(30))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 10 * i, t0 + 10 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(30)), df.filter(F.col("ts") > m(30))], stage
+    )
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1087,9 +980,6 @@ def test_streaming_running_distinct_cross_batch_set(spark, tmp_path):
     """The carried seen-set is load-bearing: a type first seen in batch
     0 must not re-count in batch 1; a genuinely new type must."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1119,16 +1009,9 @@ def test_streaming_running_distinct_cross_batch_set(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(30), F.col("ts") > m(30))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 10 * i, t0 + 10 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(30)), df.filter(F.col("ts") > m(30))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     out = run_to_memory(
         streaming_running_distinct(stream), "rd_test", mode="append"
@@ -1145,9 +1028,6 @@ def test_streaming_twap_cross_batch_interval(spark, tmp_path):
     carried (last_us, last_v) must close it in the next batch, and the
     running (n, total, numerator-string) must extend exactly."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1179,16 +1059,9 @@ def test_streaming_twap_cross_batch_interval(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") <= m(30), F.col("ts") > m(30))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 10 * i, t0 + 10 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= m(30)), df.filter(F.col("ts") > m(30))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     out = run_to_memory(streaming_twap(stream), "twap_test", mode="append")
     got = {
@@ -1237,9 +1110,6 @@ def test_streaming_time_decay_cross_batch_pending(spark, tmp_path):
     the right half-life weights; views after the last purchase stay
     unattributed; a second purchase only gets views since the first."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1266,16 +1136,9 @@ def test_streaming_time_decay_cross_batch_pending(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
-    for i, cond in enumerate((F.col("ts") < d(3), F.col("ts") >= d(3))):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 10 * i, t0 + 10 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") < d(3)), df.filter(F.col("ts") >= d(3))], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     out = run_to_memory(
         streaming_time_decay_attribution(stream), "td_test", mode="append"
@@ -1313,9 +1176,6 @@ def test_streaming_kll_cross_batch_equals_batch_sketch(spark, tmp_path):
     BATCH sketch over the union of rows — merge-order independence is
     what upgrades st31's oracle to a full value replay."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
     from pyspark.sql import functions as F
 
@@ -1343,17 +1203,10 @@ def test_streaming_kll_cross_batch_equals_batch_sketch(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
     )
     stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    t0 = time.time() - 60
     split = base + dt.timedelta(minutes=200)
-    for i, cond in enumerate((F.col("ts") <= split, F.col("ts") > split)):
-        tmp = os.path.join(stage, f"__b{i}")
-        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        npath = os.path.join(stage, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(tmp, part), npath)
-        shutil.rmtree(tmp)
-        os.utime(npath, (t0 + 10 * i, t0 + 10 * i))
+    S.stage_event_batches(
+        [df.filter(F.col("ts") <= split), df.filter(F.col("ts") > split)], stage
+    )
     stream = read_events_stream(spark, stage, max_files=1)
     out = run_to_memory(
         streaming_kll_quantile(stream, k=32), "kll_test", mode="update"
@@ -1378,3 +1231,105 @@ def test_streaming_kll_rejects_batch_input(spark):
     df = spark.createDataFrame([(1,)], "event_id long")
     with _pytest.raises(ValueError, match="streaming"):
         streaming_kll_quantile(df)
+
+
+@pytest.fixture
+def state_partitions(spark):
+    """Look up, by query name, the shuffle-partition counts that a drive
+    gave the query's state operators, read from the query's progress
+    events.  The session count is pinned to the core count meanwhile, so
+    the drive's choice is the only thing that can lower it."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    seen: dict[str, set[int]] = {}
+    arrived = threading.Condition()
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            with arrived:
+                seen.setdefault(p.name, set()).update(
+                    op.numShufflePartitions for op in p.stateOperators
+                )
+                arrived.notify_all()
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def lookup(name: str) -> set[int]:
+        # progress events reach the listener asynchronously
+        deadline = time.time() + 60
+        with arrived:
+            while name not in seen and time.time() < deadline:
+                arrived.wait(1)
+        return seen.get(name)
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    listener = Progress()
+    spark.streams.addListener(listener)
+    yield lookup
+    spark.streams.removeListener(listener)
+    spark.conf.set(key, prev)
+
+
+def test_drive_sizes_a_small_jvm_stream_by_its_source(spark, sf_dir, state_partitions):
+    """A JVM-state stream over one small file gets the size-derived
+    count, clamped to [2, cores]: ~64 MB of source per partition."""
+    cores = spark.sparkContext.defaultParallelism
+    stream = S.read_events_stream(spark, f"{sf_dir}/events.parquet")
+    S.run_to_memory(S.tumbling_window_agg(stream, watermark="100 days"), "size_jvm")
+    assert state_partitions("size_jvm") == {min(2, cores)}
+
+
+def test_drive_keeps_cores_for_python_state(spark, sf_dir, state_partitions):
+    cores = spark.sparkContext.defaultParallelism
+    stream = S.read_events_stream(spark, f"{sf_dir}/events.parquet")
+    S.run_to_memory(
+        S.stateful_user_totals(stream, watermark="365 days"), "size_py_state", mode="update"
+    )
+    assert state_partitions("size_py_state") == {cores}
+
+
+def test_drive_keeps_cores_for_a_scalar_pandas_udf(spark, sf_dir, state_partitions):
+    """A scalar pandas UDF shows in the analyzed plan only under its own
+    name; the drive still sees the Arrow evaluation it plans into and
+    keeps one partition per Python worker."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def doubled(v):
+        return v * 2
+
+    cores = spark.sparkContext.defaultParallelism
+    stream = S.read_events_stream(spark, f"{sf_dir}/events.parquet")
+    agg = S.tumbling_window_agg(stream.withColumn("value", doubled("value")), watermark="100 days")
+    S.run_to_memory(agg, "size_pandas_udf")
+    assert state_partitions("size_pandas_udf") == {cores}
+
+
+def test_drive_of_a_non_file_stream_ignores_earlier_readers(spark, sf_dir, state_partitions):
+    """A stream built but never driven leaves nothing behind: the next
+    drive, of a source whose size the plan does not tell, keeps the
+    core count."""
+    from duckdb_graphar_spark.datasources import CounterStreamDataSource
+
+    try:
+        spark.dataSource.register(CounterStreamDataSource)
+    except Exception:
+        pass  # already registered in this session
+    cores = spark.sparkContext.defaultParallelism
+    S.read_events_stream(spark, f"{sf_dir}/events.parquet")
+    counter = spark.readStream.format("counter_stream").load()
+    S.run_to_memory(counter.groupBy((F.col("n") % 5).alias("k")).count(), "size_counter")
+    assert state_partitions("size_counter") == {cores}
