@@ -5,7 +5,8 @@ Mirrors the capability surface of the reference extension
 `read_edges.cpp`, `src/storage/graphar_storage.cpp`) with an
 idiomatic-PySpark design:
 
-- `metadata`: the YAML model and chunk-file path rules.
+- `metadata`: the YAML model (read and written there), the GraphAr type
+  table and the chunk-file path rules.
 - `reader`: the one read planner (chunk addressing, layout choice, CSR
   offset seek, id checks), and the DataFrame readers `read_vertices` /
   `read_edges`, which scan the planned files with Spark's vectorized
@@ -13,7 +14,12 @@ idiomatic-PySpark design:
 - `datasource`: `format("graphar")`, which reads the same plan and zips
   the property groups per chunk through Arrow.
 - `catalog`: `attach`, one view per vertex/edge type over the data source.
-- `writer` / `spark_writer`: local and distributed graph writers.
+- `writer`: the layout writer (one vertex-chunk and one edge-part file
+  writer, count files, YAML emit) and `write_graph`, which runs it
+  in-process.
+- `spark_writer`: the distributed driver of that writer,
+  `write_graph_dist` (the same file writers inside Spark tasks), plus
+  `with_dense_index`.
 """
 
 from duckdb_graphar_spark.graphar.metadata import (

@@ -1,4 +1,6 @@
-"""GraphAr `gar/v1` metadata model: YAML parsing + chunk-file path resolution.
+"""GraphAr `gar/v1` metadata model: the YAML documents, read and written
+here, the GraphAr <-> Spark <-> Arrow type table, and chunk-file path
+resolution.
 
 Format knowledge comes from the public Apache GraphAr spec and the
 reference's own test fixtures (`/root/reference/config/test/data/git/*.yaml`)
@@ -28,8 +30,9 @@ import os
 import re
 import threading
 from collections import OrderedDict
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
+import pyarrow as pa
 import yaml
 
 from pyspark.sql import types as T
@@ -130,16 +133,26 @@ def stat_token(path: str) -> tuple | None:
         # never to a query error.
         return None
 
-# GraphAr type -> Spark type (reference map: src/utils/func.cpp:18-40).
-GRAPHAR_TO_SPARK: dict[str, T.DataType] = {
-    "bool": T.BooleanType(),
-    "int32": T.IntegerType(),
-    "int64": T.LongType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "string": T.StringType(),
-    "date": T.DateType(),
+# GraphAr type -> (Spark type, Arrow type) (reference maps
+# src/utils/func.cpp:18-40); anything else is unsupported.
+_TYPES: dict[str, tuple[T.DataType, pa.DataType]] = {
+    "bool": (T.BooleanType(), pa.bool_()),
+    "int32": (T.IntegerType(), pa.int32()),
+    "int64": (T.LongType(), pa.int64()),
+    "float": (T.FloatType(), pa.float32()),
+    "double": (T.DoubleType(), pa.float64()),
+    "string": (T.StringType(), pa.string()),
+    "date": (T.DateType(), pa.date32()),
 }
+# Spark or Arrow type -> GraphAr type, for the writers; the two Arrow
+# aliases are written as their GraphAr twin and read back as its Arrow type.
+_GRAPHAR_TYPE_OF = {t: g for g, pair in _TYPES.items() for t in pair} | {
+    pa.large_string(): "string",
+    pa.date64(): "date",
+}
+_UNSUPPORTED = "(reference supports bool/int32/int64/float/double/string/date, src/utils/func.cpp:27)"
+
+VERSION = "gar/v1"
 
 # Implicit column names injected by the reference (include/utils/func.hpp:20-23).
 VERTEX_INDEX_COL = "_graphArVertexIndex"
@@ -200,33 +213,35 @@ _GRAPHINFO_CACHE = StatCache(32)
 
 def spark_type_for(graphar_type: str) -> T.DataType:
     try:
-        return GRAPHAR_TO_SPARK[graphar_type]
+        return _TYPES[graphar_type][0]
     except KeyError:
         raise NotImplementedError(
-            f"GraphAr data type {graphar_type!r} is not supported "
-            "(reference supports bool/int32/int64/float/double/string/date, "
-            "src/utils/func.cpp:27)"
+            f"GraphAr data type {graphar_type!r} is not supported {_UNSUPPORTED}"
         ) from None
 
 
-def arrow_type_for(graphar_type: str):
+def arrow_type_for(graphar_type: str) -> pa.DataType:
     """GraphAr type → Arrow type (reference twin map `graphArT2arrowT`,
     src/utils/func.cpp:30-40).  Used by the non-parquet chunk readers."""
-    import pyarrow as pa
-
-    m = {
-        "bool": pa.bool_(),
-        "int32": pa.int32(),
-        "int64": pa.int64(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-        "string": pa.string(),
-        "date": pa.date32(),
-    }
     try:
-        return m[graphar_type]
+        return _TYPES[graphar_type][1]
     except KeyError:
         raise NotImplementedError(f"GraphAr data type {graphar_type!r} is not supported") from None
+
+
+def graphar_type_of(data_type: T.DataType | pa.DataType) -> str:
+    """GraphAr type a Spark or Arrow column is declared as."""
+    try:
+        return _GRAPHAR_TYPE_OF[data_type]
+    except KeyError:
+        raise NotImplementedError(f"type {data_type} has no GraphAr mapping {_UNSUPPORTED}") from None
+
+
+def _dump(doc: dict, out_dir: str, name: str) -> str:
+    """Write one YAML document as `{out_dir}/{name}`; returns `name`."""
+    with open(os.path.join(out_dir, name), "w") as f:
+        yaml.safe_dump(doc, f)
+    return name
 
 
 @dataclass
@@ -243,12 +258,17 @@ class Property:
 
 @dataclass
 class PropertyGroup:
-    prefix: str
-    file_type: str
     properties: list[Property]
+    file_type: str = "parquet"
+    prefix: str | None = None  # default: the property names joined by "_"
+
+    def __post_init__(self):
+        if not self.prefix:
+            self.prefix = "_".join(p.name for p in self.properties) + "/"
 
     @classmethod
     def from_dict(cls, d: dict) -> "PropertyGroup":
+        """Inverse of `dataclasses.asdict`."""
         props = [
             Property(
                 name=p["name"],
@@ -258,8 +278,7 @@ class PropertyGroup:
             )
             for p in d.get("properties", [])
         ]
-        prefix = d.get("prefix") or ("_".join(p.name for p in props) + "/")
-        return cls(prefix=prefix, file_type=d.get("file_type", "parquet"), properties=props)
+        return cls(props, d.get("file_type", "parquet"), d.get("prefix"))
 
 
 @dataclass
@@ -277,8 +296,12 @@ class AdjList:
 class VertexInfo:
     type: str
     chunk_size: int
-    prefix: str
     property_groups: list[PropertyGroup]
+    prefix: str | None = None  # default: vertex/{type}/
+
+    def __post_init__(self):
+        if self.prefix is None:
+            self.prefix = f"vertex/{self.type}/"
 
     @classmethod
     def load(cls, path: str) -> "VertexInfo":
@@ -286,9 +309,14 @@ class VertexInfo:
         return cls(
             type=d["type"],
             chunk_size=int(d["chunk_size"]),
-            prefix=d.get("prefix", f"vertex/{d['type']}/"),
             property_groups=[PropertyGroup.from_dict(g) for g in d.get("property_groups", [])],
+            prefix=d.get("prefix"),
         )
+
+    def dump(self, out_dir: str) -> str:
+        """Inverse of `load`: writes `{out_dir}/{type}.vertex.yaml` and
+        returns its name."""
+        return _dump({**asdict(self), "version": VERSION}, out_dir, f"{self.type}.vertex.yaml")
 
     def schema(self) -> T.StructType:
         """Output schema: implicit int64 index first, then flattened props
@@ -309,9 +337,13 @@ class EdgeInfo:
     src_chunk_size: int
     dst_chunk_size: int
     directed: bool
-    prefix: str
     adj_lists: list[AdjList]
     property_groups: list[PropertyGroup] = field(default_factory=list)
+    prefix: str | None = None  # default: edge/{src}_{edge}_{dst}/
+
+    def __post_init__(self):
+        if self.prefix is None:
+            self.prefix = f"edge/{self.triple_name}/"
 
     @classmethod
     def load(cls, path: str) -> "EdgeInfo":
@@ -332,10 +364,17 @@ class EdgeInfo:
             src_chunk_size=int(d["src_chunk_size"]),
             dst_chunk_size=int(d["dst_chunk_size"]),
             directed=bool(d.get("directed", True)),
-            prefix=d.get("prefix", f"edge/{d['src_type']}_{d['edge_type']}_{d['dst_type']}/"),
             adj_lists=adj,
             property_groups=[PropertyGroup.from_dict(g) for g in d.get("property_groups", [])],
+            prefix=d.get("prefix"),
         )
+
+    def dump(self, out_dir: str) -> str:
+        """Inverse of `load`: writes `{out_dir}/{src}_{edge}_{dst}.edge.yaml`
+        and returns its name."""
+        adj = [{**asdict(a), "prefix": a.prefix} for a in self.adj_lists]
+        doc = {**asdict(self), "version": VERSION, "adj_lists": adj}
+        return _dump(doc, out_dir, f"{self.triple_name}.edge.yaml")
 
     @property
     def triple_name(self) -> str:
@@ -363,6 +402,13 @@ class EdgeInfo:
             for p in pg.properties:
                 fields.append(T.StructField(p.name, p.spark_type, p.is_nullable))
         return T.StructType(fields)
+
+
+def dump_graph(out_dir: str, name: str, vertex_yamls: list[str], edge_yamls: list[str]) -> str:
+    """Write the graph YAML `{out_dir}/{name}.yaml` over already written
+    vertex/edge YAMLs; returns its path (what `GraphInfo.load` reads)."""
+    doc = {"name": name, "version": VERSION, "vertices": vertex_yamls, "edges": edge_yamls}
+    return os.path.join(out_dir, _dump(doc, out_dir, f"{name}.yaml"))
 
 
 @dataclass

@@ -1,28 +1,31 @@
-"""Distributed GraphAr writer: DataFrame → GraphAr `gar/v1` layout.
+"""Distributed driver of the GraphAr layout writer: DataFrame → `gar/v1`.
 
 The reference has NO write path at all (every write throws,
 `src/storage/graphar_catalog.cpp:61-81`, `graphar_transaction.cpp:28-34`);
 this module exceeds parity with a Spark-first sink so a pipeline can
 round-trip graph data at scale (SURVEY §2.A6: "Spark writer would be
-`df.write.parquet` plus YAML emit").
+`df.write.parquet` plus YAML emit").  The files themselves are written
+by `writer.write_vertex_chunk` / `writer.write_edge_part`, the same two
+functions the in-process `write_graph` calls; this module only decides
+which task runs them on which rows.
 
 Scale design (100 TB):
 
 - **Vertices: one shuffle total.**  Rows are grouped by chunk id
   (``vid // chunk_size``) and each group — a complete chunk — is written
-  by one task via ``applyInPandas``: every property group's chunk file
-  comes out of the same pandas frame, so adding property groups costs no
+  by one task via ``applyInArrow``: every property group's chunk file
+  comes out of the same Arrow batch, so adding property groups costs no
   extra shuffle or scan.
 - **Edges: one shuffle per layout.**  Rows are grouped by part id
-  (aligned-vertex chunk); inside a part one task sorts by (key, other),
-  slices the adjacency chunks, the per-column property chunks, computes
-  the CSR/CSC offset array from within-part degrees, and writes the
-  ``edge_count{i}`` file.  Parts are the format's own parallelism unit —
-  at 1000 executors, 1000 parts write concurrently.  Per-task memory is
-  bounded by ``src_chunk_size × max_degree`` rows; shrink the aligned
-  chunk size for very hot graphs.
-- **Empty parts/chunks still materialize** (sentinel seeding) — the
-  layout requires offset/adjacency files for every vertex chunk.
+  (aligned-vertex chunk); one task writes the whole part.  Parts are the
+  format's own parallelism unit — at 1000 executors, 1000 parts write
+  concurrently.  Per-task memory is bounded by ``src_chunk_size ×
+  max_degree`` rows; shrink the aligned chunk size for very hot graphs.
+- **Empty parts still materialize**: one pad row per part is unioned
+  in, because the layout requires offset/adjacency files for every
+  vertex chunk.
+- Malformed input (an id outside [0, vertex count), a vertex index that
+  is not dense) fails the task that holds the rows: no extra job.
 - Executors write directly to the (shared) filesystem; no driver-side
   data movement.  Only YAML metadata and count files are driver-written.
 """
@@ -33,57 +36,35 @@ import os
 
 import numpy as np
 import pyarrow as pa
-import yaml
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from duckdb_graphar_spark.graphar.metadata import (
     DST_INDEX_COL,
-    OFFSET_COL,
     SRC_INDEX_COL,
     VERTEX_INDEX_COL,
+    AdjList,
+    EdgeInfo,
+    VertexInfo,
+    dump_graph,
+    graphar_type_of,
 )
-from duckdb_graphar_spark.graphar.writer import _write_chunk_file
-
-# Spark type -> GraphAr declared type (inverse of metadata.GRAPHAR_TO_SPARK;
-# reference map src/utils/func.cpp:18-28 — anything else is unsupported).
-_SPARK_TO_GRAPHAR = {
-    T.BooleanType(): "bool",
-    T.IntegerType(): "int32",
-    T.LongType(): "int64",
-    T.FloatType(): "float",
-    T.DoubleType(): "double",
-    T.StringType(): "string",
-    T.DateType(): "date",
-}
-
-_GRAPHAR_TO_ARROW = {
-    "bool": pa.bool_(),
-    "int32": pa.int32(),
-    "int64": pa.int64(),
-    "float": pa.float32(),
-    "double": pa.float64(),
-    "string": pa.string(),
-    "date": pa.date32(),
-}
+from duckdb_graphar_spark.graphar.writer import (
+    aligned_parts,
+    finish_edges,
+    finish_vertices,
+    property_groups,
+    write_edge_part,
+    write_vertex_chunk,
+)
 
 
-def _graphar_type_of(spark_type: T.DataType) -> str:
-    for k, v in _SPARK_TO_GRAPHAR.items():
-        if spark_type == k:
-            return v
-    raise NotImplementedError(
-        f"Spark type {spark_type} has no GraphAr mapping "
-        "(reference supports bool/int32/int64/float/double/string/date, "
-        "src/utils/func.cpp:27)"
-    )
-
-
-def _arrow_table(pdf, cols: list[str], types: list[str]) -> pa.Table:
-    arrays = [
-        pa.array(pdf[c].tolist(), _GRAPHAR_TO_ARROW[t]) for c, t in zip(cols, types)
-    ]
-    return pa.table(dict(zip(cols, arrays)))
+def _columns(table: pa.Table, groups) -> pa.Table:
+    """The property columns of a task's Arrow batch with one chunk and a
+    nullable field each, so a chunk file depends neither on how Spark
+    batched the rows nor on the frame's nullability."""
+    return pa.table({p.name: table[p.name].combine_chunks() for pg in groups for p in pg.properties})
 
 
 def with_dense_index(
@@ -146,63 +127,31 @@ def write_vertices_dist(
     ``df`` must carry a dense 0..n-1 ``index_col`` (use
     :func:`with_dense_index` to create one).  Property columns = all
     columns except the index."""
-    prop_cols = [c for c in df.columns if c != index_col]
-    groups = property_groups or [[c] for c in prop_cols]
-    gtypes = {
-        f.name: _graphar_type_of(f.dataType) for f in df.schema.fields if f.name != index_col
-    }
-    prefix = f"vertex/{vtype}/"
-    vdir = os.path.join(out_dir, prefix)
-    os.makedirs(vdir, exist_ok=True)
+    return _write_vertices(df, out_dir, vtype, index_col, chunk_size, property_groups, file_type)[0]
+
+
+def _write_vertices(df, out_dir, vtype, index_col, chunk_size, groups, file_type) -> tuple[str, int]:
+    """`write_vertices_dist`, also returning the vertex count it took."""
+    types = {f.name: graphar_type_of(f.dataType) for f in df.schema.fields if f.name != index_col}
+    vi = VertexInfo(vtype, chunk_size, property_groups(types, groups, file_type))
     n = df.count()
 
-    group_specs = [("_".join(cols) + "/", cols, [gtypes[c] for c in cols]) for cols in groups]
-
-    def write_chunk(key, pdf):
-        import pandas as pd
-
-        chunk = int(key[0])
-        pdf = pdf.sort_values(index_col)
-        for pg_prefix, cols, types in group_specs:
-            d = os.path.join(vdir, pg_prefix)
-            os.makedirs(d, exist_ok=True)
-            _write_chunk_file(_arrow_table(pdf, cols, types), os.path.join(d, f"chunk{chunk}"), file_type)
-        return pd.DataFrame({"chunk": [chunk], "rows": [len(pdf)]})
+    def write_chunk(key, table):
+        k = key[0].as_py()
+        table = table.sort_by(index_col)
+        index = table[index_col].to_numpy()
+        write_vertex_chunk(out_dir, vi, k, n, index, _columns(table, vi.property_groups))
+        return pa.table({"chunk": [k], "rows": [table.num_rows]})
 
     written = (
         df.withColumn("__chunk", (F.col(index_col) / chunk_size).cast("long"))
         .groupBy("__chunk")
-        .applyInPandas(write_chunk, "chunk long, rows long")
+        .applyInArrow(write_chunk, "chunk long, rows long")
     )
-    n_written = written.agg(F.sum("rows")).first()[0]
-    assert n_written == n, f"wrote {n_written} vertex rows, expected {n}"
-
-    with open(os.path.join(vdir, "vertex_count"), "w") as f:
-        f.write(str(n))
-
-    vy = f"{vtype}.vertex.yaml"
-    with open(os.path.join(out_dir, vy), "w") as f:
-        yaml.safe_dump(
-            {
-                "type": vtype,
-                "version": "gar/v1",
-                "chunk_size": chunk_size,
-                "prefix": prefix,
-                "property_groups": [
-                    {
-                        "prefix": pg_prefix,
-                        "file_type": file_type,
-                        "properties": [
-                            {"name": c, "data_type": t, "is_primary": False, "is_nullable": True}
-                            for c, t in zip(cols, types)
-                        ],
-                    }
-                    for pg_prefix, cols, types in group_specs
-                ],
-            },
-            f,
-        )
-    return vy
+    n_written = written.agg(F.sum("rows")).first()[0] or 0
+    if n_written != n:
+        raise ValueError(f"wrote {n_written} {vtype} vertex rows, expected {n}")
+    return finish_vertices(out_dir, vi, n), n
 
 
 def write_edges_dist(
@@ -223,153 +172,50 @@ def write_edges_dist(
     """Write one edge triple distributedly (CSR and/or CSC layout);
     returns the edge YAML name.  Property columns = all columns except
     src/dst."""
-    src_type, edge_type, dst_type = triple
-    prefix = f"edge/{src_type}_{edge_type}_{dst_type}/"
     prop_cols = [c for c in edges.columns if c not in (src_col, dst_col)]
-    ptypes = {
-        f.name: _graphar_type_of(f.dataType) for f in edges.schema.fields if f.name in prop_cols
-    }
-
+    types = {f.name: graphar_type_of(f.dataType) for f in edges.schema.fields if f.name in prop_cols}
+    ei = EdgeInfo(
+        *triple,
+        chunk_size=chunk_size,
+        src_chunk_size=src_chunk_size,
+        dst_chunk_size=dst_chunk_size,
+        directed=directed,
+        adj_lists=[AdjList(ab, True, file_type) for ab in layouts],
+        property_groups=property_groups(types, None, file_type),
+    )
     base = edges.select(
         F.col(src_col).cast("long").alias("__s"),
         F.col(dst_col).cast("long").alias("__d"),
-        *[F.col(c) for c in prop_cols],
+        *prop_cols,
+        F.lit(False).alias("__pad"),
     )
 
     for aligned_by in layouts:
-        adj_prefix = "ordered_by_source/" if aligned_by == "src" else "ordered_by_dest/"
-        adir = os.path.join(out_dir, prefix, adj_prefix)
-        os.makedirs(adir, exist_ok=True)
-        aligned_chunk = src_chunk_size if aligned_by == "src" else dst_chunk_size
-        n_aligned = vcounts[src_type if aligned_by == "src" else dst_type]
-        n_parts = max(1, -(-n_aligned // aligned_chunk))
-        key, other = ("__s", "__d") if aligned_by == "src" else ("__d", "__s")
-
-        # sentinel row per part so empty parts still write their (empty)
-        # adjacency chunk, all-zero offset chunk, and edge_count file
-        sentinels = (
-            edges.sparkSession.range(n_parts)
-            .select(
-                (F.col("id") * aligned_chunk).alias("__s"),
-                F.lit(-1).cast("long").alias("__d"),
-                *[F.lit(None).cast(dict(edges.dtypes)[c]).alias(c) for c in prop_cols],
-            )
-            if aligned_by == "src"
-            else edges.sparkSession.range(n_parts).select(
-                F.lit(-1).cast("long").alias("__s"),
-                (F.col("id") * aligned_chunk).alias("__d"),
-                *[F.lit(None).cast(dict(edges.dtypes)[c]).alias(c) for c in prop_cols],
-            )
+        aligned_chunk, _, n_parts = aligned_parts(ei, aligned_by, vcounts)
+        key = "__s" if aligned_by == "src" else "__d"
+        # one pad row per part, so that empty parts still write their
+        # (empty) adjacency chunk, all-zero offset chunk and edge_count
+        pads = edges.sparkSession.range(n_parts).select(
+            (F.col("id") * aligned_chunk).alias(key), F.lit(True).alias("__pad")
         )
-        seeded = base.unionByName(sentinels)
+        seeded = base.unionByName(pads, allowMissingColumns=True)
 
-        pcols = list(prop_cols)
+        def write_part(pkey, table):
+            part = pkey[0].as_py()
+            table = table.filter(pc.invert(table["__pad"]))
+            src, dst = table["__s"].to_numpy(), table["__d"].to_numpy()
+            props = _columns(table, ei.property_groups)
+            write_edge_part(out_dir, ei, aligned_by, part, vcounts, src, dst, props)
+            return pa.table({"part": [part], "edges": [table.num_rows]})
 
-        def make_write_part(_adir, _aligned_chunk, _n_aligned, _key, _other):
-            # applyInPandas requires exactly (key, pdf) — bind the per-layout
-            # values through this factory's closure
-            def write_part(pkey, pdf):
-                return _write_part_impl(pkey, pdf, _adir, _aligned_chunk, _n_aligned, _key, _other)
-
-            return write_part
-
-        def _write_part_impl(pkey, pdf, _adir, _aligned_chunk, _n_aligned, _key, _other):
-            import pandas as pd
-
-            part = int(pkey[0])
-            real = pdf[pdf["__d" if _key == "__s" else "__s"] >= 0].sort_values(
-                [_key, _other], kind="mergesort"
-            )
-            n_edges = len(real)
-            # adjacency + property chunks
-            n_chunks = max(1, -(-n_edges // chunk_size))
-            part_dir = os.path.join(_adir, "adj_list", f"part{part}")
-            os.makedirs(part_dir, exist_ok=True)
-            for j in range(n_chunks):
-                sl = real.iloc[j * chunk_size : (j + 1) * chunk_size]
-                adj = pa.table(
-                    {
-                        SRC_INDEX_COL: pa.array(sl["__s"].to_numpy(dtype=np.int64), pa.int64()),
-                        DST_INDEX_COL: pa.array(sl["__d"].to_numpy(dtype=np.int64), pa.int64()),
-                    }
-                )
-                _write_chunk_file(adj, os.path.join(part_dir, f"chunk{j}"), file_type)
-                for c in pcols:
-                    pdir = os.path.join(_adir, f"{c}/", f"part{part}")
-                    os.makedirs(pdir, exist_ok=True)
-                    _write_chunk_file(
-                        _arrow_table(sl, [c], [ptypes[c]]), os.path.join(pdir, f"chunk{j}"), file_type
-                    )
-            # offset chunk: aligned_chunk+1 part-relative cumulative counts
-            vlo = part * _aligned_chunk
-            vhi = min(vlo + _aligned_chunk, _n_aligned)
-            keys = real[_key].to_numpy(dtype=np.int64)
-            offs = np.searchsorted(keys, np.arange(vlo, vhi + 1))
-            odir = os.path.join(_adir, "offset")
-            os.makedirs(odir, exist_ok=True)
-            _write_chunk_file(
-                pa.table({OFFSET_COL: pa.array(offs, pa.int64())}),
-                os.path.join(odir, f"chunk{part}"),
-                file_type,
-            )
-            with open(os.path.join(_adir, f"edge_count{part}"), "w") as fh:
-                fh.write(str(n_edges))
-            return pd.DataFrame({"part": [part], "edges": [n_edges]})
-
-        stats = (
-            seeded.withColumn("__part", (F.col(key) / aligned_chunk).cast("long"))
-            .groupBy("__part")
-            .applyInPandas(
-                make_write_part(adir, aligned_chunk, n_aligned, key, other),
-                "part long, edges long",
-            )
+        (
+            seeded.groupBy((F.col(key) / aligned_chunk).cast("long").alias("__part"))
+            .applyInArrow(write_part, "part long, edges long")
+            .agg(F.sum("edges"))
+            .first()  # runs the distributed write
         )
-        stats.agg(F.sum("edges")).first()  # trigger the distributed write
 
-        with open(os.path.join(adir, "vertex_count"), "w") as f:
-            f.write(str(n_aligned))
-
-    ey = f"{src_type}_{edge_type}_{dst_type}.edge.yaml"
-    with open(os.path.join(out_dir, ey), "w") as f:
-        yaml.safe_dump(
-            {
-                "src_type": src_type,
-                "edge_type": edge_type,
-                "dst_type": dst_type,
-                "version": "gar/v1",
-                "directed": directed,
-                "chunk_size": chunk_size,
-                "src_chunk_size": src_chunk_size,
-                "dst_chunk_size": dst_chunk_size,
-                "prefix": prefix,
-                "adj_lists": [
-                    {
-                        "aligned_by": ab,
-                        "ordered": True,
-                        "file_type": file_type,
-                        "prefix": "ordered_by_source/" if ab == "src" else "ordered_by_dest/",
-                    }
-                    for ab in layouts
-                ],
-                "property_groups": [
-                    {
-                        "prefix": f"{c}/",
-                        "file_type": file_type,
-                        "properties": [
-                            {
-                                "name": c,
-                                "data_type": ptypes[c],
-                                "is_primary": False,
-                                "is_nullable": True,
-                            }
-                        ],
-                    }
-                    for c in prop_cols
-                ],
-            },
-            f,
-        )
-    return ey
+    return finish_edges(out_dir, ei, vcounts)
 
 
 def write_graph_dist(
@@ -394,38 +240,25 @@ def write_graph_dist(
     property columns into column groups (default: one group per
     column)."""
     os.makedirs(out_dir, exist_ok=True)
-    vertex_yamls, edge_yamls = [], []
-    vcounts: dict[str, int] = {}
+    vertex_yamls, vcounts = [], {}
     for vtype, vdf in vertices.items():
-        vertex_yamls.append(
-            write_vertices_dist(
-                vdf,
-                out_dir,
-                vtype,
-                chunk_size=vertex_chunk_size,
-                property_groups=(vertex_property_groups or {}).get(vtype),
-                file_type=file_type,
-            )
+        groups = (vertex_property_groups or {}).get(vtype)
+        vy, vcounts[vtype] = _write_vertices(
+            vdf, out_dir, vtype, VERTEX_INDEX_COL, vertex_chunk_size, groups, file_type
         )
-        vcounts[vtype] = vdf.count()
-    for triple, edf in (edges or {}).items():
-        edge_yamls.append(
-            write_edges_dist(
-                edf,
-                out_dir,
-                triple,
-                vcounts,
-                chunk_size=edge_chunk_size,
-                src_chunk_size=aligned_chunk_size,
-                dst_chunk_size=aligned_chunk_size,
-                layouts=layouts,
-                file_type=file_type,
-            )
+        vertex_yamls.append(vy)
+    edge_yamls = [
+        write_edges_dist(
+            edf,
+            out_dir,
+            triple,
+            vcounts,
+            chunk_size=edge_chunk_size,
+            src_chunk_size=aligned_chunk_size,
+            dst_chunk_size=aligned_chunk_size,
+            layouts=layouts,
+            file_type=file_type,
         )
-    graph_yaml = os.path.join(out_dir, f"{name}.yaml")
-    with open(graph_yaml, "w") as f:
-        yaml.safe_dump(
-            {"name": name, "version": "gar/v1", "vertices": vertex_yamls, "edges": edge_yamls},
-            f,
-        )
-    return graph_yaml
+        for triple, edf in (edges or {}).items()
+    ]
+    return dump_graph(out_dir, name, vertex_yamls, edge_yamls)

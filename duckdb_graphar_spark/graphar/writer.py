@@ -1,51 +1,47 @@
-"""GraphAr `gar/v1` fixture writer.
+"""GraphAr `gar/v1` layout writer.
 
 The reference is read-only (every write throws,
 `src/storage/graphar_catalog.cpp:61-81`), but its test data blobs are
 stripped from the snapshot, so we need a writer to produce GraphAr-layout
-fixtures for our own tests.  This is a driver-side pyarrow utility sized
-for test fixtures; a distributed writer would be `df.write.parquet` +
-chunk renaming and is out of parity scope (SURVEY §2.A6).
+fixtures for our own tests (SURVEY §2.A6: "`df.write.parquet` plus YAML
+emit").
 
-Layout written (see metadata.py docstring): parquet chunk files,
-ASCII-int count files, `gar/v1` YAML metadata.
+This module writes the layout once, for both graph writers:
+
+- `write_vertex_chunk` writes one vertex chunk's property-group files;
+- `write_edge_part` sorts and writes one edge part of one adjacency
+  layout: its adjacency chunks, property chunks, offset chunk and
+  `edge_count{i}`;
+- `finish_vertices` / `finish_edges` write the count files and dump the
+  YAML through `metadata`'s own dataclasses.
+
+`write_graph` runs those writers in-process over numpy/pyarrow slices
+(no Spark session needed); `spark_writer.write_graph_dist` runs the same
+two file writers inside its Spark tasks.  Layout written (see the
+metadata.py docstring): chunk files, ASCII-int count files, `gar/v1` YAML.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-import yaml
 
 from duckdb_graphar_spark.graphar.metadata import (
     DST_INDEX_COL,
     OFFSET_COL,
     SRC_INDEX_COL,
+    AdjList,
+    EdgeInfo,
+    Property,
+    PropertyGroup,
+    VertexInfo,
+    dump_graph,
+    graphar_type_of,
 )
-
-# Arrow type -> GraphAr declared type (reference map src/utils/func.cpp:30-40).
-_ARROW_TO_GRAPHAR = {
-    pa.bool_(): "bool",
-    pa.int32(): "int32",
-    pa.int64(): "int64",
-    pa.float32(): "float",
-    pa.float64(): "double",
-    pa.string(): "string",
-    pa.large_string(): "string",
-    pa.date32(): "date",
-    pa.date64(): "date",
-}
-
-
-def _graphar_type(t: pa.DataType) -> str:
-    for k, v in _ARROW_TO_GRAPHAR.items():
-        if t.equals(k):
-            return v
-    raise NotImplementedError(f"arrow type {t} has no GraphAr mapping")
 
 
 @dataclass
@@ -80,8 +76,30 @@ class EdgeSpec:
     file_type: str = "parquet"
 
 
+def property_groups(
+    types: dict[str, str], groups: list[list[str]] | None, file_type: str
+) -> list[PropertyGroup]:
+    """Property groups over columns `types` (name -> GraphAr type, in
+    column order); default one group per column."""
+    return [
+        PropertyGroup([Property(c, types[c]) for c in cols], file_type)
+        for cols in groups or [[c] for c in types]
+    ]
+
+
+def aligned_parts(ei: EdgeInfo, aligned_by: str, vcounts: dict[str, int]) -> tuple[int, int, int]:
+    """(aligned chunk size, aligned vertex count, part count) of a layout:
+    part i holds the edges whose aligned vertex is in vertex chunk i."""
+    if aligned_by == "src":
+        size, n = ei.src_chunk_size, vcounts[ei.src_type]
+    else:
+        size, n = ei.dst_chunk_size, vcounts[ei.dst_type]
+    return size, n, max(1, -(-n // size))
+
+
 def _write_chunk_file(table: pa.Table, path: str, file_type: str) -> None:
     """Write one chunk in any of the reference-supported formats (A4)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     if file_type == "parquet":
         pq.write_table(table, path)
     elif file_type == "orc":
@@ -103,6 +121,91 @@ def _write_chunk_file(table: pa.Table, path: str, file_type: str) -> None:
         raise NotImplementedError(f"chunk file_type {file_type!r}")
 
 
+def _write_count(path: str, value: int) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        f.write(str(value))
+
+
+def write_vertex_chunk(
+    out_dir: str, vi: VertexInfo, k: int, n: int, index: np.ndarray, table: pa.Table
+) -> None:
+    """Write chunk `k` of a vertex type with `n` vertices: one file per
+    property group.  `index` holds the rows' vertex indexes, which must be
+    exactly the chunk's share of the dense range 0..n-1."""
+    lo = k * vi.chunk_size
+    want = np.arange(lo, min(lo + vi.chunk_size, n))
+    if not np.array_equal(index, want):
+        raise ValueError(
+            f"vertex type {vi.type} has {n} vertices but its chunk {k} holds indexes "
+            f"{index[:5].tolist()}...: the vertex index must be dense 0..{n - 1}"
+        )
+    for pg in vi.property_groups:
+        cols = table.select([p.name for p in pg.properties])
+        _write_chunk_file(cols, os.path.join(out_dir, vi.prefix, pg.prefix, f"chunk{k}"), pg.file_type)
+
+
+def write_edge_part(
+    out_dir: str,
+    ei: EdgeInfo,
+    aligned_by: str,
+    part: int,
+    vcounts: dict[str, int],
+    src: np.ndarray,
+    dst: np.ndarray,
+    props: pa.Table | None,
+) -> None:
+    """Sort and write part `part` of the `aligned_by` layout: adjacency
+    chunks, property chunks (`props` rows align with src/dst), the offset
+    chunk and `edge_count{part}`.  Every id must lie in [0, vertex count)."""
+    n_src, n_dst = vcounts[ei.src_type], vcounts[ei.dst_type]
+    bad = ~((src >= 0) & (src < n_src) & (dst >= 0) & (dst < n_dst))
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"edge ({src[i]}, {dst[i]}) of {ei.triple_name} has an id outside "
+            f"[0, vertex count): {ei.src_type} has {n_src}, {ei.dst_type} has {n_dst}"
+        )
+    key, other = (src, dst) if aligned_by == "src" else (dst, src)
+    order = np.lexsort((other, key))
+    src, dst, key = src[order], dst[order], key[order]
+    if ei.property_groups:
+        props = props.take(order)
+    adir = os.path.join(out_dir, ei.prefix, ei.adj_list(aligned_by).prefix)
+    file_type = ei.adj_list(aligned_by).file_type
+    size = ei.chunk_size
+    for j in range(max(1, -(-len(src) // size))):
+        rows = slice(j * size, (j + 1) * size)
+        ids = {SRC_INDEX_COL: src[rows], DST_INDEX_COL: dst[rows]}
+        adj = pa.table({c: pa.array(v, pa.int64()) for c, v in ids.items()})
+        _write_chunk_file(adj, os.path.join(adir, "adj_list", f"part{part}", f"chunk{j}"), file_type)
+        for pg in ei.property_groups:
+            cols = props.select([p.name for p in pg.properties]).slice(j * size, size)
+            path = os.path.join(adir, pg.prefix, f"part{part}", f"chunk{j}")
+            _write_chunk_file(cols, path, pg.file_type)
+    # offset chunk: aligned_chunk+1 cumulative counts relative to the part start
+    aligned_chunk, n_aligned, _ = aligned_parts(ei, aligned_by, vcounts)
+    vlo = part * aligned_chunk
+    offs = np.searchsorted(key, np.arange(vlo, min(vlo + aligned_chunk, n_aligned) + 1))
+    offsets = pa.table({OFFSET_COL: pa.array(offs, pa.int64())})
+    _write_chunk_file(offsets, os.path.join(adir, "offset", f"chunk{part}"), file_type)
+    _write_count(os.path.join(adir, f"edge_count{part}"), len(src))
+
+
+def finish_vertices(out_dir: str, vi: VertexInfo, n: int) -> str:
+    """Write the type's `vertex_count` and its YAML; returns the YAML name."""
+    _write_count(os.path.join(out_dir, vi.prefix, "vertex_count"), n)
+    return vi.dump(out_dir)
+
+
+def finish_edges(out_dir: str, ei: EdgeInfo, vcounts: dict[str, int]) -> str:
+    """Write each layout's `vertex_count` and the edge YAML; returns the YAML name."""
+    for a in ei.adj_lists:
+        n = aligned_parts(ei, a.aligned_by, vcounts)[1]
+        _write_count(os.path.join(out_dir, ei.prefix, a.prefix, "vertex_count"), n)
+    return ei.dump(out_dir)
+
+
 def write_graph(
     out_dir: str,
     name: str,
@@ -114,180 +217,40 @@ def write_graph(
     vertex_yamls, edge_yamls = [], []
 
     for vtype, spec in vertices.items():
-        vertex_yamls.append(_write_vertex(out_dir, vtype, spec))
+        types = {f.name: graphar_type_of(f.type) for f in spec.table.schema}
+        groups = property_groups(types, spec.property_groups, spec.file_type)
+        vi = VertexInfo(vtype, spec.chunk_size, groups)
+        n = spec.table.num_rows
+        for k in range(max(1, -(-n // spec.chunk_size))):
+            lo = k * spec.chunk_size
+            rows = np.arange(lo, min(lo + spec.chunk_size, n))
+            write_vertex_chunk(out_dir, vi, k, n, rows, spec.table.slice(lo, len(rows)))
+        vertex_yamls.append(finish_vertices(out_dir, vi, n))
 
     vcounts = {vtype: spec.table.num_rows for vtype, spec in vertices.items()}
     for triple, spec in (edges or {}).items():
-        edge_yamls.append(_write_edge(out_dir, triple, spec, vcounts))
-
-    graph_yaml = os.path.join(out_dir, f"{name}.yaml")
-    with open(graph_yaml, "w") as f:
-        yaml.safe_dump(
-            {
-                "name": name,
-                "version": "gar/v1",
-                "vertices": vertex_yamls,
-                "edges": edge_yamls,
-            },
-            f,
+        props = spec.properties
+        types = {f.name: graphar_type_of(f.type) for f in props.schema} if props is not None else {}
+        ei = EdgeInfo(
+            *triple,
+            chunk_size=spec.chunk_size,
+            src_chunk_size=spec.src_chunk_size,
+            dst_chunk_size=spec.dst_chunk_size,
+            directed=spec.directed,
+            adj_lists=[AdjList(ab, True, spec.file_type) for ab in spec.layouts],
+            property_groups=property_groups(types, None, spec.file_type),
         )
-    return graph_yaml
+        src = np.asarray(spec.src, dtype=np.int64)
+        dst = np.asarray(spec.dst, dtype=np.int64)
+        for aligned_by in spec.layouts:
+            aligned_chunk, _, n_parts = aligned_parts(ei, aligned_by, vcounts)
+            # an id outside the vertex range lands in an end part, which rejects it
+            key = src if aligned_by == "src" else dst
+            part_of = np.clip(key // aligned_chunk, 0, n_parts - 1)
+            for part in range(n_parts):
+                rows = np.flatnonzero(part_of == part)
+                part_props = props.take(rows) if props is not None else None
+                write_edge_part(out_dir, ei, aligned_by, part, vcounts, src[rows], dst[rows], part_props)
+        edge_yamls.append(finish_edges(out_dir, ei, vcounts))
 
-
-def _write_chunks(
-    table: pa.Table, directory: str, chunk_size: int, file_type: str = "parquet"
-) -> None:
-    os.makedirs(directory, exist_ok=True)
-    n = table.num_rows
-    nchunks = max(1, -(-n // chunk_size))
-    for i in range(nchunks):
-        chunk = table.slice(i * chunk_size, chunk_size)
-        _write_chunk_file(chunk, os.path.join(directory, f"chunk{i}"), file_type)
-
-
-def _write_count(path: str, value: int) -> None:
-    with open(path, "w") as f:
-        f.write(str(value))
-
-
-def _write_vertex(out_dir: str, vtype: str, spec: VertexSpec) -> str:
-    prefix = f"vertex/{vtype}/"
-    vdir = os.path.join(out_dir, prefix)
-    os.makedirs(vdir, exist_ok=True)
-    groups = spec.property_groups or [[c] for c in spec.table.column_names]
-    pg_meta = []
-    for cols in groups:
-        pg_prefix = "_".join(cols) + "/"
-        sub = spec.table.select(cols)
-        _write_chunks(sub, os.path.join(vdir, pg_prefix), spec.chunk_size, spec.file_type)
-        pg_meta.append(
-            {
-                "prefix": pg_prefix,
-                "file_type": spec.file_type,
-                "properties": [
-                    {
-                        "name": c,
-                        "data_type": _graphar_type(sub.schema.field(c).type),
-                        "is_primary": False,
-                        "is_nullable": True,
-                    }
-                    for c in cols
-                ],
-            }
-        )
-    _write_count(os.path.join(vdir, "vertex_count"), spec.table.num_rows)
-
-    vy = f"{vtype}.vertex.yaml"
-    with open(os.path.join(out_dir, vy), "w") as f:
-        yaml.safe_dump(
-            {
-                "type": vtype,
-                "version": "gar/v1",
-                "chunk_size": spec.chunk_size,
-                "prefix": prefix,
-                "property_groups": pg_meta,
-            },
-            f,
-        )
-    return vy
-
-
-def _write_edge(
-    out_dir: str,
-    triple: tuple[str, str, str],
-    spec: EdgeSpec,
-    vcounts: dict[str, int],
-) -> str:
-    src_type, edge_type, dst_type = triple
-    prefix = f"edge/{src_type}_{edge_type}_{dst_type}/"
-    src = np.asarray(spec.src, dtype=np.int64)
-    dst = np.asarray(spec.dst, dtype=np.int64)
-
-    for aligned_by in spec.layouts:
-        adj_prefix = "ordered_by_source/" if aligned_by == "src" else "ordered_by_dest/"
-        adir = os.path.join(out_dir, prefix, adj_prefix)
-        key, other = (src, dst) if aligned_by == "src" else (dst, src)
-        aligned_chunk = spec.src_chunk_size if aligned_by == "src" else spec.dst_chunk_size
-        n_aligned_vertices = vcounts[src_type if aligned_by == "src" else dst_type]
-
-        order = np.lexsort((other, key))
-        s_sorted, d_sorted = src[order], dst[order]
-        key_sorted = key[order]
-        props_sorted = spec.properties.take(pa.array(order)) if spec.properties is not None else None
-
-        n_parts = max(1, -(-n_aligned_vertices // aligned_chunk))
-        # part i = edges whose aligned vertex is in vertex chunk i
-        part_bounds = np.searchsorted(key_sorted, np.arange(0, (n_parts + 1) * aligned_chunk, aligned_chunk))
-        for part in range(n_parts):
-            lo, hi = int(part_bounds[part]), int(part_bounds[part + 1])
-            part_tbl = pa.table(
-                {
-                    SRC_INDEX_COL: pa.array(s_sorted[lo:hi], pa.int64()),
-                    DST_INDEX_COL: pa.array(d_sorted[lo:hi], pa.int64()),
-                }
-            )
-            _write_chunks(part_tbl, os.path.join(adir, "adj_list", f"part{part}"), spec.chunk_size, spec.file_type)
-            _write_count(os.path.join(adir, f"edge_count{part}"), hi - lo)
-            if props_sorted is not None:
-                for col in props_sorted.column_names:
-                    _write_chunks(
-                        props_sorted.select([col]).slice(lo, hi - lo),
-                        os.path.join(adir, f"{col}/", f"part{part}"),
-                        spec.chunk_size,
-                        spec.file_type,
-                    )
-            # offset chunk: aligned_chunk+1 cumulative counts relative to part start
-            vlo = part * aligned_chunk
-            vhi = min(vlo + aligned_chunk, n_aligned_vertices)
-            offs = np.searchsorted(key_sorted[lo:hi], np.arange(vlo, vhi + 1))
-            off_tbl = pa.table({OFFSET_COL: pa.array(offs, pa.int64())})
-            odir = os.path.join(adir, "offset")
-            os.makedirs(odir, exist_ok=True)
-            _write_chunk_file(off_tbl, os.path.join(odir, f"chunk{part}"), spec.file_type)
-        _write_count(os.path.join(adir, "vertex_count"), n_aligned_vertices)
-
-    pg_meta = []
-    if spec.properties is not None:
-        for col in spec.properties.column_names:
-            pg_meta.append(
-                {
-                    "prefix": f"{col}/",
-                    "file_type": spec.file_type,
-                    "properties": [
-                        {
-                            "name": col,
-                            "data_type": _graphar_type(spec.properties.schema.field(col).type),
-                            "is_primary": False,
-                            "is_nullable": True,
-                        }
-                    ],
-                }
-            )
-
-    ey = f"{src_type}_{edge_type}_{dst_type}.edge.yaml"
-    with open(os.path.join(out_dir, ey), "w") as f:
-        yaml.safe_dump(
-            {
-                "src_type": src_type,
-                "edge_type": edge_type,
-                "dst_type": dst_type,
-                "version": "gar/v1",
-                "directed": spec.directed,
-                "chunk_size": spec.chunk_size,
-                "src_chunk_size": spec.src_chunk_size,
-                "dst_chunk_size": spec.dst_chunk_size,
-                "prefix": prefix,
-                "adj_lists": [
-                    {
-                        "aligned_by": ab,
-                        "ordered": True,
-                        "file_type": spec.file_type,
-                        "prefix": "ordered_by_source/" if ab == "src" else "ordered_by_dest/",
-                    }
-                    for ab in spec.layouts
-                ],
-                "property_groups": pg_meta,
-            },
-            f,
-        )
-    return ey
+    return dump_graph(out_dir, name, vertex_yamls, edge_yamls)

@@ -4,7 +4,8 @@ capture the per-micro-batch progress events via a StreamingQueryListener
 while the entry runs, and report the structural costs the wall clock is
 made of:
 
-- n_batches          — micro-batches executed (incl. empty flush batches)
+- n_batches          — micro-batches that read input (numInputRows > 0); no-data
+                       batches are left out, their number depends on timing
 - input_rows         — total numInputRows across batches
 - n_state_ops        — state operators in the query
 - state_partitions   — state-store instances per state op (== the
@@ -109,7 +110,7 @@ def main() -> None:
             input_rows += p.get("numInputRows") or 0
         out[name] = {
             "sec": round(sec, 3),
-            "n_batches": len(batches),
+            "n_batches": sum(1 for p in batches if (p.get("numInputRows") or 0) > 0),
             "input_rows": input_rows,
             "n_state_ops": n_state_ops,
             "state_partitions": state_parts,

@@ -156,3 +156,13 @@ def test_oracle_arrow_schema_driver_safe(duck, name):
         "pandas canon cannot hash list/struct/map/blob cells; "
         "array_to_string for lists, sha256(decode(..)) for blobs"
     )
+
+
+def test_priority_names_registered_entries_once():
+    """The correctness window's order list names each entry prefix once
+    (`list.index` takes the first of a repeat, so a second one is dead)
+    and only prefixes of registered entries."""
+    prio = entrymod._PRIORITY
+    assert len(prio) == len(set(prio)), sorted({p for p in prio if prio.count(p) > 1})
+    registered = {name.split("_", 1)[0] for name in entrymod._REGISTRY}
+    assert set(prio) <= registered, sorted(set(prio) - registered)
