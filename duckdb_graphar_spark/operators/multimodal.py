@@ -1,34 +1,49 @@
 """Multimodal column plumbing: image/audio/video as opaque `binary`
-payloads with typed metadata — ALL decode paths are real,
-dependency-free codecs (no fake tier remains):
+payloads with typed metadata.  Every decode path is a real,
+dependency-free pure-`struct`/numpy codec:
 
-- 24-bpp BMP and binary PPM (P6): pure `struct`/numpy — header
-  validation, row padding, bottom-up row order (:func:`decode_bmp`,
-  :func:`decode_ppm`, :func:`encode_bmp`);
-- COMPLETE baseline JPEG, grayscale AND 3-component 4:2:0 color:
-  forward/inverse DCT, canonical Annex-K Huffman coding, byte
-  stuffing, marker parsing, fixed-point BT.601 color transforms
-  (:func:`encode_gray_jpeg`, :func:`decode_jpeg_gray`,
-  :func:`encode_color_jpeg`, :func:`decode_color_jpeg`);
-- 8-bit grayscale PNG: CRC chunk walk, stdlib-zlib inflate, all five
-  scanline filters (:func:`encode_gray_png`, :func:`decode_png_gray`);
-- Motion-JPEG AVI: general RIFF chunk walk (:func:`encode_mjpeg_avi`,
-  :func:`decode_mjpeg_avi`);
-- raw 16-bit PCM audio (:func:`encode_text_pcm`,
-  :func:`pcm_energy_stats`);
+- BMP, 24-bpp and 32-bpp BGRA: header validation, row padding,
+  bottom-up row order (:func:`encode_bmp`, :func:`encode_bmp32`,
+  :func:`decode_bmp`);
+- binary netpbm, PPM (P6) and PGM (P5): one ASCII header parser
+  (:func:`decode_ppm`, :func:`decode_pgm`);
+- JPEG, baseline and progressive, grayscale and 3-component colour
+  (4:2:0 and 4:4:4 baseline; progressive colour at 4:4:4): forward/
+  inverse DCT, canonical Huffman coding, byte stuffing, DRI/RSTn
+  restart markers, 8- and 16-bit quantization tables, fixed-point
+  BT.601 colour transforms (:func:`decode_jpeg_gray`,
+  :func:`decode_color_jpeg` and their encoders);
+- PNG, 8-bit gray, RGB truecolor, indexed colour at depth 1/2/4/8 with
+  tRNS alpha, and 16-bit gray: one CRC-verified chunk walk, stdlib-zlib
+  inflate, all five scanline filters, Adam7 interlace
+  (:func:`decode_png_gray`, :func:`decode_png_rgb`,
+  :func:`decode_png_palette`, :func:`decode_png_gray16`);
+- GIF87a/89a, still (global or local colour table) and animated
+  (per-frame delays): real LZW (:func:`decode_gif`,
+  :func:`decode_animated_gif`);
+- baseline grayscale TIFF, raw, PackBits or LZW strips, both byte
+  orders (:func:`decode_gray_tiff`);
+- RIFF: WAV with int16 PCM or 32-bit float samples over any channel
+  count (:func:`decode_wav`), Motion-JPEG AVI (:func:`decode_mjpeg_avi`),
+  and raw 16-bit PCM (:func:`pcm_energy_stats`);
 - integer-exact area-average resize (:func:`box_downsample_2x`).
 
-Formats outside these (MP4, CCITT/JPEG-in-TIFF, subsampled progressive
-color) raise NotImplementedError — honest scope guards, not stubs.
-Everything Spark-side — schema, Arrow batch shape, `mapInPandas`
-signature, partition sizing — is format-agnostic, so adding codecs
-only widens the set of accepted magics.
+Outside these formats the decoders raise NotImplementedError, an
+honest scope guard rather than a stub: MP4, CCITT or JPEG-in-TIFF,
+and progressive colour JPEG with subsampled chroma (progressive colour
+decodes at 4:4:4 only).
+
+Spark-side there is one path, :func:`_map_docs`: every operator is a
+single Arrow-batched `mapInPandas` over (doc_id, column) that decodes
+or encodes row by row, with no shuffle.  It is format-agnostic, so
+adding a codec only widens the set of accepted magics.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -40,19 +55,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 _BMP_FILE = struct.Struct("<2sIHHI")  # magic, file size, res, res, pixel offset
 _BMP_INFO = struct.Struct("<IiiHHIIiiII")  # hdr size, w, h, planes, bpp, comp, ...
 
-# Typed metadata struct accompanying every media payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("format", T.StringType(), True),  # png|jpeg|wav|...
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
-
 IMAGE_FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -63,6 +65,54 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
         T.StructField("phash", T.LongType(), True),
     ]
 )
+
+# output of every encode_text_* operator
+_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+    ]
+)
+
+
+def _map_docs(
+    df: DataFrame,
+    id_col: str,
+    col: str,
+    schema: T.StructType,
+    rows: Callable[[int, object], Iterable[tuple]],
+) -> DataFrame:
+    """The module's one Spark-side path: project (doc_id, ``col``) and
+    run ``rows(doc_id, value)`` over every document inside a single
+    Arrow-batched `mapInPandas` (row-local, no shuffle; the decode
+    working set is one incoming Arrow batch).  ``rows`` yields the
+    document's output tuples in ``schema`` field order: one for a codec
+    or a per-document stat, one per frame for a frame sampler."""
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = [
+                row
+                for did, value in zip(pdf["doc_id"], pdf["__value"])
+                for row in rows(int(did), value)
+            ]
+            yield pd.DataFrame(out, columns=names)
+
+    cols = df.select(F.col(id_col).alias("doc_id"), F.col(col).alias("__value"))
+    return cols.mapInPandas(batches, schema)
+
+
+def _round6(x: float) -> float:
+    """HALF_UP at 6 decimals on the double's exact binary value: what
+    DuckDB/Spark ROUND do.  Python round() half-evens, which diverges
+    when a mean lands exactly on a 5e-7 tie."""
+    return float(Decimal(x).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _channel_sums(pixels: np.ndarray, n: int) -> tuple[int, ...]:
+    """Exact per-channel integer sums of interleaved ``n``-channel pixels."""
+    return tuple(int(v) for v in pixels.reshape(-1, n).astype(np.int64).sum(axis=0))
 
 
 def box_downsample_2x(pixels: np.ndarray) -> np.ndarray:
@@ -85,15 +135,23 @@ def box_downsample_2x(pixels: np.ndarray) -> np.ndarray:
     return ((s + 2) >> 2).astype(np.uint8)
 
 
+def _text_bytes(text: str, did) -> np.ndarray:
+    """A document's UTF-8 bytes, the pixel/sample source of every
+    text-to-media encoder; empty text raises (there is no byte to
+    tile)."""
+    tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    if tb.size == 0:
+        raise ValueError(f"empty text for doc {did}")
+    return tb
+
+
 def _ascii_text_bytes(text: str, did) -> np.ndarray:
     """Shared guard for the text-to-media encoders whose SQL oracles
     reason in CHARACTER semantics (length(text), unicode(text[i])):
     multibyte UTF-8 would make byte-derived dims/pixels silently diverge
     from the oracle, so non-ASCII raises — mirroring the guard in
     :func:`encode_text_pcm`."""
-    tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-    if tb.size == 0:
-        raise ValueError(f"empty text for doc {did}")
+    tb = _text_bytes(text, did)
     if int(tb.max()) >= 128:
         raise ValueError(
             f"text-to-media encoders require ASCII text "
@@ -101,6 +159,19 @@ def _ascii_text_bytes(text: str, did) -> np.ndarray:
             "dims/pixels would diverge from the character-semantics oracle"
         )
     return tb
+
+
+def _text_pcm(tb: np.ndarray) -> np.ndarray:
+    """The audio fixtures' waveform: sample i = (byte i - 80)·256."""
+    return (tb.astype(np.int32) - 80) * 256
+
+
+def _text_palette(p: int, coefs=((37, 11), (59, 23), (83, 5))) -> np.ndarray:
+    """The fixtures' ``p``-entry palette: entry k, channel c =
+    (a_c·k + b_c) mod 256 for ``coefs`` = ((a_r, b_r), (a_g, b_g),
+    (a_b, b_b))."""
+    k = np.arange(p, dtype=np.int64)
+    return np.stack([(a * k + b) % 256 for a, b in coefs], axis=1).astype(np.uint8)
 
 
 def encode_bmp(pixels_topdown_bgr: np.ndarray) -> bytes:
@@ -152,12 +223,12 @@ def decode_bmp(payload: bytes) -> dict:
     }
 
 
-def decode_ppm(payload: bytes) -> dict:
-    """Parse binary PPM (P6): ASCII header (magic, width, height, maxval,
-    '#' comments allowed) then raw RGB triplets.  Returns the same shape
-    as :func:`decode_bmp` (pixels already top-down; RGB channel order)."""
-    if payload[:2] != b"P6":
-        raise ValueError("not a P6 PPM")
+def _decode_netpbm(payload: bytes, magic: bytes, name: str, nch: int) -> dict:
+    """The binary netpbm container (P6 PPM, P5 PGM): ASCII header of
+    magic, width, height, maxval ('#' comments allowed), one whitespace
+    byte, then raw top-down samples, ``nch`` per pixel."""
+    if payload[:2] != magic:
+        raise ValueError(f"not a {magic.decode()} {name}")
     pos, fields = 2, []
     while len(fields) < 3:
         while pos < len(payload) and payload[pos : pos + 1].isspace():
@@ -173,12 +244,19 @@ def decode_ppm(payload: bytes) -> dict:
     pos += 1  # single whitespace after maxval
     w, h, maxval = fields
     if maxval > 255:
-        raise NotImplementedError("16-bit PPM not supported")
-    need = w * h * 3
+        raise NotImplementedError(f"16-bit {name} not supported")
+    need = w * h * nch
     px = np.frombuffer(payload, np.uint8, count=need, offset=pos)
     if px.size < need:
-        raise ValueError("PPM truncated")
+        raise ValueError(f"{name} truncated")
     return {"width": w, "height": h, "pixels": px.copy()}
+
+
+def decode_ppm(payload: bytes) -> dict:
+    """Parse binary PPM (P6): ASCII header (magic, width, height, maxval,
+    '#' comments allowed) then raw RGB triplets.  Returns the same shape
+    as :func:`decode_bmp` (pixels already top-down; RGB channel order)."""
+    return _decode_netpbm(payload, b"P6", "PPM", 3)
 
 
 def average_hash(width: int, height: int, pixels: np.ndarray) -> int:
@@ -252,47 +330,19 @@ def decode_image(payload: bytes) -> dict:
 
 
 def extract_image_features(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    batch_rows: int = 1024,
-    set_arrow_batch_conf: bool = False,
+    df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Decode + feature-extract image payloads via `mapInPandas`
     (REAL decode only — :func:`decode_image` dispatches on magic).
+    The decode working set is one incoming Arrow batch; for media whose
+    raw payloads are many MB each, size the batch with
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``."""
 
-    The decode working set is bounded by slicing each incoming Arrow
-    batch into ``batch_rows``-row chunks inside the generator — no
-    session conf is touched.  For 100 TB media where even the *raw
-    payload* Arrow batch must shrink (payloads of many MB each), pass
-    ``set_arrow_batch_conf=True`` to also lower
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``; note that conf is
-    session-wide and stays set (it is read at execution time, so a
-    save/restore around this lazy builder would be a no-op).
-    """
-    spark = df.sparkSession
-    if set_arrow_batch_conf:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
+    def rows(did, payload):
+        f = decode_image(payload)
+        yield did, f["width"], f["height"], len(payload), f["mean_intensity"], f["phash"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start : start + batch_rows]
-                feats = [decode_image(bytes(p)) for p in chunk["__payload"]]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": chunk["doc_id"].astype("int64"),
-                        "width": pd.array([f["width"] for f in feats], dtype="Int32"),
-                        "height": pd.array([f["height"] for f in feats], dtype="Int32"),
-                        "n_bytes": chunk["__payload"].map(len).astype("int64"),
-                        "mean_intensity": [f["mean_intensity"] for f in feats],
-                        "phash": pd.array([f["phash"] for f in feats], dtype="Int64"),
-                    }
-                )
-
-    return cols.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    return _map_docs(df, id_col, payload_col, IMAGE_FEATURE_SCHEMA, rows)
 
 
 BMP_CHANNEL_STATS_SCHEMA = T.StructType(
@@ -307,6 +357,13 @@ BMP_CHANNEL_STATS_SCHEMA = T.StructType(
 )
 
 
+def _channel_means(d: dict) -> tuple[float, ...]:
+    """Per-channel means of a decoded 3-channel image: integer pixel
+    sums divided once in float64, then :func:`_round6`."""
+    n = d["width"] * d["height"]
+    return tuple(_round6(float(s) / n) for s in _channel_sums(d["pixels"], 3))
+
+
 def encode_text_bmp(
     df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -316,29 +373,16 @@ def encode_text_bmp(
     octet_length(text).  The payload is a genuine BMP file (struct-packed
     headers, bottom-up padded rows) — the fixture-side half of the real
     decode path, with pixel statistics independently computable from the
-    text by a SQL oracle."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    text by a SQL oracle.  Empty text raises ValueError."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                w = 1 + (len(tb) % 16)
-                h = 1 + (int(did) % 12)
-                px = np.resize(tb, w * h * 3).reshape(h, w, 3)  # cyclic tile
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads})
+    def rows(did, text):
+        tb = _text_bytes(text, did)
+        w = 1 + (len(tb) % 16)
+        h = 1 + (did % 12)
+        px = np.resize(tb, w * h * 3).reshape(h, w, 3)  # cyclic tile
+        yield did, encode_bmp(px)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def bmp_channel_stats(
@@ -352,32 +396,14 @@ def bmp_channel_stats(
     oracle reproduces the values bit-for-bit.  Scale shape: Arrow-batched
     mapInPandas projection, no shuffle; payload batches are bounded by
     the incoming Arrow batch size."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "mean_b", "mean_g", "mean_r")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_bmp(bytes(payload))
-                if d.get("n_channels", 3) != 3:
-                    raise ValueError("bmp_channel_stats expects 24-bpp BMP")
-                w, h, px = d["width"], d["height"], d["pixels"]
-                n = w * h
-                out["doc_id"].append(int(did))
-                out["width"].append(w)
-                out["height"].append(h)
-                for ci, key in enumerate(("mean_b", "mean_g", "mean_r")):
-                    # HALF_UP on the double's exact binary value — what
-                    # DuckDB/Spark ROUND do; Python round() half-evens,
-                    # which diverges when n = w·h is a power of two and
-                    # the mean lands exactly on a 5e-7 tie
-                    mean = float(int(px[ci::3].sum(dtype=np.int64))) / n
-                    out[key].append(
-                        float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                    )
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_bmp(payload)
+        if d.get("n_channels", 3) != 3:
+            raise ValueError("bmp_channel_stats expects 24-bpp BMP")
+        yield did, d["width"], d["height"], *_channel_means(d)
 
-    return cols.mapInPandas(batches, BMP_CHANNEL_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, BMP_CHANNEL_STATS_SCHEMA, rows)
 
 
 def encode_text_ppm(
@@ -388,30 +414,18 @@ def encode_text_ppm(
     triplets.  Dimensions w = 1 + octet_length(text) mod 13,
     h = 1 + id mod 9; pixel byte i = text byte (2·i) mod octet_length —
     a stride-2 cyclic sample, deliberately different from the BMP
-    fixture so the two codecs can't share a decode bug."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    fixture so the two codecs can't share a decode bug.  Empty text
+    raises ValueError."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                w = 1 + (len(tb) % 13)
-                h = 1 + (int(did) % 9)
-                idx = (np.arange(w * h * 3) * 2) % len(tb)
-                header = f"P6\n# doc {int(did)}\n{w} {h}\n255\n".encode()
-                payloads.append(header + tb[idx].tobytes())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads})
+    def rows(did, text):
+        tb = _text_bytes(text, did)
+        w = 1 + (len(tb) % 13)
+        h = 1 + (did % 9)
+        idx = (np.arange(w * h * 3) * 2) % len(tb)
+        header = f"P6\n# doc {did}\n{w} {h}\n255\n".encode()
+        yield did, header + tb[idx].tobytes()
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 PPM_CHANNEL_STATS_SCHEMA = T.StructType(
@@ -432,26 +446,12 @@ def ppm_channel_stats(
     """Per-image per-channel means from genuinely parsed PPM payloads
     (:func:`decode_ppm`: header fields, comment lines, raw RGB planes).
     Same HALF_UP round-6 discipline as :func:`bmp_channel_stats`."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_ppm(bytes(payload))
-                w, h, px = d["width"], d["height"], d["pixels"]
-                n = w * h
-                out["doc_id"].append(int(did))
-                out["width"].append(w)
-                out["height"].append(h)
-                for ci, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                    mean = float(int(px[ci::3].sum(dtype=np.int64))) / n
-                    out[key].append(
-                        float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                    )
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_ppm(payload)
+        yield did, d["width"], d["height"], *_channel_means(d)
 
-    return cols.mapInPandas(batches, PPM_CHANNEL_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, PPM_CHANNEL_STATS_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -534,6 +534,50 @@ def _jpeg_dct_matrix() -> np.ndarray:
 
 
 _JPEG_DCT_M = _jpeg_dct_matrix()
+
+# JFIF APP0 segment (version 1.01, 1:1 aspect, no thumbnail)
+_JPEG_APP0 = (
+    b"\xff\xe0"
+    + struct.pack(">H", 16)
+    + b"JFIF\x00\x01\x01\x00"
+    + struct.pack(">HH", 1, 1)
+    + b"\x00\x00"
+)
+
+
+def _jpeg_dht_segment(cls: int, bits: list[int], vals: list[int]) -> bytes:
+    """One DHT segment defining the table ``cls`` (class << 4 | id)."""
+    return (
+        b"\xff\xc4"
+        + struct.pack(">H", 3 + 16 + len(vals))
+        + bytes([cls])
+        + bytes(bits)
+        + bytes(vals)
+    )
+
+
+def _jpeg_dri_segment(restart_interval: int) -> bytes:
+    """The DRI segment, or nothing when ``restart_interval`` is 0."""
+    if not restart_interval:
+        return b""
+    return b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+
+
+def _jpeg_zigzag_blocks(plane: np.ndarray) -> np.ndarray:
+    """Forward DCT + all-ones quantization of every 8×8 block of an
+    (h, w) plane (h, w multiples of 8), blocks in raster order →
+    (n_blocks, 64) int64 zigzag coefficients."""
+    h, w = plane.shape
+    f = plane.astype(np.float64) - 128.0
+    coefs = np.zeros(((h // 8) * (w // 8), 64), dtype=np.int64)
+    i = 0
+    for by in range(h // 8):
+        for bx in range(w // 8):
+            block = f[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+            q = np.rint(_JPEG_DCT_M @ block @ _JPEG_DCT_M.T).astype(np.int64)
+            coefs[i] = q.reshape(-1)[_JPEG_ZIGZAG]
+            i += 1
+    return coefs
 
 
 def _huff_canonical(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -702,10 +746,7 @@ def encode_gray_jpeg(
     ac_codes = _huff_canonical(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
     out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HH", 1, 1
-    ) + b"\x00\x00"  # APP0
+    out += b"\xff\xd8" + _JPEG_APP0  # SOI
     if quant16:
         # same all-ones table, 16-bit wire format (Pq=1): decode paths
         # must agree bit-for-bit with the 8-bit header
@@ -725,19 +766,9 @@ def encode_gray_jpeg(
         + b"\x01"  # 1 component
         + b"\x01\x11\x00"  # id 1, sampling 1x1, qtable 0
     )  # SOF0
-    for cls, bits, vals in (
-        (0x00, _JPEG_DC_BITS, _JPEG_DC_VALS),
-        (0x10, _JPEG_AC_BITS, _JPEG_AC_VALS),
-    ):
-        out += (
-            b"\xff\xc4"
-            + struct.pack(">H", 3 + 16 + len(vals))
-            + bytes([cls])
-            + bytes(bits)
-            + bytes(vals)
-        )  # DHT
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
+    out += _jpeg_dht_segment(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
+    out += _jpeg_dht_segment(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
+    out += _jpeg_dri_segment(restart_interval)
     out += b"\xff\xda" + struct.pack(">H", 8) + b"\x01\x01\x00\x00\x3f\x00"  # SOS
 
     bw = _BitWriter()
@@ -826,6 +857,42 @@ def _jpeg_extend(amp: int, s: int) -> int:
     return amp if amp >= (1 << (s - 1)) else amp - (1 << s) + 1
 
 
+def _jpeg_dqt(seg: bytes, qtables: dict[int, np.ndarray]) -> None:
+    """Parse one DQT segment into ``qtables`` (table id -> raster-order
+    int64[64]): possibly several tables per segment, 8-bit (Pq=0) or
+    16-bit big-endian (Pq=1) values."""
+    off = 0
+    while off < len(seg):
+        pq, tq = seg[off] >> 4, seg[off] & 0x0F
+        if pq == 0:
+            zz = np.frombuffer(seg, np.uint8, count=64, offset=off + 1).astype(np.int64)
+            off += 65
+        elif pq == 1:  # 16-bit big-endian table values (T.81 Pq=1)
+            zz = np.frombuffer(seg, ">u2", count=64, offset=off + 1).astype(np.int64)
+            off += 129
+        else:
+            raise ValueError(f"bad DQT precision {pq}")
+        tbl = np.zeros(64, dtype=np.int64)
+        tbl[_JPEG_ZIGZAG] = zz
+        qtables[tq] = tbl
+
+
+def _jpeg_dht(seg: bytes, htables: dict) -> None:
+    """Parse one DHT segment into ``htables`` ((class, id) -> decode
+    map (length, code) -> symbol); possibly several tables per segment."""
+    off = 0
+    while off < len(seg):
+        cls, tid = seg[off] >> 4, seg[off] & 0x0F
+        bits = list(seg[off + 1 : off + 17])
+        nvals = sum(bits)
+        vals = list(seg[off + 17 : off + 17 + nvals])
+        htables[(cls, tid)] = {
+            (length, code): sym
+            for sym, (code, length) in _huff_canonical(bits, vals).items()
+        }
+        off += 17 + nvals
+
+
 def decode_jpeg_gray(payload: bytes) -> dict:
     """Decode a BASELINE (SOF0) or PROGRESSIVE (SOF2) grayscale JPEG
     with a GENERAL pure-numpy pipeline: marker parse (DQT/SOF/DHT/SOS
@@ -861,25 +928,8 @@ def decode_jpeg_gray(payload: bytes) -> dict:
             raise ValueError(f"truncated segment header at {pos}")
         seg_len = struct.unpack(">H", payload[pos : pos + 2])[0]
         seg = payload[pos + 2 : pos + seg_len]
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            off = 0
-            while off < len(seg):
-                pq, tq = seg[off] >> 4, seg[off] & 0x0F
-                if pq == 0:
-                    zz = np.frombuffer(
-                        seg, np.uint8, count=64, offset=off + 1
-                    ).astype(np.int64)
-                    off += 65
-                elif pq == 1:  # 16-bit big-endian table values (T.81 Pq=1)
-                    zz = np.frombuffer(
-                        seg, ">u2", count=64, offset=off + 1
-                    ).astype(np.int64)
-                    off += 129
-                else:
-                    raise ValueError(f"bad DQT precision {pq}")
-                tbl = np.zeros(64, dtype=np.int64)
-                tbl[_JPEG_ZIGZAG] = zz
-                qtables[tq] = tbl
+        if marker == 0xDB:  # DQT
+            _jpeg_dqt(seg, qtables)
         elif marker in (0xC1, 0xC3):
             raise NotImplementedError("only baseline (SOF0) or progressive (SOF2)")
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
@@ -892,19 +942,8 @@ def decode_jpeg_gray(payload: bytes) -> dict:
                 raise NotImplementedError("only 1x1 sampling")
             comp_q = seg[8]
             progressive = marker == 0xC2
-        elif marker == 0xC4:  # DHT (possibly several tables per segment)
-            off = 0
-            while off < len(seg):
-                cls, tid = seg[off] >> 4, seg[off] & 0x0F
-                bits = list(seg[off + 1 : off + 17])
-                nvals = sum(bits)
-                vals = list(seg[off + 17 : off + 17 + nvals])
-                dec = {
-                    (length, code): sym
-                    for sym, (code, length) in _huff_canonical(bits, vals).items()
-                }
-                htables[(cls, tid)] = dec
-                off += 17 + nvals
+        elif marker == 0xC4:  # DHT
+            _jpeg_dht(seg, htables)
         elif marker == 0xDD:  # DRI (T.81 B.2.4.4)
             if seg_len != 4:
                 raise ValueError(f"bad DRI length {seg_len}")
@@ -1205,26 +1244,10 @@ def encode_gray_jpeg_progressive(
     if restart_interval < 0 or restart_interval > 65535:
         raise ValueError("restart_interval must be in [0, 65535]")
 
-    nby, nbx = h // 8, w // 8
-    f = pixels.astype(np.float64) - 128.0
-    coefs = np.zeros((nby * nbx, 64), dtype=np.int64)
-    i = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            block = f[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-            q = np.rint(_JPEG_DCT_M @ block @ _JPEG_DCT_M.T).astype(np.int64)
-            coefs[i] = q.reshape(-1)[_JPEG_ZIGZAG]
-            i += 1
+    coefs = _jpeg_zigzag_blocks(pixels)
 
     out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00"
-        + struct.pack(">HH", 1, 1)
-        + b"\x00\x00"
-    )  # APP0
+    out += b"\xff\xd8" + _JPEG_APP0  # SOI
     out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)  # DQT
     out += (
         b"\xff\xc2"
@@ -1234,8 +1257,7 @@ def encode_gray_jpeg_progressive(
         + b"\x01"
         + b"\x01\x11\x00"
     )  # SOF2
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
+    out += _jpeg_dri_segment(restart_interval)
 
     for ss, se, ah, al in _JPEG_PROG_SCANS:
         counter = _SymFreq()
@@ -1243,14 +1265,8 @@ def encode_gray_jpeg_progressive(
         uses_huff = not (ss == 0 and ah > 0)  # DC refinement is raw bits
         if uses_huff:
             bits, vals = _flat_dht(counter.freq)
-            cls = 0x00 if ss == 0 else 0x10
-            out += (
-                b"\xff\xc4"
-                + struct.pack(">H", 3 + 16 + len(vals))
-                + bytes([cls])
-                + bytes(bits)
-                + bytes(vals)
-            )  # DHT (re-defines table 0 of its class for this scan)
+            # re-defines table 0 of its class for this scan
+            out += _jpeg_dht_segment(0x00 if ss == 0 else 0x10, bits, vals)
             codes = _huff_canonical(bits, vals)
         else:
             codes = {}
@@ -1527,29 +1543,10 @@ def encode_color_jpeg_progressive(
         raise ValueError("image too large for SOF2")
     px = pixels_rgb.astype(np.int64)
     planes = rgb_to_ycbcr_fixed(px[..., 0], px[..., 1], px[..., 2])
-    nby, nbx = h // 8, w // 8
-    coefs = []
-    for plane in planes:
-        f = plane.astype(np.float64) - 128.0
-        cc = np.zeros((nby * nbx, 64), dtype=np.int64)
-        i = 0
-        for by in range(nby):
-            for bx in range(nbx):
-                block = f[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                q = np.rint(_JPEG_DCT_M @ block @ _JPEG_DCT_M.T).astype(np.int64)
-                cc[i] = q.reshape(-1)[_JPEG_ZIGZAG]
-                i += 1
-        coefs.append(cc)
+    coefs = [_jpeg_zigzag_blocks(plane) for plane in planes]
 
     out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00"
-        + struct.pack(">HH", 1, 1)
-        + b"\x00\x00"
-    )  # APP0
+    out += b"\xff\xd8" + _JPEG_APP0  # SOI
     out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
     out += (
         b"\xff\xc2"
@@ -1565,13 +1562,7 @@ def encode_color_jpeg_progressive(
     def emit_dht(freq: dict, cls: int) -> dict:
         bits, vals = _flat_dht(freq)
         nonlocal out
-        out += (
-            b"\xff\xc4"
-            + struct.pack(">H", 3 + 16 + len(vals))
-            + bytes([cls])
-            + bytes(bits)
-            + bytes(vals)
-        )
+        out += _jpeg_dht_segment(cls, bits, vals)
         return _huff_canonical(bits, vals)
 
     def sos(comp_ids: list[int], ss: int, se: int, ah: int, al: int) -> None:
@@ -1583,8 +1574,7 @@ def encode_color_jpeg_progressive(
         out += bytes([ss, se, (ah << 4) | al])
 
     ri = restart_interval
-    if ri:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, ri)  # DRI
+    out += _jpeg_dri_segment(ri)
     # 1. interleaved DC first (Al=1)
     cnt = _SymFreq()
     _emit_prog_dc_interleaved(coefs, 0, 1, cnt, ri)
@@ -1663,10 +1653,7 @@ def encode_color_jpeg(
     ac_c = _huff_canonical(_JPEG_AC_BITS_C, _JPEG_AC_VALS_C)
 
     out = bytearray()
-    out += b"\xff\xd8"  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HH", 1, 1
-    ) + b"\x00\x00"  # APP0
+    out += b"\xff\xd8" + _JPEG_APP0  # SOI
     # two all-ones DQTs in one segment (slot 0 luma, slot 1 chroma)
     out += b"\xff\xdb" + struct.pack(">H", 2 + 2 * 65) + b"\x00" + bytes(
         [1] * 64
@@ -1688,15 +1675,8 @@ def encode_color_jpeg(
         (0x01, _JPEG_DC_BITS_C, _JPEG_DC_VALS_C),
         (0x11, _JPEG_AC_BITS_C, _JPEG_AC_VALS_C),
     ):
-        out += (
-            b"\xff\xc4"
-            + struct.pack(">H", 3 + 16 + len(vals))
-            + bytes([cls])
-            + bytes(bits)
-            + bytes(vals)
-        )  # DHT
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)  # DRI
+        out += _jpeg_dht_segment(cls, bits, vals)
+    out += _jpeg_dri_segment(restart_interval)
     out += b"\xff\xda" + struct.pack(">H", 6 + 2 * 3) + b"\x03" + (
         b"\x01\x00"  # Y  uses DC0/AC0
         b"\x02\x11"  # Cb uses DC1/AC1
@@ -1777,24 +1757,7 @@ def decode_color_jpeg(payload: bytes) -> dict:
         seg_len = struct.unpack(">H", payload[pos : pos + 2])[0]
         seg = payload[pos + 2 : pos + seg_len]
         if marker == 0xDB:  # DQT
-            off = 0
-            while off < len(seg):
-                pq, tq = seg[off] >> 4, seg[off] & 0x0F
-                if pq == 0:
-                    zz = np.frombuffer(
-                        seg, np.uint8, count=64, offset=off + 1
-                    ).astype(np.int64)
-                    off += 65
-                elif pq == 1:  # 16-bit big-endian table values (T.81 Pq=1)
-                    zz = np.frombuffer(
-                        seg, ">u2", count=64, offset=off + 1
-                    ).astype(np.int64)
-                    off += 129
-                else:
-                    raise ValueError(f"bad DQT precision {pq}")
-                tbl = np.zeros(64, dtype=np.int64)
-                tbl[_JPEG_ZIGZAG] = zz
-                qtables[tq] = tbl
+            _jpeg_dqt(seg, qtables)
         elif marker in (0xC1, 0xC3):
             raise NotImplementedError("only baseline (SOF0) or progressive (SOF2)")
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
@@ -1816,18 +1779,7 @@ def decode_color_jpeg(payload: bytes) -> dict:
                     "progressive color only supports 4:4:4 (1x1 sampling)"
                 )
         elif marker == 0xC4:  # DHT
-            off = 0
-            while off < len(seg):
-                cls, tid = seg[off] >> 4, seg[off] & 0x0F
-                bits = list(seg[off + 1 : off + 17])
-                nvals = sum(bits)
-                vals = list(seg[off + 17 : off + 17 + nvals])
-                dec = {
-                    (length, code): sym
-                    for sym, (code, length) in _huff_canonical(bits, vals).items()
-                }
-                htables[(cls, tid)] = dec
-                off += 17 + nvals
+            _jpeg_dht(seg, htables)
         elif marker == 0xDD:  # DRI (T.81 B.2.4.4)
             if seg_len != 4:
                 raise ValueError(f"bad DRI length {seg_len}")
@@ -1989,46 +1941,23 @@ def encode_text_jpeg(
     are identically zero; the all-ones quant table keeps DC integral),
     so the decode side's stats are text-derivable while the codec path
     — DCT, Huffman, stuffing — is completely real."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                wb = 1 + (len(tb) % 4)
-                hb = 1 + (int(did) % 3)
-                vals = tb[np.arange(wb * hb) % len(tb)].reshape(hb, wb)
-                px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                if progressive:
-                    if quant16:
-                        raise ValueError(
-                            "progressive + quant16 not a supported combination"
-                        )
-                    payloads.append(
-                        encode_gray_jpeg_progressive(
-                            px, restart_interval=restart_interval
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encode_gray_jpeg(
-                            px, quant16=quant16, restart_interval=restart_interval
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        wb = 1 + (len(tb) % 4)
+        hb = 1 + (did % 3)
+        vals = tb[np.arange(wb * hb) % len(tb)].reshape(hb, wb)
+        px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        if progressive:
+            if quant16:
+                raise ValueError("progressive + quant16 not a supported combination")
+            yield did, encode_gray_jpeg_progressive(px, restart_interval=restart_interval)
+        else:
+            yield did, encode_gray_jpeg(
+                px, quant16=quant16, restart_interval=restart_interval
             )
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 JPEG_GRAY_STATS_SCHEMA = T.StructType(
@@ -2043,6 +1972,20 @@ JPEG_GRAY_STATS_SCHEMA = T.StructType(
 )
 
 
+def _gray_stats(df: DataFrame, id_col: str, payload_col: str, decode) -> DataFrame:
+    """(width, height, mean, min, max) of each payload's ``decode``-d
+    gray pixels; the mean is the integer pixel sum divided once in
+    float64, then :func:`_round6`."""
+
+    def rows(did, payload):
+        d = decode(payload)
+        px = d["pixels"]
+        mean = _round6(float(int(px.sum(dtype=np.int64))) / px.size)
+        yield did, d["width"], d["height"], mean, int(px.min()), int(px.max())
+
+    return _map_docs(df, id_col, payload_col, JPEG_GRAY_STATS_SCHEMA, rows)
+
+
 def jpeg_gray_stats(
     df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -2051,31 +1994,7 @@ def jpeg_gray_stats(
     height, mean (integer pixel sum divided once in float64, HALF_UP
     round 6 — the :func:`bmp_channel_stats` discipline), min, max.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "mean_gray", "min_gray", "max_gray")
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_jpeg_gray(bytes(payload))
-                px = d["pixels"]
-                mean = float(int(px.sum(dtype=np.int64))) / px.size
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["mean_gray"].append(
-                    float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                )
-                out["min_gray"].append(int(px.min()))
-                out["max_gray"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, JPEG_GRAY_STATS_SCHEMA)
+    return _gray_stats(df, id_col, payload_col, decode_jpeg_gray)
 
 
 def encode_text_rgb_png(
@@ -2085,30 +2004,15 @@ def encode_text_rgb_png(
     oracle predicts every pixel): w = 1 + length mod 12,
     h = 1 + id mod 8, channel c of pixel i (row-major RGB) = text byte
     ((3i + c) mod L)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 12)
-                h = 1 + (int(did) % 8)
-                px = tb[np.arange(w * h * 3) % len(tb)].reshape(h, w, 3)
-                payloads.append(encode_rgb_png(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 12)
+        h = 1 + (did % 8)
+        px = tb[np.arange(w * h * 3) % len(tb)].reshape(h, w, 3)
+        yield did, encode_rgb_png(px)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def png_rgb_stats(
@@ -2118,25 +2022,12 @@ def png_rgb_stats(
     (:func:`decode_png_rgb`): exact BIGINTs, no float anywhere —
     the color twin of :func:`png_gray_stats` with the m10 sum
     discipline.  Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_rgb(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_png_rgb(payload)
+        yield did, d["width"], d["height"], *_channel_sums(d["pixels"], 3)
 
-    return cols.mapInPandas(batches, JPEG_COLOR_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, JPEG_COLOR_STATS_SCHEMA, rows)
 
 
 def encode_text_color_jpeg(
@@ -2157,43 +2048,24 @@ def encode_text_color_jpeg(
     precisely the fixed-point YCbCr round-trip of the source color —
     replayable in SQL because every step is integer arithmetic with
     power-of-two divisions."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                L = len(tb)
-                wm = 1 + (L % 3)
-                hm = 1 + (int(did) % 2)
-                m = np.arange(wm * hm)
-                cols_rgb = np.stack(
-                    [tb[m % L], tb[(2 * m + 1) % L], tb[(3 * m + 2) % L]],
-                    axis=-1,
-                ).reshape(hm, wm, 3)
-                img = np.repeat(np.repeat(cols_rgb, 16, axis=0), 16, axis=1)
-                if progressive:
-                    # 4:4:4 SOF2 — on flat MCUs the 4:2:0 chroma mean
-                    # is identity, so m10's oracle holds verbatim
-                    payloads.append(
-                        encode_color_jpeg_progressive(img.astype(np.uint8))
-                    )
-                else:
-                    payloads.append(encode_color_jpeg(img.astype(np.uint8)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        L = len(tb)
+        wm = 1 + (L % 3)
+        hm = 1 + (did % 2)
+        m = np.arange(wm * hm)
+        cols_rgb = np.stack(
+            [tb[m % L], tb[(2 * m + 1) % L], tb[(3 * m + 2) % L]],
+            axis=-1,
+        ).reshape(hm, wm, 3)
+        img = np.repeat(np.repeat(cols_rgb, 16, axis=0), 16, axis=1).astype(np.uint8)
+        # progressive is 4:4:4 SOF2 — on flat MCUs the 4:2:0 chroma
+        # mean is identity, so m10's oracle holds verbatim
+        encode = encode_color_jpeg_progressive if progressive else encode_color_jpeg
+        yield did, encode(img)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 JPEG_COLOR_STATS_SCHEMA = T.StructType(
@@ -2216,25 +2088,12 @@ def jpeg_color_stats(
     upsample → fixed-point YCbCr→RGB).  Sums are exact BIGINTs — no
     float anywhere in the output, the strongest oracle discipline.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_color_jpeg(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_color_jpeg(payload)
+        yield did, d["width"], d["height"], *_channel_sums(d["pixels"], 3)
 
-    return cols.mapInPandas(batches, JPEG_COLOR_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, JPEG_COLOR_STATS_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -2245,14 +2104,101 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(ctype: bytes, payload: bytes) -> bytes:
-    import zlib as _zlib
-
     return (
         struct.pack(">I", len(payload))
         + ctype
         + payload
-        + struct.pack(">I", _zlib.crc32(ctype + payload) & 0xFFFFFFFF)
+        + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
     )
+
+
+def _png_file(
+    w: int, h: int, depth: int, color: int, interlace: int, raw: bytes, pre_idat: bytes = b""
+) -> bytes:
+    """Assemble a PNG: signature, IHDR, the ``pre_idat`` chunks
+    (PLTE/tRNS), one zlib IDAT over the filtered scanlines ``raw``,
+    IEND — every chunk CRC-stamped."""
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
+    return (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + pre_idat
+        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _png_decode(payload: bytes, check_ihdr, indexed: bool = False) -> tuple:
+    """The PNG container walk every decoder shares: signature, chunk
+    walk with truncation and CRC checks, IHDR unpack (handed to
+    ``check_ihdr(depth, color, interlace)`` the moment it is read),
+    multi-IDAT concatenation and zlib inflate.  ``indexed`` enforces the
+    colour-type-3 chunk rules (PLTE before tRNS and IDAT, PLTE length
+    a multiple of 3 and at most 256 entries, tRNS no longer than the
+    palette) and requires PLTE.  Returns (w, h, depth, interlace,
+    inflated scanlines, PLTE bytes or None, tRNS bytes or None)."""
+    if payload[:8] != _PNG_SIG:
+        raise ValueError("not a PNG (bad signature)")
+    pos, w = 8, None
+    plte: bytes | None = None
+    trns: bytes | None = None
+    idat = bytearray()
+    while pos + 8 <= len(payload):
+        length = struct.unpack(">I", payload[pos : pos + 4])[0]
+        ctype = payload[pos + 4 : pos + 8]
+        data = payload[pos + 8 : pos + 8 + length]
+        crc_bytes = payload[pos + 8 + length : pos + 12 + length]
+        if len(data) != length or len(crc_bytes) != 4:
+            # documented contract is ValueError on corruption; without
+            # this check a mid-chunk truncation leaks struct.error
+            raise ValueError(f"truncated {ctype!r} chunk at {pos}")
+        crc = struct.unpack(">I", crc_bytes)[0]
+        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
+            raise ValueError(f"CRC mismatch in {ctype!r} chunk")
+        if ctype == b"IHDR":
+            try:
+                w, h, depth, color, _comp, _filt, interlace = struct.unpack(
+                    ">IIBBBBB", data
+                )
+            except struct.error:
+                raise ValueError("malformed IHDR chunk")
+            check_ihdr(depth, color, interlace)
+        elif indexed and ctype == b"PLTE":
+            if length == 0 or length % 3 != 0 or length > 256 * 3:
+                raise ValueError(f"invalid PLTE length {length}")
+            plte = data
+        elif indexed and ctype == b"tRNS":
+            if plte is None:
+                # spec: tRNS must follow PLTE for color type 3
+                raise ValueError("tRNS before PLTE in indexed PNG")
+            if length == 0 or length > len(plte) // 3:
+                raise ValueError(
+                    f"invalid tRNS length {length} for palette of "
+                    f"{len(plte) // 3} entries"
+                )
+            trns = data
+        elif ctype == b"IDAT":
+            if indexed and plte is None:
+                # spec: PLTE must precede IDAT for color type 3
+                raise ValueError("IDAT before PLTE in indexed PNG")
+            idat += data
+        elif ctype == b"IEND":
+            break
+        pos += 12 + length
+    if indexed and (w is None or plte is None or not idat):
+        raise ValueError("missing IHDR/PLTE/IDAT")
+    if w is None or not idat:
+        raise ValueError("missing IHDR/IDAT")
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as ex:
+        raise ValueError(f"corrupt IDAT stream: {ex}")
+    return w, h, depth, interlace, raw, plte, trns
+
+
+def _png_interlace_0_or_1(interlace: int) -> None:
+    if interlace not in (0, 1):
+        raise ValueError(f"unknown interlace method {interlace}")
 
 
 # Adam7 interlace pass grid: (x_offset, y_offset, x_stride, y_stride),
@@ -2327,20 +2273,12 @@ def encode_gray_png(pixels: np.ndarray, *, interlace: bool = False) -> bytes:
     trivial filter 0, so the decoder's filter reconstruction is
     actually exercised — and IEND, all CRC-stamped.  ``interlace=True``
     writes Adam7 pass-ordered scanlines (interlace method 1)."""
-    import zlib as _zlib
-
     h, w = pixels.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 1 if interlace else 0)
     if interlace:
         raw = _interlace_passes(pixels.reshape(h, w), w, h, 1)
     else:
         raw = _filter_sub_rows(pixels.reshape(h, w), 1)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", _zlib.compress(bytes(raw), 6))
-        + _png_chunk(b"IEND", b"")
-    )
+    return _png_file(w, h, 8, 0, 1 if interlace else 0, raw)
 
 
 def decode_png_gray(payload: bytes) -> dict:
@@ -2351,46 +2289,13 @@ def decode_png_gray(payload: bytes) -> dict:
     reassembled pass-by-pass — nothing assumes this module's encoder.
     Returns {width, height, pixels}.  Raises ValueError on corruption,
     NotImplementedError on color/16-bit."""
-    import zlib as _zlib
 
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos, w = 8, None
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        length = struct.unpack(">I", payload[pos : pos + 4])[0]
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        crc_bytes = payload[pos + 8 + length : pos + 12 + length]
-        if len(data) != length or len(crc_bytes) != 4:
-            # documented contract is ValueError on corruption; without
-            # this check a mid-chunk truncation leaks struct.error
-            raise ValueError(f"truncated {ctype!r} chunk at {pos}")
-        crc = struct.unpack(">I", crc_bytes)[0]
-        if _zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"CRC mismatch in {ctype!r} chunk")
-        if ctype == b"IHDR":
-            try:
-                w, h, depth, color, comp, filt, interlace = struct.unpack(
-                    ">IIBBBBB", data
-                )
-            except struct.error:
-                raise ValueError("malformed IHDR chunk")
-            if depth != 8 or color != 0:
-                raise NotImplementedError("only 8-bit grayscale PNG")
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown interlace method {interlace}")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if w is None or not idat:
-        raise ValueError("missing IHDR/IDAT")
-    try:
-        raw = _zlib.decompress(bytes(idat))
-    except _zlib.error as ex:
-        raise ValueError(f"corrupt IDAT stream: {ex}")
+    def check(depth, color, interlace):
+        if depth != 8 or color != 0:
+            raise NotImplementedError("only 8-bit grayscale PNG")
+        _png_interlace_0_or_1(interlace)
+
+    w, h, _depth, interlace, raw, _plte, _trns = _png_decode(payload, check)
     recon = _png_reconstruct_interlaced if interlace else _png_reconstruct
     out = recon(raw, w, h, 1)
     return {"width": int(w), "height": int(h), "pixels": out.reshape(-1)}
@@ -2447,24 +2352,16 @@ def encode_rgb_png(pixels: np.ndarray, *, interlace: bool = False) -> bytes:
     (h, w, 3) uint8 RGB array: Sub-filtered scanlines with the
     spec's bpp=3 left reference, one zlib IDAT, CRC-stamped chunks.
     ``interlace=True`` writes Adam7 pass-ordered scanlines."""
-    import zlib as _zlib
-
     h, w, c = pixels.shape
     if c != 3:
         raise ValueError("encode_rgb_png expects (h, w, 3) RGB")
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1 if interlace else 0)
     flat = pixels.reshape(h, w * 3)
     raw = (
         _interlace_passes(flat, w, h, 3)
         if interlace
         else _filter_sub_rows(flat, 3)
     )
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", _zlib.compress(bytes(raw), 6))
-        + _png_chunk(b"IEND", b"")
-    )
+    return _png_file(w, h, 8, 2, 1 if interlace else 0, raw)
 
 
 def decode_png_rgb(payload: bytes) -> dict:
@@ -2474,44 +2371,13 @@ def decode_png_rgb(payload: bytes) -> dict:
     at bpp=3, Adam7 interlace reassembled pass-by-pass.  Returns
     {width, height, pixels (h·w·3 uint8 RGB)}.  Raises ValueError on
     corruption, NotImplementedError on non-truecolor/16-bit."""
-    import zlib as _zlib
 
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos, w = 8, None
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        length = struct.unpack(">I", payload[pos : pos + 4])[0]
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        crc_bytes = payload[pos + 8 + length : pos + 12 + length]
-        if len(data) != length or len(crc_bytes) != 4:
-            raise ValueError(f"truncated {ctype!r} chunk at {pos}")
-        crc = struct.unpack(">I", crc_bytes)[0]
-        if _zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"CRC mismatch in {ctype!r} chunk")
-        if ctype == b"IHDR":
-            try:
-                w, h, depth, color, comp, filt, interlace = struct.unpack(
-                    ">IIBBBBB", data
-                )
-            except struct.error:
-                raise ValueError("malformed IHDR chunk")
-            if depth != 8 or color != 2:
-                raise NotImplementedError("only 8-bit truecolor (type 2) PNG")
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown interlace method {interlace}")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if w is None or not idat:
-        raise ValueError("missing IHDR/IDAT")
-    try:
-        raw = _zlib.decompress(bytes(idat))
-    except _zlib.error as ex:
-        raise ValueError(f"corrupt IDAT stream: {ex}")
+    def check(depth, color, interlace):
+        if depth != 8 or color != 2:
+            raise NotImplementedError("only 8-bit truecolor (type 2) PNG")
+        _png_interlace_0_or_1(interlace)
+
+    w, h, _depth, interlace, raw, _plte, _trns = _png_decode(payload, check)
     recon = _png_reconstruct_interlaced if interlace else _png_reconstruct
     out = recon(raw, w, h, 3)
     return {"width": int(w), "height": int(h), "pixels": out.reshape(-1)}
@@ -2534,8 +2400,6 @@ def encode_palette_png(
     row zero-pads.  ``trns`` (optional, (t,) uint8, t ≤ n) writes a
     tRNS chunk — per-palette-entry alpha; the spec lets it be SHORTER
     than the palette (remaining entries are fully opaque)."""
-    import zlib as _zlib
-
     h, w = indices.shape
     n = palette.shape[0]
     if depth not in (1, 2, 4, 8):
@@ -2548,7 +2412,6 @@ def encode_palette_png(
         raise ValueError("palette index out of range")
     if trns is not None and (trns.ndim != 1 or not 1 <= trns.shape[0] <= n):
         raise ValueError("trns must be (t,) with 1 <= t <= palette size")
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
     if depth == 8:
         lines = indices.astype(np.uint8)
     else:
@@ -2561,29 +2424,15 @@ def encode_palette_png(
             (padded[:, :, None] >> np.arange(depth - 1, -1, -1)) & 1
         ).astype(np.uint8)
         lines = np.packbits(bits.reshape(h, wpad * depth), axis=1)
-    raw = bytearray()
-    stride = lines.shape[1]
-    for y in range(h):
-        row = lines[y].astype(np.int16)
-        sub = np.empty(stride, dtype=np.uint8)
-        sub[0] = row[0] % 256
-        if stride > 1:
-            sub[1:] = ((row[1:] - row[:-1]) % 256).astype(np.uint8)
-        raw.append(1)  # filter type: Sub (byte-wise per spec)
-        raw += sub.tobytes()
     trns_chunk = (
         _png_chunk(b"tRNS", trns.astype(np.uint8).tobytes())
         if trns is not None
         else b""
     )
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-        + trns_chunk
-        + _png_chunk(b"IDAT", _zlib.compress(bytes(raw), 6))
-        + _png_chunk(b"IEND", b"")
-    )
+    plte_chunk = _png_chunk(b"PLTE", palette.astype(np.uint8).tobytes())
+    # the Sub filter runs over scanline BYTES (packed or not), per spec
+    raw = _filter_sub_rows(lines, 1)
+    return _png_file(w, h, depth, 3, 0, raw, plte_chunk + trns_chunk)
 
 
 def decode_png_palette(payload: bytes) -> dict:
@@ -2599,67 +2448,15 @@ def decode_png_palette(payload: bytes) -> dict:
     one trns_size is 0 and alpha is all-255.  Raises ValueError on
     corruption (missing/ragged PLTE, bad tRNS length, index beyond
     the palette), NotImplementedError on non-type-3/16-bit."""
-    import zlib as _zlib
 
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos, w = 8, None
-    plte: bytes | None = None
-    trns: bytes | None = None
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        length = struct.unpack(">I", payload[pos : pos + 4])[0]
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        crc_bytes = payload[pos + 8 + length : pos + 12 + length]
-        if len(data) != length or len(crc_bytes) != 4:
-            raise ValueError(f"truncated {ctype!r} chunk at {pos}")
-        crc = struct.unpack(">I", crc_bytes)[0]
-        if _zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"CRC mismatch in {ctype!r} chunk")
-        if ctype == b"IHDR":
-            try:
-                w, h, depth, color, comp, filt, interlace = struct.unpack(
-                    ">IIBBBBB", data
-                )
-            except struct.error:
-                raise ValueError("malformed IHDR chunk")
-            if color != 3 or depth not in (1, 2, 4, 8):
-                raise NotImplementedError(
-                    "only indexed (type 3) PNG at depth 1/2/4/8"
-                )
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown interlace method {interlace}")
-            if interlace and depth != 8:
-                raise NotImplementedError("sub-byte interlaced palette PNG")
-        elif ctype == b"PLTE":
-            if length == 0 or length % 3 != 0 or length > 256 * 3:
-                raise ValueError(f"invalid PLTE length {length}")
-            plte = data
-        elif ctype == b"tRNS":
-            if plte is None:
-                # spec: tRNS must follow PLTE for color type 3
-                raise ValueError("tRNS before PLTE in indexed PNG")
-            if length == 0 or length > len(plte) // 3:
-                raise ValueError(
-                    f"invalid tRNS length {length} for palette of "
-                    f"{len(plte) // 3} entries"
-                )
-            trns = data
-        elif ctype == b"IDAT":
-            if plte is None:
-                # spec: PLTE must precede IDAT for color type 3
-                raise ValueError("IDAT before PLTE in indexed PNG")
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if w is None or plte is None or not idat:
-        raise ValueError("missing IHDR/PLTE/IDAT")
-    try:
-        raw = _zlib.decompress(bytes(idat))
-    except _zlib.error as ex:
-        raise ValueError(f"corrupt IDAT stream: {ex}")
+    def check(depth, color, interlace):
+        if color != 3 or depth not in (1, 2, 4, 8):
+            raise NotImplementedError("only indexed (type 3) PNG at depth 1/2/4/8")
+        _png_interlace_0_or_1(interlace)
+        if interlace and depth != 8:
+            raise NotImplementedError("sub-byte interlaced palette PNG")
+
+    w, h, depth, interlace, raw, plte, trns = _png_decode(payload, check, indexed=True)
     recon = _png_reconstruct_interlaced if interlace else _png_reconstruct
     if depth == 8:
         idx = recon(raw, w, h, 1)
@@ -2838,38 +2635,117 @@ def encode_gif(
         raise ValueError("local_palette must be (m, 3) with 1 <= m <= 256")
     if indices.max(initial=0) >= m:
         raise ValueError("palette index out of range")
-    bits = max(1, (max(n, 2) - 1).bit_length())  # color-table size field
-    padded = np.zeros((1 << bits, 3), dtype=np.uint8)
-    padded[:n] = palette.astype(np.uint8)
+    bits, table = _gif_color_table(palette)
     iflags = 0
     local_bytes = b""
     if local_palette is not None:
-        lbits = max(1, (max(m, 2) - 1).bit_length())
-        lpadded = np.zeros((1 << lbits, 3), dtype=np.uint8)
-        lpadded[:m] = local_palette.astype(np.uint8)
+        lbits, local_bytes = _gif_color_table(local_palette)
         iflags = 0x80 | (lbits - 1)
-        local_bytes = lpadded.tobytes()
         min_code = max(2, lbits)
     else:
         min_code = max(2, bits)  # spec: LZW min code size >= 2
     lzw = _lzw_encode_gif(indices.reshape(-1), min_code)
-    blocks = bytearray()
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        blocks.append(len(chunk))
-        blocks += chunk
-    blocks.append(0)  # block terminator
     return (
         b"GIF87a"
         + struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-        + padded.tobytes()
+        + table
         + b"\x2c"
         + struct.pack("<HHHHB", 0, 0, w, h, iflags)
         + local_bytes
         + bytes([min_code])
-        + bytes(blocks)
+        + _gif_sub_blocks(lzw)
         + b"\x3b"
     )
+
+
+def _gif_color_table(palette: np.ndarray) -> tuple[int, bytes]:
+    """A GIF colour table: (size field, the palette padded with black to
+    the next power of two >= 2)."""
+    n = palette.shape[0]
+    bits = max(1, (max(n, 2) - 1).bit_length())
+    padded = np.zeros((1 << bits, 3), dtype=np.uint8)
+    padded[:n] = palette.astype(np.uint8)
+    return bits, padded.tobytes()
+
+
+def _gif_sub_blocks(data: bytes) -> bytes:
+    """``data`` as 255-byte sub-blocks plus the zero-length terminator."""
+    out = bytearray()
+    for i in range(0, len(data), 255):
+        chunk = data[i : i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out.append(0)  # block terminator
+    return bytes(out)
+
+
+def _gif_screen(payload: bytes) -> tuple[int, int, np.ndarray | None, int]:
+    """Signature, logical screen descriptor and global colour table:
+    (screen width, screen height, palette or None, position after)."""
+    if payload[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF (bad signature)")
+    if len(payload) < 13:
+        raise ValueError("truncated logical screen descriptor")
+    sw, sh, flags, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
+    if not flags & 0x80:
+        return sw, sh, None, 13
+    return sw, sh, *_gif_table(payload, 13, flags, "global")
+
+
+def _gif_table(payload: bytes, pos: int, flags: int, kind: str) -> tuple[np.ndarray, int]:
+    """The colour table at ``pos`` whose size field is the low 3 bits of
+    ``flags``: (palette, position after it)."""
+    size = 2 << (flags & 0x07)
+    if pos + size * 3 > len(payload):
+        raise ValueError(f"truncated {kind} color table")
+    pal = np.frombuffer(payload[pos : pos + size * 3], dtype=np.uint8).reshape(-1, 3)
+    return pal, pos + size * 3
+
+
+def _gif_skip_sub_blocks(payload: bytes, pos: int) -> int:
+    """Position after the sub-block run (and its terminator) at ``pos``."""
+    while pos < len(payload) and payload[pos] != 0:
+        pos += 1 + payload[pos]
+    return pos + 1
+
+
+def _gif_image(
+    payload: bytes, pos: int, palette: np.ndarray | None, screen: tuple[int, int] | None = None
+) -> tuple:
+    """Read the image whose descriptor starts at ``pos`` (after its 0x2C
+    separator): a LOCAL colour table overrides ``palette`` for this image
+    (GIF89a spec 21), the LZW data is de-blocked and decoded (variable
+    code widths, CLEAR resets, KwKwK) and looked up.  ``screen`` =
+    (w, h) requires a full-screen image.  Returns (w, h, palette used,
+    local table?, h·w·3 uint8 RGB pixels, position after the image)."""
+    if pos + 9 > len(payload):
+        raise ValueError("truncated image descriptor")
+    x, y, w, h, iflags = struct.unpack("<HHHHB", payload[pos : pos + 9])
+    pos += 9
+    if iflags & 0x40:
+        raise NotImplementedError("interlaced GIF")
+    pal = palette
+    if iflags & 0x80:
+        pal, pos = _gif_table(payload, pos, iflags, "local")
+    if screen is not None and (x, y, w, h) != (0, 0, *screen):
+        raise NotImplementedError("partial-frame animated GIF")
+    if pal is None:
+        raise ValueError("image data with no color table")
+    min_code = payload[pos]
+    pos += 1
+    if not 2 <= min_code <= 11:
+        raise ValueError(f"bad LZW min code size {min_code}")
+    data = bytearray()
+    while pos < len(payload) and payload[pos] != 0:
+        ln = payload[pos]
+        if pos + 1 + ln > len(payload):
+            raise ValueError("truncated LZW sub-block")
+        data += payload[pos + 1 : pos + 1 + ln]
+        pos += 1 + ln
+    idx = _lzw_decode_gif(bytes(data), min_code, w * h)
+    if idx.max(initial=0) >= pal.shape[0]:
+        raise ValueError("GIF index beyond color table")
+    return w, h, pal, bool(iflags & 0x80), pal[idx].reshape(-1), pos + 1
 
 
 def decode_gif(payload: bytes) -> dict:
@@ -2882,77 +2758,36 @@ def decode_gif(payload: bytes) -> dict:
     LOCAL color table on the image descriptor overrides the global one
     (palette_size then reports the local size).  Raises ValueError on
     corruption, NotImplementedError on interlaced images."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("truncated logical screen descriptor")
-    sw, sh, flags, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    pos = 13
-    palette = None
-    if flags & 0x80:
-        size = 2 << (flags & 0x07)
-        if pos + size * 3 > len(payload):
-            raise ValueError("truncated global color table")
-        palette = np.frombuffer(
-            payload[pos : pos + size * 3], dtype=np.uint8
-        ).reshape(-1, 3)
-        pos += size * 3
+    _sw, _sh, palette, pos = _gif_screen(payload)
     while pos < len(payload):
         marker = payload[pos]
         pos += 1
         if marker == 0x3B:  # trailer
             raise ValueError("GIF trailer before any image data")
         if marker == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
+            pos = _gif_skip_sub_blocks(payload, pos + 1)
             continue
         if marker != 0x2C:
             raise ValueError(f"unknown GIF block marker 0x{marker:02x}")
-        if pos + 9 > len(payload):
-            raise ValueError("truncated image descriptor")
-        _x, _y, w, h, iflags = struct.unpack("<HHHHB", payload[pos : pos + 9])
-        pos += 9
-        if iflags & 0x40:
-            raise NotImplementedError("interlaced GIF")
-        pal = palette
-        if iflags & 0x80:
-            # local color table: OVERRIDES the global one for this
-            # image (GIF89a spec 21); size field is the descriptor's
-            # low 3 bits
-            lsize = 2 << (iflags & 0x07)
-            if pos + lsize * 3 > len(payload):
-                raise ValueError("truncated local color table")
-            pal = np.frombuffer(
-                payload[pos : pos + lsize * 3], dtype=np.uint8
-            ).reshape(-1, 3)
-            pos += lsize * 3
-        if pal is None:
-            raise ValueError("image data with no color table")
-        min_code = payload[pos]
-        pos += 1
-        if not 2 <= min_code <= 11:
-            raise ValueError(f"bad LZW min code size {min_code}")
-        data = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            ln = payload[pos]
-            if pos + 1 + ln > len(payload):
-                raise ValueError("truncated LZW sub-block")
-            data += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        idx = _lzw_decode_gif(bytes(data), min_code, w * h)
-        if idx.max(initial=0) >= pal.shape[0]:
-            raise ValueError("GIF index beyond color table")
-        rgb = pal[idx]
+        w, h, pal, local, rgb, _end = _gif_image(payload, pos, palette)
         return {
             "width": int(w),
             "height": int(h),
             "palette_size": int(pal.shape[0]),
-            "local_palette": bool(iflags & 0x80),
-            "pixels": rgb.reshape(-1),
+            "local_palette": local,
+            "pixels": rgb,
         }
     raise ValueError("no image descriptor in GIF")
+
+
+def _text_indices(tb: np.ndarray, did: int) -> tuple[int, int, int, np.ndarray]:
+    """The m14 indexed-image geometry shared by the palette-PNG and GIF
+    fixtures: w = 1 + length mod 11, h = 1 + id mod 6, palette size
+    p = 2 + id mod 15, and the byte (i mod L) of each pixel i (reduce
+    it mod the palette size for the index).  Returns (w, h, p, bytes)."""
+    w = 1 + (len(tb) % 11)
+    h = 1 + (did % 6)
+    return w, h, 2 + (did % 15), tb[np.arange(w * h) % len(tb)]
 
 
 def encode_text_gif(
@@ -2965,36 +2800,13 @@ def encode_text_gif(
     (59k+23) mod 256, (83k+5) mod 256), index of pixel i = byte
     (i mod L) mod p — so the SAME oracle text verifies a completely
     different container + compressor."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (int(did) % 6)
-                p = 2 + (int(did) % 15)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
-                payloads.append(encode_gif(idx.reshape(h, w), pal))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        w, h, p, px = _text_indices(_ascii_text_bytes(text, did), did)
+        idx = (px % p).astype(np.uint8)
+        yield did, encode_gif(idx.reshape(h, w), _text_palette(p))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def gif_stats(
@@ -3005,32 +2817,7 @@ def gif_stats(
     palette lookup): exact BIGINTs — any bit-packing, code-width, or
     KwKwK bug scrambles the index stream and breaks every channel.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "palette_size",
-                    "sum_r", "sum_g", "sum_b",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_gif(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PALETTE_PNG_STATS_SCHEMA)
+    return _palette_stats(df, id_col, payload_col, decode_gif)
 
 
 def encode_text_local_gif(
@@ -3046,43 +2833,15 @@ def encode_text_local_gif(
     through the wrong table still parses cleanly but produces the
     global formula's sums — the override itself is what the oracle
     pins."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (did % 6)
-                p = 2 + (did % 15)
-                k = np.arange(p, dtype=np.int64)
-                gpal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                q = 2 + ((3 * did + 1) % 15)
-                kq = np.arange(q, dtype=np.int64)
-                lpal = np.stack(
-                    [(41 * kq + 13) % 256, (67 * kq + 29) % 256, (89 * kq + 3) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (tb[np.arange(w * h) % len(tb)] % q).astype(np.uint8)
-                payloads.append(encode_gif(idx.reshape(h, w), gpal, lpal))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        w, h, p, px = _text_indices(_ascii_text_bytes(text, did), did)
+        q = 2 + ((3 * did + 1) % 15)
+        lpal = _text_palette(q, ((41, 13), (67, 29), (89, 3)))
+        idx = (px % q).astype(np.uint8)
+        yield did, encode_gif(idx.reshape(h, w), _text_palette(p), lpal)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 LOCAL_GIF_STATS_SCHEMA = T.StructType(
@@ -3107,27 +2866,15 @@ def gif_local_stats(
     ``palette_size`` is the (padded) size of the table the pixels were
     actually resolved through.  Arrow-batched mapInPandas projection,
     no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in LOCAL_GIF_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_gif(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["used_local"].append(bool(d["local_palette"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_gif(payload)
+        yield (
+            did, d["width"], d["height"], d["palette_size"], d["local_palette"],
+            *_channel_sums(d["pixels"], 3),
+        )
 
-    return cols.mapInPandas(batches, LOCAL_GIF_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, LOCAL_GIF_STATS_SCHEMA, rows)
 
 
 def encode_text_palette_png(
@@ -3144,38 +2891,13 @@ def encode_text_palette_png(
     pixel i = text byte (i mod L) mod p.  ``depth`` picks the wire
     format — the fixture's p ≤ 16 fits depth 4 (sub-byte packed
     scanlines), so the SAME oracle verifies both layouts."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (int(did) % 6)
-                p = 2 + (int(did) % 15)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
-                payloads.append(
-                    encode_palette_png(idx.reshape(h, w), pal, depth=depth)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        w, h, p, px = _text_indices(_ascii_text_bytes(text, did), did)
+        idx = (px % p).astype(np.uint8)
+        yield did, encode_palette_png(idx.reshape(h, w), _text_palette(p), depth=depth)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 PALETTE_PNG_STATS_SCHEMA = T.StructType(
@@ -3191,6 +2913,17 @@ PALETTE_PNG_STATS_SCHEMA = T.StructType(
 )
 
 
+def _palette_stats(df: DataFrame, id_col: str, payload_col: str, decode) -> DataFrame:
+    """(width, height, palette size, per-channel sums) of each
+    payload's ``decode``-d indexed image."""
+
+    def rows(did, payload):
+        d = decode(payload)
+        yield did, d["width"], d["height"], d["palette_size"], *_channel_sums(d["pixels"], 3)
+
+    return _map_docs(df, id_col, payload_col, PALETTE_PNG_STATS_SCHEMA, rows)
+
+
 def png_palette_stats(
     df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -3198,32 +2931,7 @@ def png_palette_stats(
     (:func:`decode_png_palette`): exact BIGINTs through the PLTE
     lookup — an index-mapping bug on either side breaks every channel.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "palette_size",
-                    "sum_r", "sum_g", "sum_b",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_palette(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PALETTE_PNG_STATS_SCHEMA)
+    return _palette_stats(df, id_col, payload_col, decode_png_palette)
 
 
 PALETTE_DEPTH_PNG_STATS_SCHEMA = T.StructType(
@@ -3248,27 +2956,15 @@ def png_palette_depth_stats(
     bit order, pad bits leaking into the row) scrambles indices and
     breaks every channel sum while the container still parses.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in PALETTE_DEPTH_PNG_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_palette(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["bit_depth"].append(int(d["bit_depth"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_png_palette(payload)
+        yield (
+            did, d["width"], d["height"], d["bit_depth"], d["palette_size"],
+            *_channel_sums(d["pixels"], 3),
+        )
 
-    return cols.mapInPandas(batches, PALETTE_DEPTH_PNG_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, PALETTE_DEPTH_PNG_STATS_SCHEMA, rows)
 
 
 def encode_text_palette_trns_png(
@@ -3283,41 +2979,15 @@ def encode_text_palette_trns_png(
     than the palette whenever p > 1+gcd-range — the spec's prefix
     semantics, so the opaque-255 tail path is exercised), alpha entry
     k = (101k + 7) mod 256."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (did % 6)
-                p = 2 + (did % 15)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                t = 1 + (did % p)
-                trns = ((101 * np.arange(t, dtype=np.int64) + 7) % 256).astype(
-                    np.uint8
-                )
-                idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
-                payloads.append(encode_palette_png(idx.reshape(h, w), pal, trns))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        w, h, p, px = _text_indices(_ascii_text_bytes(text, did), did)
+        t = 1 + (did % p)
+        trns = ((101 * np.arange(t, dtype=np.int64) + 7) % 256).astype(np.uint8)
+        idx = (px % p).astype(np.uint8)
+        yield did, encode_palette_png(idx.reshape(h, w), _text_palette(p), trns)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 PALETTE_TRNS_PNG_STATS_SCHEMA = T.StructType(
@@ -3344,28 +3014,15 @@ def png_palette_alpha_stats(
     for uncovered entries, off-by-one on the covered range) breaks
     sum_a while leaving RGB intact.  Arrow-batched mapInPandas
     projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in PALETTE_TRNS_PNG_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_palette(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["trns_size"].append(int(d["trns_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-                out["sum_a"].append(int(d["alpha"].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_png_palette(payload)
+        yield (
+            did, d["width"], d["height"], d["palette_size"], d["trns_size"],
+            *_channel_sums(d["pixels"], 3), int(d["alpha"].astype(np.int64).sum()),
+        )
 
-    return cols.mapInPandas(batches, PALETTE_TRNS_PNG_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, PALETTE_TRNS_PNG_STATS_SCHEMA, rows)
 
 
 def encode_text_png(
@@ -3377,30 +3034,15 @@ def encode_text_png(
     h = 1 + id mod 10, pixel i (row-major) = text byte (i mod L).
     ``interlace=True`` writes Adam7 streams — same pixels, different
     wire layout, so the SAME oracle verifies the interlaced decode."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 24)
-                h = 1 + (int(did) % 10)
-                px = tb[np.arange(w * h) % len(tb)].reshape(h, w)
-                payloads.append(encode_gray_png(px, interlace=interlace))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 24)
+        h = 1 + (did % 10)
+        px = tb[np.arange(w * h) % len(tb)].reshape(h, w)
+        yield did, encode_gray_png(px, interlace=interlace)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def png_gray_stats(
@@ -3409,31 +3051,7 @@ def png_gray_stats(
     """Pixel stats from REAL PNG-decoded pixels (:func:`decode_png_gray`:
     CRC walk → inflate → filter reconstruction): same output shape and
     rounding discipline as :func:`jpeg_gray_stats`."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "mean_gray", "min_gray", "max_gray")
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_gray(bytes(payload))
-                px = d["pixels"]
-                mean = float(int(px.sum(dtype=np.int64))) / px.size
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["mean_gray"].append(
-                    float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                )
-                out["min_gray"].append(int(px.min()))
-                out["max_gray"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, JPEG_GRAY_STATS_SCHEMA)
+    return _gray_stats(df, id_col, payload_col, decode_png_gray)
 
 
 # ---------------------------------------------------------------------------
@@ -3450,6 +3068,31 @@ def _riff_chunk(fourcc: bytes, payload: bytes) -> bytes:
 
 def _riff_list(list_type: bytes, payload: bytes) -> bytes:
     return _riff_chunk(b"LIST", list_type + payload)
+
+
+def _riff_form(payload: bytes, form: bytes, name: str) -> int:
+    """Check the RIFF header of form type ``form``; returns the end
+    offset of the RIFF body."""
+    if payload[:4] != b"RIFF" or payload[8:12] != form:
+        raise ValueError(f"not a {name}")
+    total = struct.unpack("<I", payload[4:8])[0]
+    if total + 8 > len(payload):
+        raise ValueError("RIFF size exceeds payload")
+    return 8 + total
+
+
+def _riff_chunks(payload: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int]]:
+    """The RIFF chunk walk over [pos, end): yields (fourcc, data offset,
+    size) per chunk (fourcc + little-endian size + data, padded to a
+    word boundary); a chunk overrunning ``end`` raises."""
+    while pos + 8 <= end:
+        fourcc = payload[pos : pos + 4]
+        size = struct.unpack("<I", payload[pos + 4 : pos + 8])[0]
+        start = pos + 8
+        if start + size > end:
+            raise ValueError(f"chunk {fourcc!r} overruns container")
+        yield fourcc, start, size
+        pos = start + size + (size % 2)
 
 
 def encode_mjpeg_avi(
@@ -3493,7 +3136,7 @@ def encode_mjpeg_avi(
         off += 8 + len(f) + (len(f) % 2)
     idx1 = _riff_chunk(b"idx1", b"".join(idx))
     body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_chunk(b"RIFF", body)  # every body chunk is word-aligned
 
 
 def decode_mjpeg_avi(payload: bytes) -> list[bytes]:
@@ -3501,29 +3144,16 @@ def decode_mjpeg_avi(payload: bytes) -> list[bytes]:
     complete JPEG) in stream order — a GENERAL chunk walk (fourcc +
     size + word alignment), not an offset replay of the writer above;
     raises ValueError on structural corruption."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not a RIFF AVI")
-    total = struct.unpack("<I", payload[4:8])[0]
-    if total + 8 > len(payload):
-        raise ValueError("RIFF size exceeds payload")
     frames: list[bytes] = []
-    pos = 12
 
     def walk(start: int, end: int) -> None:
-        p = start
-        while p + 8 <= end:
-            fourcc = payload[p : p + 4]
-            size = struct.unpack("<I", payload[p + 4 : p + 8])[0]
-            data_start = p + 8
-            if data_start + size > end:
-                raise ValueError(f"chunk {fourcc!r} overruns container")
+        for fourcc, data, size in _riff_chunks(payload, start, end):
             if fourcc == b"LIST":
-                walk(data_start + 4, data_start + size)  # skip list type
+                walk(data + 4, data + size)  # skip list type
             elif fourcc == b"00dc":
-                frames.append(payload[data_start : data_start + size])
-            p = data_start + size + (size % 2)
+                frames.append(payload[data : data + size])
 
-    walk(pos, 8 + total)
+    walk(12, _riff_form(payload, b"AVI ", "RIFF AVI"))
     return frames
 
 
@@ -3535,36 +3165,19 @@ def encode_text_mjpeg(
     :func:`encode_text_jpeg`) whose block b carries text byte
     (b + frame_idx) mod L — a frame-shifted pattern, so every frame's
     stats differ and the SQL oracle can predict each one exactly."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                wb = 1 + (len(tb) % 4)
-                hb = 1 + (int(did) % 3)
-                frames = []
-                for fidx in range(1 + int(did) % 4):
-                    vals = tb[(np.arange(wb * hb) + fidx) % len(tb)].reshape(hb, wb)
-                    px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                    frames.append(encode_gray_jpeg(px))
-                payloads.append(
-                    encode_mjpeg_avi(frames, width=8 * wb, height=8 * hb)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        wb = 1 + (len(tb) % 4)
+        hb = 1 + (did % 3)
+        frames = []
+        for fidx in range(1 + did % 4):
+            vals = tb[(np.arange(wb * hb) + fidx) % len(tb)].reshape(hb, wb)
+            px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+            frames.append(encode_gray_jpeg(px))
+        yield did, encode_mjpeg_avi(frames, width=8 * wb, height=8 * hb)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 MJPEG_FRAME_STATS_SCHEMA = T.StructType(
@@ -3593,30 +3206,15 @@ def mjpeg_frame_stats(
     frame-sample / feature-extract chain the multimodal north-star
     describes, with zero fakes left.  Arrow-batched mapInPandas, no
     shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("doc_id", "frame_idx", "ts_ms", "width", "height", "mean_gray")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                for fidx, fbytes in enumerate(decode_mjpeg_avi(bytes(payload))):
-                    d = decode_jpeg_gray(fbytes)
-                    px = d["pixels"]
-                    mean = float(int(px.sum(dtype=np.int64))) / px.size
-                    out["doc_id"].append(int(did))
-                    out["frame_idx"].append(int(fidx))
-                    out["ts_ms"].append(int(fidx * every_ms))
-                    out["width"].append(int(d["width"]))
-                    out["height"].append(int(d["height"]))
-                    out["mean_gray"].append(
-                        float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                    )
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        for fidx, fbytes in enumerate(decode_mjpeg_avi(payload)):
+            d = decode_jpeg_gray(fbytes)
+            px = d["pixels"]
+            mean = _round6(float(int(px.sum(dtype=np.int64))) / px.size)
+            yield did, fidx, int(fidx * every_ms), d["width"], d["height"], mean
 
-    return cols.mapInPandas(batches, MJPEG_FRAME_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, MJPEG_FRAME_STATS_SCHEMA, rows)
 
 
 def sample_frames(
@@ -3645,29 +3243,19 @@ def sample_frames(
             T.StructField("frame_payload", T.BinaryType(), True),
         ]
     )
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"doc_id": [], "frame_idx": [], "ts_ms": [], "frame_payload": []}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                payload = bytes(payload)
-                # route on the RIFF FORM TYPE, not just the RIFF magic —
-                # a RIFF/WAVE payload belongs to the raw windower, not
-                # the AVI frame walk (which would raise on it)
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    frames = decode_mjpeg_avi(payload)
-                else:
-                    n_frames = 1 + (len(payload) % 5)
-                    frames = [payload[i : i + 16] for i in range(n_frames)]
-                for i, fp in enumerate(frames):
-                    rows["doc_id"].append(int(did))
-                    rows["frame_idx"].append(i)
-                    rows["ts_ms"].append(i * every_ms)
-                    rows["frame_payload"].append(fp)
-            yield pd.DataFrame(rows)
+    def rows(did, payload):
+        # route on the RIFF FORM TYPE, not just the RIFF magic — a
+        # RIFF/WAVE payload belongs to the raw windower, not the AVI
+        # frame walk (which would raise on it)
+        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            frames = decode_mjpeg_avi(payload)
+        else:
+            frames = [payload[i : i + 16] for i in range(1 + (len(payload) % 5))]
+        for i, fp in enumerate(frames):
+            yield did, i, i * every_ms, fp
 
-    return cols.mapInPandas(batches, out_schema)
+    return _map_docs(df, id_col, payload_col, out_schema, rows)
 
 
 def downsample_images_2x(
@@ -3679,36 +3267,23 @@ def downsample_images_2x(
     (doc_id, payload, width, height) carries the REAL new dims read
     back from the re-encoded file.  The thumbnail/mipmap primitive of
     a media pipeline; chain k times for 2^k pyramids."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("payload", T.BinaryType(), False),
+            T.StructField("width", T.IntegerType(), False),
+            T.StructField("height", T.IntegerType(), False),
+        ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "payload": [], "width": [], "height": []}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_bmp(bytes(payload))
-                if d.get("n_channels", 3) != 3:
-                    raise ValueError("thumbnail path expects 24-bpp BMP")
-                px = d["pixels"].reshape(d["height"], d["width"], 3)
-                small = box_downsample_2x(px)
-                out["doc_id"].append(int(did))
-                out["payload"].append(encode_bmp(small))
-                out["height"].append(int(small.shape[0]))
-                out["width"].append(int(small.shape[1]))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_bmp(payload)
+        if d.get("n_channels", 3) != 3:
+            raise ValueError("thumbnail path expects 24-bpp BMP")
+        small = box_downsample_2x(d["pixels"].reshape(d["height"], d["width"], 3))
+        yield did, encode_bmp(small), small.shape[1], small.shape[0]
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-                T.StructField("width", T.IntegerType(), False),
-                T.StructField("height", T.IntegerType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, payload_col, schema, rows)
 
 
 def encode_text_pcm(
@@ -3721,37 +3296,21 @@ def encode_text_pcm(
     meaningful.  The payload is the raw sample buffer (the audio twin
     of `encode_text_bmp`): the fixture-side half of a real decode path
     whose features a SQL oracle can compute straight from the text."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf["__text"]:
-                tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if tb.size and int(tb.max()) >= 128:
-                    # (byte-80)*256 overflows int16 from byte 208 up, and
-                    # multibyte UTF-8 diverges from the oracle's per-code-
-                    # point recompute — raise, mirroring the odd-length
-                    # check in pcm_energy_stats, instead of silent wrap
-                    raise ValueError(
-                        "encode_text_pcm requires ASCII text "
-                        f"(found byte {int(tb.max())})"
-                    )
-                samples = (tb.astype(np.int32) - 80) * 256
-                payloads.append(samples.astype("<i2").tobytes())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
+    def rows(did, text):
+        tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        if tb.size and int(tb.max()) >= 128:
+            # (byte-80)*256 overflows int16 from byte 208 up, and
+            # multibyte UTF-8 diverges from the oracle's per-code-
+            # point recompute — raise, mirroring the odd-length
+            # check in pcm_energy_stats, instead of silent wrap
+            raise ValueError(
+                "encode_text_pcm requires ASCII text "
+                f"(found byte {int(tb.max())})"
             )
+        yield did, _text_pcm(tb).astype("<i2").tobytes()
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def encode_wav(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
@@ -3777,7 +3336,7 @@ def encode_wav(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
         + _riff_chunk(b"fmt ", fmt)
         + _riff_chunk(b"data", data)
     )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_chunk(b"RIFF", body)  # every body chunk is word-aligned
 
 
 def decode_wav(payload: bytes) -> dict:
@@ -3789,22 +3348,12 @@ def decode_wav(payload: bytes) -> dict:
     ANY multi-channel layout (stereo, quad, 5.1, …).  Raises
     ValueError on structural corruption, NotImplementedError on
     other sample formats."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF WAVE")
-    total = struct.unpack("<I", payload[4:8])[0]
-    if total + 8 > len(payload):
-        raise ValueError("RIFF size exceeds payload")
-    pos, end = 12, 8 + total
+    end = _riff_form(payload, b"WAVE", "RIFF WAVE")
     rate = None
     data = None
     channels = None
     fmt_tag = None
-    while pos + 8 <= end:
-        fourcc = payload[pos : pos + 4]
-        size = struct.unpack("<I", payload[pos + 4 : pos + 8])[0]
-        start = pos + 8
-        if start + size > end:
-            raise ValueError(f"chunk {fourcc!r} overruns container")
+    for fourcc, start, size in _riff_chunks(payload, 12, end):
         if fourcc == b"fmt ":
             if size < 16:
                 raise ValueError("short fmt chunk")
@@ -3825,7 +3374,6 @@ def decode_wav(payload: bytes) -> dict:
             if size % 2:
                 raise ValueError("odd data chunk for 16-bit samples")
             data = payload[start : start + size]
-        pos = start + size + (size % 2)
     if rate is None or data is None or channels is None:
         raise ValueError("missing fmt /data chunk")
     if fmt_tag == 3:
@@ -3859,28 +3407,11 @@ def encode_text_wav(
     """Render each document as a REAL WAV file (the :func:`encode_text_pcm`
     waveform — sample i = (byte i - 80)·256 — inside a genuine RIFF/WAVE
     container)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                samples = (tb.astype(np.int32) - 80) * 256
-                payloads.append(encode_wav(samples))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        yield did, encode_wav(_text_pcm(_ascii_text_bytes(text, did)))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def encode_text_stereo_wav(
@@ -3891,30 +3422,15 @@ def encode_text_stereo_wav(
     channel sample i = (byte (2i mod L) − 80)·256 — different
     derivations per channel, so any interleave/de-interleave mixup
     breaks exactly one channel's oracle."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                n = len(tb)
-                left = (tb.astype(np.int32) - 80) * 256
-                right = (tb[(2 * np.arange(n)) % n].astype(np.int32) - 80) * 256
-                payloads.append(encode_wav(np.stack([left, right], axis=1)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        n = len(tb)
+        left = _text_pcm(tb)
+        right = _text_pcm(tb[(2 * np.arange(n)) % n])
+        yield did, encode_wav(np.stack([left, right], axis=1))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 STEREO_WAV_STATS_SCHEMA = T.StructType(
@@ -3937,34 +3453,19 @@ def stereo_wav_stats(
     (:func:`decode_wav` de-interleaves): integer energy and peak per
     channel — exact oracle, a channel-order bug flips the columns.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "sample_rate", "n_frames",
-                    "energy_l", "energy_r", "peak_l", "peak_r",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                if d["n_channels"] != 2:
-                    raise ValueError("stereo_wav_stats needs a 2-channel WAV")
-                ch = d["samples"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["n_frames"].append(int(ch.shape[0]))
-                out["energy_l"].append(int((ch[:, 0] ** 2).sum()))
-                out["energy_r"].append(int((ch[:, 1] ** 2).sum()))
-                out["peak_l"].append(int(np.abs(ch[:, 0]).max(initial=0)))
-                out["peak_r"].append(int(np.abs(ch[:, 1]).max(initial=0)))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_wav(payload)
+        if d["n_channels"] != 2:
+            raise ValueError("stereo_wav_stats needs a 2-channel WAV")
+        ch = d["samples"].astype(np.int64)
+        yield (
+            did, d["sample_rate"], ch.shape[0],
+            int((ch[:, 0] ** 2).sum()), int((ch[:, 1] ** 2).sum()),
+            int(np.abs(ch[:, 0]).max(initial=0)), int(np.abs(ch[:, 1]).max(initial=0)),
+        )
 
-    return cols.mapInPandas(batches, STEREO_WAV_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, STEREO_WAV_STATS_SCHEMA, rows)
 
 
 def encode_text_quad_wav(
@@ -3974,33 +3475,15 @@ def encode_text_quad_wav(
     sample i = (byte ((c+1)·i + c) mod L − 80)·256 — four DISTINCT
     stride derivations, so any interleave/de-interleave/channel-order
     bug breaks specific channels' oracles rather than averaging out."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                n = len(tb)
-                i = np.arange(n)
-                chans = [
-                    (tb[((c + 1) * i + c) % n].astype(np.int32) - 80) * 256
-                    for c in range(4)
-                ]
-                payloads.append(encode_wav(np.stack(chans, axis=1)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        n = len(tb)
+        i = np.arange(n)
+        chans = [_text_pcm(tb[((c + 1) * i + c) % n]) for c in range(4)]
+        yield did, encode_wav(np.stack(chans, axis=1))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 MULTI_WAV_STATS_SCHEMA = T.StructType(
@@ -4022,37 +3505,17 @@ def multichannel_wav_stats(
     frames (:func:`decode_wav` de-interleaves ANY channel count):
     integer energy and peak arrays in channel order — exact oracle.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "sample_rate", "n_channels",
-                    "n_frames", "energies", "peaks",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                ch = d["samples"].astype(np.int64)
-                if d["n_channels"] == 1:
-                    ch = ch.reshape(-1, 1)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["n_channels"].append(int(d["n_channels"]))
-                out["n_frames"].append(int(ch.shape[0]))
-                out["energies"].append(
-                    [int(v) for v in (ch ** 2).sum(axis=0)]
-                )
-                out["peaks"].append(
-                    [int(v) for v in np.abs(ch).max(axis=0, initial=0)]
-                )
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_wav(payload)
+        ch = d["samples"].astype(np.int64).reshape(-1, d["n_channels"])
+        yield (
+            did, d["sample_rate"], d["n_channels"], ch.shape[0],
+            [int(v) for v in (ch ** 2).sum(axis=0)],
+            [int(v) for v in np.abs(ch).max(axis=0, initial=0)],
+        )
 
-    return cols.mapInPandas(batches, MULTI_WAV_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, MULTI_WAV_STATS_SCHEMA, rows)
 
 
 WAV_STATS_SCHEMA = T.StructType(
@@ -4075,35 +3538,16 @@ def wav_stats(
     sample rate and integer-floor duration from the container, energy
     and peak from the samples — all-integer outputs, exact oracle.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id",
-                    "sample_rate",
-                    "duration_ms",
-                    "n_samples",
-                    "total_energy",
-                    "peak",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                s = d["samples"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["duration_ms"].append(int(s.size * 1000 // d["sample_rate"]))
-                out["n_samples"].append(int(s.size))
-                out["total_energy"].append(int((s * s).sum()))
-                out["peak"].append(int(np.abs(s).max()) if s.size else 0)
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_wav(payload)
+        s = d["samples"].astype(np.int64)
+        yield (
+            did, d["sample_rate"], s.size * 1000 // d["sample_rate"], s.size,
+            int((s * s).sum()), int(np.abs(s).max()) if s.size else 0,
+        )
 
-    return cols.mapInPandas(batches, WAV_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, WAV_STATS_SCHEMA, rows)
 
 
 def pcm_energy_stats(
@@ -4119,49 +3563,28 @@ def pcm_energy_stats(
     float discipline needed.  Scale shape: Arrow-batched mapInPandas
     projection, no shuffle; a malformed (odd-length) payload raises
     rather than silently truncating."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in ("doc_id", "n_samples", "total_energy", "n_zero_cross", "peak")
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                b = bytes(payload)
-                if len(b) % 2:
-                    raise ValueError(f"odd PCM payload length {len(b)} for doc {did}")
-                s = np.frombuffer(b, dtype="<i2").astype(np.int64)
-                neg = s < 0
-                out["doc_id"].append(int(did))
-                out["n_samples"].append(int(s.size))
-                out["total_energy"].append(int(np.sum(s * s)))
-                out["n_zero_cross"].append(
-                    int(np.count_nonzero(neg[:-1] != neg[1:])) if s.size > 1 else 0
-                )
-                out["peak"].append(int(np.max(np.abs(s))) if s.size else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="int64"),
-                    "total_energy": pd.Series(out["total_energy"], dtype="int64"),
-                    "n_zero_cross": pd.Series(out["n_zero_cross"], dtype="int64"),
-                    "peak": pd.Series(out["peak"], dtype="int64"),
-                }
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("n_samples", T.LongType(), False),
-                T.StructField("total_energy", T.LongType(), False),
-                T.StructField("n_zero_cross", T.LongType(), False),
-                T.StructField("peak", T.LongType(), False),
-            ]
-        ),
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("n_samples", T.LongType(), False),
+            T.StructField("total_energy", T.LongType(), False),
+            T.StructField("n_zero_cross", T.LongType(), False),
+            T.StructField("peak", T.LongType(), False),
+        ]
     )
+
+    def rows(did, payload):
+        if len(payload) % 2:
+            raise ValueError(f"odd PCM payload length {len(payload)} for doc {did}")
+        s = np.frombuffer(payload, dtype="<i2").astype(np.int64)
+        neg = s < 0
+        yield (
+            did, s.size, int(np.sum(s * s)),
+            int(np.count_nonzero(neg[:-1] != neg[1:])) if s.size > 1 else 0,
+            int(np.max(np.abs(s))) if s.size else 0,
+        )
+
+    return _map_docs(df, id_col, payload_col, schema, rows)
 
 
 def encode_animated_gif(
@@ -4184,14 +3607,12 @@ def encode_animated_gif(
     n = palette.shape[0]
     if palette.ndim != 2 or palette.shape[1] != 3 or not 1 <= n <= 256:
         raise ValueError("palette must be (n, 3) with 1 <= n <= 256")
-    bits = max(1, (max(n, 2) - 1).bit_length())
-    padded = np.zeros((1 << bits, 3), dtype=np.uint8)
-    padded[:n] = palette.astype(np.uint8)
+    bits, table = _gif_color_table(palette)
     min_code = max(2, bits)
     out = bytearray(
         b"GIF89a"
         + struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-        + padded.tobytes()
+        + table
         # NETSCAPE2.0 looping application extension
         + b"\x21\xff\x0bNETSCAPE2.0\x03\x01"
         + struct.pack("<H", loops)
@@ -4205,11 +3626,7 @@ def encode_animated_gif(
         lzw = _lzw_encode_gif(fr.reshape(-1), min_code)
         out += b"\x21\xf9\x04\x00" + struct.pack("<H", int(delay)) + b"\x00\x00"
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0) + bytes([min_code])
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
+        out += _gif_sub_blocks(lzw)
     out.append(0x3B)
     return bytes(out)
 
@@ -4224,21 +3641,7 @@ def decode_animated_gif(payload: bytes) -> dict:
     pipelines composite partial frames over a canvas; out of scope).
     Returns {width, height, palette_size, n_frames, delays_cs,
     frames (list of h·w·3 uint8 RGB)}."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("truncated logical screen descriptor")
-    sw, sh, flags, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    pos = 13
-    palette = None
-    if flags & 0x80:
-        size = 2 << (flags & 0x07)
-        if pos + size * 3 > len(payload):
-            raise ValueError("truncated global color table")
-        palette = np.frombuffer(
-            payload[pos : pos + size * 3], dtype=np.uint8
-        ).reshape(-1, 3)
-        pos += size * 3
+    sw, sh, palette, pos = _gif_screen(payload)
     frames: list[np.ndarray] = []
     delays: list[int] = []
     pending_delay = 0
@@ -4268,48 +3671,12 @@ def decode_animated_gif(payload: bytes) -> dict:
                     raise ValueError("unterminated graphic control extension")
                 pos += 1
             else:  # other extensions: skip sub-blocks
-                while pos < len(payload) and payload[pos] != 0:
-                    pos += 1 + payload[pos]
-                pos += 1
+                pos = _gif_skip_sub_blocks(payload, pos)
             continue
         if marker != 0x2C:
             raise ValueError(f"unknown GIF block marker 0x{marker:02x}")
-        if pos + 9 > len(payload):
-            raise ValueError("truncated image descriptor")
-        x, y, w, h, iflags = struct.unpack("<HHHHB", payload[pos : pos + 9])
-        pos += 9
-        if iflags & 0x40:
-            raise NotImplementedError("interlaced GIF")
-        pal = palette
-        if iflags & 0x80:
-            # per-frame local color table overrides the global one
-            lsize = 2 << (iflags & 0x07)
-            if pos + lsize * 3 > len(payload):
-                raise ValueError("truncated local color table")
-            pal = np.frombuffer(
-                payload[pos : pos + lsize * 3], dtype=np.uint8
-            ).reshape(-1, 3)
-            pos += lsize * 3
-        if (x, y, w, h) != (0, 0, sw, sh):
-            raise NotImplementedError("partial-frame animated GIF")
-        if pal is None:
-            raise ValueError("image data with no color table")
-        min_code = payload[pos]
-        pos += 1
-        if not 2 <= min_code <= 11:
-            raise ValueError(f"bad LZW min code size {min_code}")
-        data = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            ln = payload[pos]
-            if pos + 1 + ln > len(payload):
-                raise ValueError("truncated LZW sub-block")
-            data += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1  # image-data block terminator
-        idx = _lzw_decode_gif(bytes(data), min_code, w * h)
-        if idx.max(initial=0) >= pal.shape[0]:
-            raise ValueError("GIF index beyond color table")
-        frames.append(pal[idx].reshape(-1))
+        *_image, rgb, pos = _gif_image(payload, pos, palette, screen=(sw, sh))
+        frames.append(rgb)
         delays.append(pending_delay)
         pending_delay = 0
     raise ValueError("GIF ended without trailer")
@@ -4341,44 +3708,21 @@ def encode_text_animated_gif(
     content distinct but predictable), frame delay 4 + (id + f) mod 7
     centiseconds — so the oracle predicts every pixel of every frame
     AND every container delay."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (did % 6)
-                p = 2 + (did % 15)
-                nf = 1 + (did % 4)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                frames = [
-                    (tb[(np.arange(w * h) + f) % len(tb)] % p)
-                    .astype(np.uint8)
-                    .reshape(h, w)
-                    for f in range(nf)
-                ]
-                delays = [4 + ((did + f) % 7) for f in range(nf)]
-                payloads.append(encode_animated_gif(frames, pal, delays))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w, h, p, _px = _text_indices(tb, did)
+        nf = 1 + (did % 4)
+        frames = [
+            (tb[(np.arange(w * h) + f) % len(tb)] % p)
+            .astype(np.uint8)
+            .reshape(h, w)
+            for f in range(nf)
+        ]
+        delays = [4 + ((did + f) % 7) for f in range(nf)]
+        yield did, encode_animated_gif(frames, _text_palette(p), delays)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def animated_gif_frame_stats(
@@ -4389,32 +3733,16 @@ def animated_gif_frame_stats(
     row per frame, exact BIGINTs; a frame-boundary, delay-pairing, or
     LZW bug breaks specific rows.  Arrow-batched mapInPandas, no
     shuffle; output is O(frames), row-local."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in ANIMATED_GIF_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_animated_gif(bytes(payload))
-                for f, (fr, delay) in enumerate(
-                    zip(d["frames"], d["delays_cs"])
-                ):
-                    px = fr.reshape(-1, 3).astype(np.int64)
-                    out["doc_id"].append(int(did))
-                    out["frame_idx"].append(f)
-                    out["n_frames"].append(int(d["n_frames"]))
-                    out["width"].append(int(d["width"]))
-                    out["height"].append(int(d["height"]))
-                    out["palette_size"].append(int(d["palette_size"]))
-                    out["delay_cs"].append(int(delay))
-                    out["sum_r"].append(int(px[:, 0].sum()))
-                    out["sum_g"].append(int(px[:, 1].sum()))
-                    out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_animated_gif(payload)
+        for f, (fr, delay) in enumerate(zip(d["frames"], d["delays_cs"])):
+            yield (
+                did, f, d["n_frames"], d["width"], d["height"], d["palette_size"],
+                int(delay), *_channel_sums(fr, 3),
+            )
 
-    return cols.mapInPandas(batches, ANIMATED_GIF_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, ANIMATED_GIF_STATS_SCHEMA, rows)
 
 
 def encode_float_wav(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
@@ -4434,7 +3762,7 @@ def encode_float_wav(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
         "<HHIIHH", 3, nch, sample_rate, sample_rate * 4 * nch, 4 * nch, 32
     )
     body = b"WAVE" + _riff_chunk(b"fmt ", fmt) + _riff_chunk(b"data", data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_chunk(b"RIFF", body)  # every body chunk is word-aligned
 
 
 FLOAT_WAV_STATS_SCHEMA = T.StructType(
@@ -4457,30 +3785,12 @@ def encode_text_float_wav(
     by a power of two, so every float32 sample is EXACT (numerators
     < 2¹⁷ are well inside the 24-bit mantissa) and the decode side can
     reconstruct the integer PCM value losslessly."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                pcm = (tb.astype(np.int32) - 80) * 256
-                payloads.append(
-                    encode_float_wav((pcm / 32768.0).astype(np.float32))
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        pcm = _text_pcm(_ascii_text_bytes(text, did))
+        yield did, encode_float_wav((pcm / 32768.0).astype(np.float32))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def float_wav_stats(
@@ -4493,29 +3803,18 @@ def float_wav_stats(
     order, wrong scale, truncated mantissa) breaks integer columns the
     oracle predicts from the text.  Arrow-batched mapInPandas, no
     shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in FLOAT_WAV_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                if d["format_tag"] != 3 or d["n_channels"] != 1:
-                    raise ValueError("expected mono float WAV")
-                s = np.rint(
-                    d["samples"].astype(np.float64) * 32768.0
-                ).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["format_tag"].append(int(d["format_tag"]))
-                out["n_samples"].append(int(s.size))
-                out["total_energy"].append(int((s * s).sum()))
-                out["peak"].append(int(np.abs(s).max(initial=0)))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_wav(payload)
+        if d["format_tag"] != 3 or d["n_channels"] != 1:
+            raise ValueError("expected mono float WAV")
+        s = np.rint(d["samples"].astype(np.float64) * 32768.0).astype(np.int64)
+        yield (
+            did, d["sample_rate"], d["format_tag"], s.size,
+            int((s * s).sum()), int(np.abs(s).max(initial=0)),
+        )
 
-    return cols.mapInPandas(batches, FLOAT_WAV_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, FLOAT_WAV_STATS_SCHEMA, rows)
 
 
 def encode_gray16_png(pixels: np.ndarray) -> bytes:
@@ -4524,21 +3823,13 @@ def encode_gray16_png(pixels: np.ndarray) -> bytes:
     Sub-filtered at bpp=2 (the spec filters BYTES with the left
     reference bpp back, so the byte machinery generalizes untouched),
     one zlib IDAT, CRC-stamped chunks.  ``pixels`` (h, w) uint16."""
-    import zlib as _zlib
-
     if pixels.ndim != 2:
         raise ValueError("pixels must be (h, w) uint16")
     h, w = pixels.shape
     rows = (
         pixels.astype(">u2").view(np.uint8).reshape(h, w * 2)
     )
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", _zlib.compress(bytes(_filter_sub_rows(rows, 2)), 6))
-        + _png_chunk(b"IEND", b"")
-    )
+    return _png_file(w, h, 16, 0, 0, _filter_sub_rows(rows, 2))
 
 
 def decode_png_gray16(payload: bytes) -> dict:
@@ -4546,45 +3837,14 @@ def decode_png_gray16(payload: bytes) -> dict:
     8-bit path (CRC walk, multi-IDAT, inflate, all-five-filter byte
     reconstruction at bpp=2), then big-endian uint16 assembly.
     Returns {width, height, pixels (h·w uint16 as int64)}."""
-    import zlib as _zlib
 
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos, w = 8, None
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        length = struct.unpack(">I", payload[pos : pos + 4])[0]
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        crc_bytes = payload[pos + 8 + length : pos + 12 + length]
-        if len(data) != length or len(crc_bytes) != 4:
-            raise ValueError(f"truncated {ctype!r} chunk at {pos}")
-        if _zlib.crc32(ctype + data) & 0xFFFFFFFF != struct.unpack(
-            ">I", crc_bytes
-        )[0]:
-            raise ValueError(f"CRC mismatch in {ctype!r} chunk")
-        if ctype == b"IHDR":
-            try:
-                w, h, depth, color, _comp, _filt, interlace = struct.unpack(
-                    ">IIBBBBB", data
-                )
-            except struct.error:
-                raise ValueError("malformed IHDR chunk")
-            if depth != 16 or color != 0:
-                raise NotImplementedError("only 16-bit grayscale here")
-            if interlace != 0:
-                raise NotImplementedError("interlaced 16-bit PNG")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if w is None or not idat:
-        raise ValueError("missing IHDR/IDAT")
-    try:
-        raw = _zlib.decompress(bytes(idat))
-    except _zlib.error as ex:
-        raise ValueError(f"corrupt IDAT stream: {ex}")
+    def check(depth, color, interlace):
+        if depth != 16 or color != 0:
+            raise NotImplementedError("only 16-bit grayscale here")
+        if interlace != 0:
+            raise NotImplementedError("interlaced 16-bit PNG")
+
+    w, h, _depth, _interlace, raw, _plte, _trns = _png_decode(payload, check)
     by = _png_reconstruct(raw, w, h, 2)  # byte-level, bpp=2
     px = by.reshape(h, w * 2).view(">u2").astype(np.int64)
     return {"width": int(w), "height": int(h), "pixels": px.reshape(-1)}
@@ -4610,32 +3870,12 @@ def encode_text_gray16_png(
     byte (i mod L) · 257 — the canonical 8→16-bit expansion (x·257
     = x·0x0101, full-range), so every 16-bit sample is predictable
     from the text and exceeds 8 bits whenever the byte does."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (int(did) % 6)
-                px = (
-                    tb[np.arange(w * h) % len(tb)].astype(np.uint16) * 257
-                ).reshape(h, w)
-                payloads.append(encode_gray16_png(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        w, h, _p, px = _text_indices(_ascii_text_bytes(text, did), did)
+        yield did, encode_gray16_png((px.astype(np.uint16) * 257).reshape(h, w))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def gray16_png_stats(
@@ -4647,25 +3887,16 @@ def gray16_png_stats(
     actually reached the output; a high/low byte swap or an 8-bit
     truncation zeroes it or breaks the sum).  Arrow-batched
     mapInPandas, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in GRAY16_PNG_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_gray16(bytes(payload))
-                px = d["pixels"]
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_px"].append(int(px.sum()))
-                out["max_px"].append(int(px.max(initial=0)))
-                out["n_high"].append(int((px > 255).sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_png_gray16(payload)
+        px = d["pixels"]
+        yield (
+            did, d["width"], d["height"],
+            int(px.sum()), int(px.max(initial=0)), int((px > 255).sum()),
+        )
 
-    return cols.mapInPandas(batches, GRAY16_PNG_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, GRAY16_PNG_STATS_SCHEMA, rows)
 
 
 def decode_pgm(payload: bytes) -> dict:
@@ -4673,29 +3904,7 @@ def decode_pgm(payload: bytes) -> dict:
     family next to P6 PPM: same ASCII header grammar (magic, width,
     height, maxval, '#' comments), then raw single-channel bytes.
     Returns {width, height, pixels (h·w uint8)}."""
-    if payload[:2] != b"P5":
-        raise ValueError("not a P5 PGM")
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(int(payload[start:pos]))
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = fields
-    if maxval > 255:
-        raise NotImplementedError("16-bit PGM not supported")
-    need = w * h
-    px = np.frombuffer(payload, np.uint8, count=need, offset=pos)
-    if px.size < need:
-        raise ValueError("PGM truncated")
-    return {"width": w, "height": h, "pixels": px.copy()}
+    return _decode_netpbm(payload, b"P5", "PGM", 1)
 
 
 PGM_STATS_SCHEMA = T.StructType(
@@ -4719,31 +3928,21 @@ def encode_text_pgm(
     stride-3 cyclic sample, distinct from both the BMP (stride 1) and
     PPM (stride 2) fixtures so the three netpbm-family decoders can't
     share a bug."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 7)
-                h = 1 + (int(did) % 8)
-                idx = (np.arange(w * h) * 3) % len(tb)
-                header = f"P5\n# doc {int(did)}\n{w} {h}\n255\n".encode()
-                payloads.append(header + tb[idx].tobytes())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 7)
+        h = 1 + (did % 8)
+        idx = (np.arange(w * h) * 3) % len(tb)
+        header = f"P5\n# doc {did}\n{w} {h}\n255\n".encode()
+        yield did, header + tb[idx].tobytes()
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
+
+
+def _sum_min_max(px: np.ndarray) -> tuple[int, int, int]:
+    px = px.astype(np.int64)
+    return int(px.sum()), int(px.min()), int(px.max())
 
 
 def pgm_stats(
@@ -4751,25 +3950,12 @@ def pgm_stats(
 ) -> DataFrame:
     """Exact integer stats (sum/min/max) from REAL P5 decoding —
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in PGM_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_pgm(bytes(payload))
-                px = d["pixels"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_pgm(payload)
+        yield did, d["width"], d["height"], *_sum_min_max(d["pixels"])
 
-    return cols.mapInPandas(batches, PGM_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, PGM_STATS_SCHEMA, rows)
 
 
 def encode_bmp32(pixels_topdown_bgra: np.ndarray) -> bytes:
@@ -4811,31 +3997,15 @@ def encode_text_bmp32(
     (4·i + c) mod L — a stride that makes all FOUR channels distinct
     functions of the text, so a channel mixup or an alpha drop breaks
     a specific predicted sum."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 5)
-                h = 1 + (int(did) % 7)
-                idx = np.arange(w * h * 4) % len(tb)
-                px = tb[idx].reshape(h, w, 4)
-                payloads.append(encode_bmp32(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 5)
+        h = 1 + (did % 7)
+        idx = np.arange(w * h * 4) % len(tb)
+        yield did, encode_bmp32(tb[idx].reshape(h, w, 4))
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def bmp32_stats(
@@ -4845,29 +4015,15 @@ def bmp32_stats(
     32-bpp BMP decoding (alpha is the 4th channel; n_opaque counts
     a == 255 — the mask-extraction primitive).  Arrow-batched
     mapInPandas, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in BMP32_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_bmp(bytes(payload))
-                if d.get("n_channels") != 4:
-                    raise ValueError("bmp32_stats expects 32-bpp BMP")
-                px = d["pixels"].reshape(-1, 4).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_b"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_r"].append(int(px[:, 2].sum()))
-                out["sum_a"].append(int(px[:, 3].sum()))
-                out["n_opaque"].append(int((px[:, 3] == 255).sum()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_bmp(payload)
+        if d.get("n_channels") != 4:
+            raise ValueError("bmp32_stats expects 32-bpp BMP")
+        n_opaque = int((d["pixels"][3::4] == 255).sum())
+        yield did, d["width"], d["height"], *_channel_sums(d["pixels"], 4), n_opaque
 
-    return cols.mapInPandas(batches, BMP32_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, BMP32_STATS_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -5295,40 +4451,17 @@ def encode_text_tiff(
     most fixtures are MULTI-strip and the offset arrays are real),
     byte order alternating by id parity (even → II, odd → MM — both
     wire orders decode through one walk)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 9)
-                h = 1 + (did % 7)
-                idx = (np.arange(w * h) * 5) % len(tb)
-                px = tb[idx].reshape(h, w)
-                payloads.append(
-                    encode_gray_tiff(
-                        px,
-                        rows_per_strip=3,
-                        big_endian=bool(did % 2),
-                        packbits=packbits,
-                        lzw=lzw,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 9)
+        h = 1 + (did % 7)
+        px = tb[(np.arange(w * h) * 5) % len(tb)].reshape(h, w)
+        yield did, encode_gray_tiff(
+            px, rows_per_strip=3, big_endian=bool(did % 2), packbits=packbits, lzw=lzw
+        )
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _map_docs(df, id_col, text_col, _PAYLOAD_SCHEMA, rows)
 
 
 def tiff_gray_stats(
@@ -5337,23 +4470,9 @@ def tiff_gray_stats(
     """Exact integer stats (sum/min/max + the strip count the IFD
     truthfully reports) from REAL TIFF decoding — Arrow-batched
     mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in TIFF_GRAY_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_gray_tiff(bytes(payload))
-                px = d["pixels"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["n_strips"].append(int(d["n_strips"]))
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-            yield pd.DataFrame(out)
+    def rows(did, payload):
+        d = decode_gray_tiff(payload)
+        yield did, d["width"], d["height"], d["n_strips"], *_sum_min_max(d["pixels"])
 
-    return cols.mapInPandas(batches, TIFF_GRAY_STATS_SCHEMA)
+    return _map_docs(df, id_col, payload_col, TIFF_GRAY_STATS_SCHEMA, rows)

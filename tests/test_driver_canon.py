@@ -166,3 +166,49 @@ def test_priority_names_registered_entries_once():
     assert len(prio) == len(set(prio)), sorted({p for p in prio if prio.count(p) > 1})
     registered = {name.split("_", 1)[0] for name in entrymod._REGISTRY}
     assert set(prio) <= registered, sorted(set(prio) - registered)
+
+
+def test_fixture_graph_from_previous_writer_is_rebuilt(spark, sf_dir, tmp_path, monkeypatch):
+    """A sentinel-complete fixture graph that a previous GraphAr writer
+    left in the temp dir is not read: the orders graph is rebuilt, and a
+    later process with the same writer reuses that build."""
+    import re
+    import tempfile
+
+    from duckdb_graphar_spark.graphar.metadata import GraphInfo
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(entrymod, "_GRAPHAR_CACHE", {})
+    tag = re.sub(r"\W", "_", sf_dir)
+    # where a writer without a source digest, or one with other sources,
+    # left its graph
+    stale = [tmp_path / f"graphar_orders_{tag}", tmp_path / f"graphar_OrdersGraph_0_{tag}"]
+    for d in stale:
+        d.mkdir()
+        (d / "OrdersGraph.yaml").write_text("name: StaleGraph\n")
+        (d / ".complete").write_text("ok")
+
+    gy = entrymod._orders_graphar(spark, sf_dir)
+    assert not any(gy.startswith(str(d)) for d in stale)
+    assert GraphInfo.load(gy).name == "OrdersGraph"
+
+    monkeypatch.setattr(entrymod, "_GRAPHAR_CACHE", {})
+    built = os.path.getmtime(gy)
+    assert entrymod._orders_graphar(spark, sf_dir) == gy
+    assert os.path.getmtime(gy) == built
+
+
+def test_fixture_graph_version_follows_graphar_sources(tmp_path):
+    """The fixture graph's directory digest changes with any byte of the
+    graphar/ sources and with nothing else (a copy digests the same)."""
+    import shutil
+
+    import duckdb_graphar_spark.graphar as graphar_pkg
+
+    src = os.path.dirname(graphar_pkg.__file__)
+    copy = tmp_path / "graphar"
+    shutil.copytree(src, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    assert entrymod._source_digest(str(copy)) == entrymod._source_digest(src)
+    with open(copy / "writer.py", "a") as fh:
+        fh.write("\n")
+    assert entrymod._source_digest(str(copy)) != entrymod._source_digest(src)

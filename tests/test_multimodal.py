@@ -509,6 +509,24 @@ def test_text_encoders_reject_non_ascii(spark):
             enc(df).collect()
 
 
+def _one_empty_text(spark):
+    return spark.createDataFrame([(1, "ab"), (7, "")], "doc_id long, text string")
+
+
+def test_encode_text_bmp_rejects_empty_text(spark):
+    """An empty text has no byte to tile: the BMP fixture raises like
+    every other text encoder instead of rendering an all-zero image."""
+    with pytest.raises(Exception, match="empty text for doc 7"):
+        M.encode_text_bmp(_one_empty_text(spark)).collect()
+
+
+def test_encode_text_ppm_rejects_empty_text(spark):
+    """The PPM fixture raises the shared empty-text ValueError (not an
+    IndexError from sampling an empty byte array)."""
+    with pytest.raises(Exception, match="empty text for doc 7"):
+        M.encode_text_ppm(_one_empty_text(spark)).collect()
+
+
 # ---------------------------------------------------------------------------
 # codec property tests (hypothesis, pure numpy — no Spark)
 # ---------------------------------------------------------------------------
